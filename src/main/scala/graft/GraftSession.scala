@@ -40,8 +40,11 @@ object GraftSession {
       // GC'd RDDs are deleted instead of accumulating per clustering call
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
-    // Reliable-checkpoint root for frames too big for the driver but whose
-    // loop lineage must be severed (graft.ext.Dedup.connectedComponents).
+    // Reliable-checkpoint root for distributed frames whose lineage must
+    // be severed off a call-scoped aggregation (the heavy-dup pair lists
+    // and signatures in graft.ext.Dedup, the term counts in
+    // graft.ext.TextStats; connectedComponents pins its rounds to parquet
+    // in the graft.ops.Materialize spill store instead).
     // Local mode: a tmp dir. Cluster deployment: point this at shared
     // storage (HDFS/S3) so checkpointed blocks survive executor loss —
     // unlike localCheckpoint, which pins them to unreplicated executors.
@@ -50,13 +53,7 @@ object GraftSession {
       spark.sparkContext.setCheckpointDir(dir.toString)
       // the ContextCleaner (enabled above) removes per-RDD checkpoints as
       // they are GC'd; the temp ROOT itself is swept at exit
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(); ()
-        }
-        rm(dir.toFile)
-      }
+      sys.addShutdownHook(graft.ops.Materialize.deleteRecursively(dir.toFile))
     }
     spark
   }

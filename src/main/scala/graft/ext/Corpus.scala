@@ -270,7 +270,7 @@ object Corpus {
           round(col("__w"), 6).as("mix_weight"),
           round(col("__w") / col("__p"), 6).as("effective_epochs"))
         .orderBy(col("source").asc)
-      graft.ops.Materialize.smallLocal(out, maxRows = 65536)
+      graft.ops.Materialize.localOrSpill(out)
     } finally perSource.unpersist()
   }
 

@@ -37,8 +37,7 @@ object Curation {
       fractions: Map[String, Double] = Map("en" -> 0.5),
       defaultFraction: Double = 0.2,
       requireTerminal: Boolean = false,
-      maxIter: Int = 10,
-      driverEdgeLimit: Long = 2_000_000L): DataFrame = {
+      maxIter: Int = 10): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val c4 = TextStats.c4Filters(spark, sfDir)
     val c4Survivors = c4.filter(
@@ -47,13 +46,11 @@ object Curation {
         col("n_words").between(5, 100000))
       .select("doc_id")
     val exactKeepers = Dedup.exactSurvivorIds(spark, sfDir)
-    // maxIter/driverEdgeLimit thread through to connectedComponents: a dup
-    // graph with diameter > 10 on the distributed path fails LOUDLY there,
-    // and the caller needs a knob to raise the bound without forking the
-    // pipeline.
+    // maxIter threads through to connectedComponents: a dup graph with
+    // diameter > 10 on the distributed path fails LOUDLY there, and the
+    // caller needs a knob to raise the bound without forking the pipeline.
     val nearDupKeepers = Dedup.minHashMembership(
-      spark, sfDir, twinnable = true, maxIter = maxIter,
-      driverEdgeLimit = driverEdgeLimit)
+      spark, sfDir, twinnable = true, maxIter = maxIter)
       .filter(col("cluster_id") === col("doc_id"))
       .select("doc_id")
     val sampled = Corpus.stratifiedSample(
@@ -193,11 +190,9 @@ object Curation {
   def clusterSplit(
       spark: SparkSession, sfDir: String,
       valPct: Int = 10, testPct: Int = 10, salt: Int = 29,
-      maxIter: Int = 10,
-      driverEdgeLimit: Long = 2_000_000L): DataFrame = {
+      maxIter: Int = 10): DataFrame = {
     val membership = Dedup.minHashMembership(
-      spark, sfDir, twinnable = true, maxIter = maxIter,
-      driverEdgeLimit = driverEdgeLimit)
+      spark, sfDir, twinnable = true, maxIter = maxIter)
     val bucket = conv(
       substring(sha2(concat(col("cluster_id").cast("string"), lit(s"#$salt")),
         256), 1, 8), 16, 10).cast("long") % 1000L

@@ -31,45 +31,6 @@ object Dedup {
 
   private val toksExpr = """filter(split(lower(text), '\\s+'), t -> t <> '')"""
 
-  /** CC spill roots live until JVM exit (the final round's files back
-    * returned frames); ONE shutdown hook sweeps them all — per-round
-    * dirs are deleted eagerly inside the loop.
-    */
-  private val ccSpillRoots =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  // roots of connectedComponents calls still EXECUTING: registered here
-  // at entry, moved to ccSpillRoots only when the call exits — so
-  // releaseClusterFrames can never delete files a concurrent clustering
-  // is still writing/reading mid-loop
-  private val ccInFlight =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(); ()
-  }
-
-  /** Explicit release handle for [[connectedComponents]]' per-call spill
-    * roots (scaladoc there): deletes every accumulated final-mapping dir
-    * NOW instead of at JVM exit. Caller contract: no frame returned by a
-    * prior `connectedComponents`/`clusters` call may be consumed again
-    * after this — their backing files are gone (reads throw, they do not
-    * corrupt). Calls in flight on other threads are safe: their roots
-    * sit in a separate in-flight registry until the call exits, so this
-    * sweep cannot touch them.
-    */
-  def releaseClusterFrames(): Unit = {
-    var r = ccSpillRoots.poll()
-    while (r != null) { deleteRecursively(new java.io.File(r)); r = ccSpillRoots.poll() }
-  }
-  private lazy val ccSpillHookInit: Unit = {
-    sys.addShutdownHook {
-      ccSpillRoots.forEach(r => deleteRecursively(new java.io.File(r)))
-      ccInFlight.forEach(r => deleteRecursively(new java.io.File(r)))
-    }
-    ()
-  }
-
   /** Modulus of the twinnable Carter–Wegman permutation family (2³¹−1,
     * prime): with 28-bit base hashes and 31-bit constants the products
     * stay under 2⁵⁹, so neither engine's ANSI arithmetic can overflow.
@@ -261,10 +222,10 @@ object Dedup {
     // artifact — a bucketed parquet scan each consumer re-reads, so the
     // whole report keeps DISTRIBUTED lineage end-to-end: one row per
     // delta doc scales with the ingest batch, which at 100 TB must never
-    // transit the driver (the old smallLocal pin capped it at 500k). The
-    // non-twinnable (xxhash throughput) form derives signatures inline
-    // and reliable-checkpoints them instead — distributed, lineage
-    // severed from the 64-slot aggregation its three consumers share.
+    // transit the driver. The non-twinnable (xxhash throughput) form
+    // derives signatures inline and reliable-checkpoints them instead —
+    // distributed, lineage severed from the 64-slot aggregation its three
+    // consumers share.
     val perDoc = if (twinnable) minHashSignaturesShared(spark, sfDir)
       else minHashPerDoc(spark, sfDir, twinnable).checkpoint()
     val best = {
@@ -420,9 +381,9 @@ object Dedup {
     * stays DISTRIBUTED — reliable-checkpointed to sever its lineage off
     * the call-scoped signature cache — instead of driver-materialized.
     * Pair counts grow with dup density (a 100-way-duplicated corpus emits
-    * ~n·dups/2 pairs), so past [[graft.ops.Materialize.smallLocal]]'s cap
-    * they must never transit the driver; this is the variant the 100×
-    * stress tier and any heavy-dup 100 TB run feeds into
+    * ~n·dups/2 pairs), so past the [[graft.ops.Materialize]] driver
+    * budget they must never transit the driver; this is the variant the
+    * 100× stress tier and any heavy-dup 100 TB run feeds into
     * [[connectedComponents]].
     */
   def minHashPairsDistributed(
@@ -542,8 +503,8 @@ object Dedup {
     * Non-canonical parameters (stress tiers' maxBucket=128, the
     * distributed heavy-dup path, throughput-mode xxhash signatures)
     * bypass the artifact and derive directly — the driver-side build
-    * would refuse heavy-dup pair volumes anyway
-    * ([[graft.ops.Materialize.smallLocal]]'s cap).
+    * would spill heavy-dup pair volumes anyway (past the
+    * [[graft.ops.Materialize]] driver budget).
     */
   private[graft] def minHashPairsShared(
       spark: SparkSession, sfDir: String): DataFrame =
@@ -642,7 +603,7 @@ object Dedup {
       // trip. Heavy-dup corpora (materialize = false): pair counts scale
       // with dup density, so the list reliable-checkpoints instead and
       // stays distributed.
-      if (materialize) graft.ops.Materialize.smallLocal(verified)
+      if (materialize) graft.ops.Materialize.localOrSpill(verified)
       else verified.checkpoint()
     } finally perDoc.unpersist()
   }
@@ -801,7 +762,7 @@ object Dedup {
       col("doc_id").as("doc_a"), col("simhash").as("sh_a"))
     val b = bounded.select(col("chunk_idx"), col("chunk_val"),
       col("doc_id").as("doc_b"), col("simhash").as("sh_b"))
-    graft.ops.Materialize.smallLocal(
+    graft.ops.Materialize.localOrSpill(
       a.join(b, Seq("chunk_idx", "chunk_val"))
         .filter(col("doc_a") < col("doc_b"))
         .select("doc_a", "doc_b", "sh_a", "sh_b").distinct()
@@ -975,7 +936,7 @@ object Dedup {
       .select("doc_a", "doc_b").distinct()
     val sets = stats.groupBy(col("doc_id"))
       .agg(array_sort(collect_set(col("sh"))).as("shset"))
-    graft.ops.Materialize.smallLocal(cand
+    graft.ops.Materialize.localOrSpill(cand
       .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("set_a")),
         Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("set_b")),
@@ -1036,7 +997,7 @@ object Dedup {
     */
   private def containmentFromStats(
       stats: DataFrame, threshold: Double, maxPrefixDf: Long): DataFrame =
-    graft.ops.Materialize.smallLocal(
+    graft.ops.Materialize.localOrSpill(
       containmentFromStatsLazy(stats, threshold, maxPrefixDf))
 
   /** The distributed plan behind [[containmentFromStats]], pre-
@@ -1265,79 +1226,69 @@ object Dedup {
     * Returns (doc_id, cluster_id); singletons keep cluster_id = doc_id.
     *
     * RETENTION (ADVICE r12): on the distributed path each call spills its
-    * FINAL doc→cluster mapping to a tmp dir that backs the returned frame
-    * — superseded per-round dirs are deleted as the loop advances, but
-    * the final dir must outlive the call and is swept only at JVM exit.
-    * A long-lived driver running many clusterings therefore retains one
-    * dup-graph-sized mapping dir per call; call
-    * [[releaseClusterFrames]] once every previously returned cluster
-    * frame has been fully consumed to reclaim them early.
+    * FINAL doc→cluster mapping to a [[graft.ops.Materialize]] spill root
+    * that backs the returned frame — superseded per-round dirs are
+    * deleted as the loop advances, but the final dir must outlive the
+    * call and is swept only at JVM exit. A long-lived driver running many
+    * clusterings therefore retains one dup-graph-sized mapping dir per
+    * call; call [[graft.ops.Materialize.releaseSpills]] once every
+    * previously returned cluster frame has been fully consumed to reclaim
+    * them early.
     */
   def connectedComponents(
       pairs: DataFrame, allDocs: DataFrame, maxIter: Int = 25,
-      driverEdgeLimit: Long = 2_000_000L,
       dropSingletons: Boolean = false): DataFrame = {
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist()
     // Size-adaptive: the dup graph is ~1e-3 of the corpus, so even huge
-    // corpora usually produce an edge list that fits on the driver — then
-    // union-find in milliseconds beats diameter-many distributed rounds
-    // (each a join+agg job). The loop below remains the scale path for
-    // graphs past the limit; both produce the identical min-label result.
-    //
-    // The probe IS the collect (r13): limit(cap+1) in one typed job
-    // replaces the former count() + collect() + distinct-src collect()
-    // triple — under the cap everything local (roots and distinct
-    // endpoints fall out of the collected tuples), past it only one
-    // wasted pass, same as the old count(). Typed (Long, Long) tuples,
-    // not GenericRows — roughly 3× lighter on the driver at the limit.
+    // corpora usually produce an edge list that fits the driver budget —
+    // then union-find in milliseconds beats diameter-many distributed
+    // rounds (each a join+agg job). The loop below remains the scale path
+    // for graphs past the budget; both produce the identical min-label
+    // result. Typed (Long, Long) tuples, not GenericRows — roughly 3×
+    // lighter on the driver.
     val spark0 = pairs.sparkSession
-    // Compare against the EFFECTIVE cap (ADVICE r13): limit() clamps the
-    // probe at Int.MaxValue-1 rows, so a driverEdgeLimit beyond that must
-    // not be used in the length test — a ~2.1B-edge graph would truncate
-    // silently yet pass `length <= driverEdgeLimit` and union-find would
-    // run on a partial edge set. Past effLimit the distributed loop runs.
-    val effLimit = math.min(driverEdgeLimit, Int.MaxValue - 2L).toInt
     val localEdges = {
       import spark0.implicits._
-      edges.select(col("src"), col("dst")).as[(Long, Long)]
-        .limit(effLimit + 1)
-        .collect()
+      graft.ops.Materialize.collectIfDriverSized(
+        edges.select(col("src"), col("dst")).as[(Long, Long)])
     }
-    if (localEdges.length <= effLimit) {
-      val spark = spark0
-      import spark.implicits._
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      // symmetric edges: every endpoint occurs as a src
-      val srcSeen = scala.collection.mutable.LongMap.empty[Unit]
-      localEdges.foreach { case (s, d) =>
-        srcSeen(s) = (); srcSeen(d) = ()
-        val (a, b) = (find(s), find(d))
-        if (a != b) { if (a < b) parent(b) = a else parent(a) = b }
-      }
-      val nonRoots = parent.keysIterator.toArray // snapshot: find() compresses paths
-      val labeled = nonRoots.map(id => (id, find(id))).toSeq ++
-        srcSeen.keysIterator.filterNot(parent.contains).map(id => (id, id))
-      edges.unpersist()
-      val touched = labeled.toDF("doc_id", "cluster_id")
-      // dropSingletons (r13): a consumer that filters cluster_size > 1
-      // never reads the singleton tail — every multi-member cluster is
-      // made of edge endpoints — so skipping the corpus anti-join +
-      // union returns a purely LOCAL frame here and saves a table scan
-      // per clustering report
-      if (dropSingletons) return touched
-      val singletons = allDocs.select(col("doc_id"))
-        .join(touched.select(col("doc_id")), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      return touched.unionByName(singletons)
+    localEdges match {
+      case Some(es) =>
+        val spark = spark0
+        import spark.implicits._
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        // symmetric edges: every endpoint occurs as a src
+        val srcSeen = scala.collection.mutable.LongMap.empty[Unit]
+        es.foreach { case (s, d) =>
+          srcSeen(s) = (); srcSeen(d) = ()
+          val (a, b) = (find(s), find(d))
+          if (a != b) { if (a < b) parent(b) = a else parent(a) = b }
+        }
+        val nonRoots = parent.keysIterator.toArray // snapshot: find() compresses paths
+        val labeled = nonRoots.map(id => (id, find(id))).toSeq ++
+          srcSeen.keysIterator.filterNot(parent.contains).map(id => (id, id))
+        edges.unpersist()
+        val touched = labeled.toDF("doc_id", "cluster_id")
+        // dropSingletons (r13): a consumer that filters cluster_size > 1
+        // never reads the singleton tail — every multi-member cluster is
+        // made of edge endpoints — so skipping the corpus anti-join +
+        // union returns a purely LOCAL frame here and saves a table scan
+        // per clustering report
+        if (dropSingletons) return touched
+        val singletons = allDocs.select(col("doc_id"))
+          .join(touched.select(col("doc_id")), Seq("doc_id"), "left_anti")
+          .select(col("doc_id"), col("doc_id").as("cluster_id"))
+        return touched.unionByName(singletons)
+      case None => () // scale branch below
     }
     // Only docs that touch an edge can ever change label — iterate over
     // that (much smaller) frame; the untouched majority joins back as
@@ -1366,16 +1317,9 @@ object Dedup {
     // estimate — a FileScan carries real stats, so round plans stay
     // constant-size. Superseded rounds are deleted as the loop advances
     // (only the final mapping's files back the returned frame); the
-    // spill root itself is swept by a JVM shutdown hook.
+    // spill root itself belongs to the spill store's lifecycle.
     val sparkCC = pairs.sparkSession
-    val spillRoot = java.nio.file.Files.createTempDirectory("graft_cc").toString
-    ccSpillHookInit
-    // in-flight registry, not the releasable queue: a concurrent
-    // releaseClusterFrames() must never delete files this call is still
-    // writing/reading; the root becomes releasable when the call exits
-    // (on failure too — an aborted run's frames are never consumed)
-    ccInFlight.add(spillRoot)
-    try {
+    graft.ops.Materialize.withSpillRoot { spillRoot =>
     var roundN = 0
     // pin returns the frame AND its backing dir so superseded rounds can
     // be deleted as the loop advances — without the per-round GC a
@@ -1388,7 +1332,8 @@ object Dedup {
       df.write.mode("overwrite").parquet(p)
       (sparkCC.read.parquet(p), p)
     }
-    def rmDir(p: String): Unit = deleteRecursively(new java.io.File(p))
+    def rmDir(p: String): Unit =
+      graft.ops.Materialize.deleteRecursively(new java.io.File(p))
     val (m0, m0p) = pinAt(edges.select(col("src").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("cluster_id")))
     var mapping = m0
@@ -1463,7 +1408,7 @@ object Dedup {
     else pinned.unionByName(allDocs.select(col("doc_id"))
       .join(pinned.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("doc_id").as("cluster_id")))
-    } finally { ccInFlight.remove(spillRoot); ccSpillRoots.add(spillRoot); () }
+    }
   }
 
   /** Driver-registered clustering summary: MinHash pairs → components →
@@ -1478,20 +1423,19 @@ object Dedup {
     */
   def minHashMembership(
       spark: SparkSession, sfDir: String, twinnable: Boolean = false,
-      maxIter: Int = 25, driverEdgeLimit: Long = 2_000_000L,
-      dropSingletons: Boolean = false): DataFrame = {
+      maxIter: Int = 25, dropSingletons: Boolean = false): DataFrame = {
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"))
     connectedComponents(
       minHashPairsUnsorted(spark, sfDir, twinnable = twinnable), docs,
-      maxIter, driverEdgeLimit, dropSingletons)
+      maxIter, dropSingletons)
   }
 
   def minHashClusters(
       spark: SparkSession, sfDir: String, twinnable: Boolean = false,
-      maxIter: Int = 25, driverEdgeLimit: Long = 2_000_000L): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     // dropSingletons: the >1 filter below never reads the singleton tail
     val cc = minHashMembership(spark, sfDir, twinnable, maxIter,
-      driverEdgeLimit, dropSingletons = true)
+      dropSingletons = true)
     cc.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"), min(col("doc_id")).as("keeper_doc_id"))
       .filter(col("cluster_size") > 1)
@@ -1548,7 +1492,7 @@ object Dedup {
     // per-call tokenize pass or cache entry.
     val sets = shingleStatsShared(spark, sfDir).groupBy(col("doc_id"))
       .agg(array_sort(collect_set(col("sh"))).as("shset"))
-    graft.ops.Materialize.smallLocal(pairs
+    graft.ops.Materialize.localOrSpill(pairs
       .join(sets.select(col("doc_id").as("doc_a"), col("shset").as("set_a")), Seq("doc_a"))
       .join(sets.select(col("doc_id").as("doc_b"), col("shset").as("set_b")), Seq("doc_b"))
       .withColumn("jaccard", jaccard(col("set_a"), col("set_b")))
@@ -1954,8 +1898,8 @@ object Dedup {
         }
       val cands = winners.filter(col("doc_freq") >= lit(cut))
       // ≤ topK rows hang off the call-scoped cache — driver-materialize
-      // before unpersisting (the smallLocal idiom, not localCheckpoint)
-      graft.ops.Materialize.smallLocal(
+      // before unpersisting (the localOrSpill idiom, not localCheckpoint)
+      graft.ops.Materialize.localOrSpill(
         cands
           .select(col("gram"), col("doc_freq"), col("first_doc_id"))
           .orderBy(col("doc_freq").desc, col("gram").asc)

@@ -130,26 +130,6 @@ object Graph {
         .unionByName(edgePairsOf(ok(oldRaw), ok(newOnly))))
   }
 
-  /** Driver-side edge cap for the graph reports' size-adaptive fast
-    * paths — the [[Dedup.connectedComponents]] union-find discipline
-    * extended to the whole family: the STRONG/SAMPLED graphs these
-    * reports run on are tiny fractions of the edge artifact (sf0.1:
-    * w≥2 keeps ~2.3k of 1.2M edges; the 1/4³ vertex sample keeps ~2%),
-    * so one typed collect + local arithmetic replaces 15–25 scheduled
-    * jobs of per-round joins whose inputs are a few KB. Every caller
-    * keeps its distributed loop as the scale branch past the cap, and
-    * both branches produce bit-identical integer reports.
-    */
-  private[graft] val DriverEdgeCap = 2_000_000
-
-  /** Probe-collect an edge frame — the shared helper in
-    * [[graft.ops.Materialize.collectIfDriverSized]] (one `limit(cap+1)`
-    * job; `None` past the cap sends callers to their distributed branch).
-    */
-  private def collectIfDriverSized[T](
-      ds: org.apache.spark.sql.Dataset[T], cap: Int): Option[Array[T]] =
-    graft.ops.Materialize.collectIfDriverSized(ds, cap)
-
   /** Union-find with MIN-root retention (labels = component minimum,
     * matching the distributed min-label contraction loop) — the same
     * kernel as [[Dedup.connectedComponents]]' driver branch, shared here
@@ -333,7 +313,7 @@ object Graph {
         val live = rankRecurrence(spark, sfDir, iters, damping,
           maxBroadcastNodes, toRelease)
         // materialize before releasing the round caches the frame chains to
-        val out = graft.ops.Materialize.smallLocal(
+        val out = graft.ops.Materialize.localOrSpill(
           live
             .select(col("node").as("p_partkey"), col("rank_e12"),
               (col("rank_e12").cast("double") / lit(1e12)).as("rank"))
@@ -342,7 +322,7 @@ object Graph {
         toRelease.foreach(_.unpersist())
         return out
       }
-    graft.ops.Materialize.smallLocal(
+    graft.ops.Materialize.localOrSpill(
       ranks
         .select(col("node").as("p_partkey"), col("rank_e12"),
           (col("rank_e12").cast("double") / lit(1e12)).as("rank"))
@@ -439,8 +419,7 @@ object Graph {
     * frame keyed by the label — no corpus-sized structure anywhere.
     */
   def copurchaseCommunities(
-      spark: SparkSession, sfDir: String, minWeight: Long = 2L,
-      driverEdgeCap: Int = DriverEdgeCap): DataFrame = {
+      spark: SparkSession, sfDir: String, minWeight: Long = 2L): DataFrame = {
     import spark.implicits._
     val strongLazy = coPurchaseEdges(spark, sfDir)
       .filter(col("src") < col("dst") && col("w") >= minWeight)
@@ -450,9 +429,9 @@ object Graph {
     // edges), the singleton anti-join, two summary aggregations and a
     // join: ~8 scheduled jobs down to 1. Same min-label/union-find
     // kernel, same integer aggregates, bit-identical report.
-    collectIfDriverSized(
+    graft.ops.Materialize.collectIfDriverSized(
       strongLazy.select(col("src"), col("dst"), col("w"))
-        .as[(Long, Long, Long)], driverEdgeCap) match {
+        .as[(Long, Long, Long)]) match {
       case Some(es) =>
         val parent = unionFindMin(es)
         def find(x: Long): Long = {
@@ -503,7 +482,7 @@ object Graph {
           .agg(count(lit(1)).as("n_edges"), sum(col("w")).as("total_weight"))
         // every community has ≥1 internal edge by construction (labels come
         // from the edge set), so the join is total
-        graft.ops.Materialize.smallLocal(
+        graft.ops.Materialize.localOrSpill(
           sizes.join(estat, Seq("cluster_id"))
             .select(col("cluster_id").as("community_id"), col("n_parts"),
               col("n_edges"), col("total_weight"))
@@ -531,21 +510,20 @@ object Graph {
     */
   def copurchaseKCore(
       spark: SparkSession, sfDir: String, k: Int = 2,
-      minWeight: Long = 2L, rounds: Int = 5,
-      driverEdgeCap: Int = DriverEdgeCap): DataFrame = {
+      minWeight: Long = 2L, rounds: Int = 5): DataFrame = {
     import spark.implicits._
     val undLazy = coPurchaseEdges(spark, sfDir)
       .filter(col("src") < col("dst") && col("w") >= minWeight)
       .select("src", "dst")
     // Size-adaptive fast path (r13 optimization): the strong graph the
-    // peel runs on is driver-sized (see DriverEdgeCap), so the per-round
+    // peel runs on fits the driver budget, so the per-round
     // degree-agg + two semi-joins + eager localCheckpoint + two counts —
     // ~4 scheduled jobs × `rounds` — collapse into one typed collect and
     // local integer arithmetic. Identical peeling recurrence, identical
     // report rows; past the cap the distributed loop below is the
     // unchanged scale branch.
-    collectIfDriverSized(
-      undLazy.as[(Long, Long)], driverEdgeCap) match {
+    graft.ops.Materialize.collectIfDriverSized(
+      undLazy.as[(Long, Long)]) match {
       case Some(es0) =>
         var edges = es0
         val seen0 = scala.collection.mutable.LongMap.empty[Unit]
@@ -644,8 +622,7 @@ object Graph {
     */
   def partTriangles(
       spark: SparkSession, sfDir: String, topK: Int = 25,
-      sampleMod: Int = 4,
-      driverEdgeCap: Int = DriverEdgeCap / 4): DataFrame = {
+      sampleMod: Int = 4): DataFrame = {
     def keep(c: Column) = Dedup.shaBucket(c, sampleMod.toLong) === 0L
     // canonical simple edges of the vertex-sampled induced subgraph:
     // src < dst halves the shared symmetric edge table to one orientation
@@ -670,15 +647,16 @@ object Graph {
     // driver-sized, so the degree broadcast joins, the wedge self-join
     // and the closure join — 7 scheduled jobs — collapse to one typed
     // collect + the same degree-ordered wedge enumeration locally. The
-    // cap is tighter than DriverEdgeCap because the local work is
-    // Σ out-deg² (the identical arboricity-bounded work the wedge join
-    // does, minus the cluster); past it the distributed census below is
-    // the unchanged scale branch.
-    val fastPath = collectIfDriverSized(
+    // probe spends a quarter of the driver budget because the local work
+    // is Σ out-deg² (the identical arboricity-bounded work the wedge join
+    // does, minus the cluster), so this cap bounds local compute, not
+    // heap; past it the distributed census below is the unchanged scale
+    // branch.
+    val fastPath = graft.ops.Materialize.collectIfDriverSized(
       undLazy.as[(Long, Long)](
         org.apache.spark.sql.Encoders.tuple(
           org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong)), driverEdgeCap)
+          org.apache.spark.sql.Encoders.scalaLong)), budgetDivisor = 4)
     fastPath match {
       case Some(es) =>
         import spark.implicits._
@@ -753,7 +731,7 @@ object Graph {
       // plan-build time and re-execute its semi-join subtree once per
       // reference (deg reads it twice, the wedge join twice more):
       // measured 3.97 s lazy vs 1.9 s materialized at sf0.1
-      graft.ops.Materialize.smallLocal(triangles
+      graft.ops.Materialize.localOrSpill(triangles
         .select(explode(array(col("u"), col("v1"), col("v2"))).as("p_partkey"))
         .groupBy(col("p_partkey"))
         .agg(count(lit(1)).as("n_triangles"))

@@ -154,7 +154,7 @@ object Search {
       .reduce(_ + _)
     val nTerms = qTerms.indices
       .map(i => when(col(s"__tf$i") > 0, 1L).otherwise(0L)).reduce(_ + _)
-    graft.ops.Materialize.smallLocal(
+    graft.ops.Materialize.localOrSpill(
       perDoc
         .select(col("doc_id"), nTerms.as("n_terms"), round(score, 6).as("bm25"))
         .filter(col("n_terms") > 0)
@@ -192,7 +192,7 @@ object Search {
     // (r14): the r13 shape referenced the lazy `lex` frame again in the
     // final fusion join, re-executing the whole bm25 subtree (postings
     // scan + tf/idf aggregation) a second time per call.
-    val lex = graft.ops.Materialize.smallLocal(
+    val lex = graft.ops.Materialize.localOrSpill(
       bm25(spark, sfDir, terms, topK = topK)
         .withColumn("lex_rank", row_number().over(
           Window.orderBy(col("bm25").desc, col("doc_id").asc)))
@@ -219,7 +219,7 @@ object Search {
       .withColumn("dense_rank", row_number().over(
         Window.orderBy(col("sim").desc, col("doc_id").asc)))
       .select(col("doc_id"), col("dense_rank"))
-    graft.ops.Materialize.smallLocal(lex
+    graft.ops.Materialize.localOrSpill(lex
       .join(dense, Seq("doc_id"), "full_outer")
       .select(col("doc_id"),
         coalesce(col("lex_rank"), lit(0)).as("lex_rank"),

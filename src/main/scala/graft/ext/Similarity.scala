@@ -128,7 +128,7 @@ object Similarity {
     // rows turns the bucket probe into one BroadcastHashJoin the corpus
     // signature pass streams through: ONE 64-projection pass, ZERO corpus
     // exchanges before the (tiny) candidate distinct. Nothing is
-    // materialized through the driver any more (the r13 smallLocal
+    // materialized through the driver any more (the r13 driver pin
     // serialized this leg against its consumers' other legs — measured:
     // ann_recall/retrieval_metrics lost the brute∥LSH stage overlap);
     // the rerank's corpus join is left UNHINTED so AQE broadcasts the

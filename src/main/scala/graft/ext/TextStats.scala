@@ -26,18 +26,6 @@ object TextStats {
   private[ext] def tokenCount(text: Column): Column =
     size(filter(split(text, "\\s+"), t => t =!= ""))
 
-  /** Driver-side row cap for the rank-report fast paths
-    * ([[perplexityBuckets]], [[qualityCalibration]],
-    * [[qualityThresholdByLang]]) — the [[graft.ext.Graph.DriverEdgeCap]]
-    * discipline applied to doc-level SCORED frames (a few fixed-width
-    * numbers per document): under the cap one typed collect + local
-    * integer rank arithmetic replaces the two-level exact-rank machinery's
-    * sample/histogram/rank jobs over a call-scoped cache; past it every
-    * caller keeps its distributed branch unchanged. 2M rows ≈ tens of MB
-    * on the driver — the same envelope the union-find fast path budgets.
-    */
-  private[graft] val DriverScoredCap = 2_000_000
-
   /** Corpus statistics per language: doc counts, exact char/token sums
     * (integer — order-independent, oracle-exact), source diversity.
     *
@@ -98,8 +86,7 @@ object TextStats {
     * counts — the twin states the same rank selection with a window.
     */
   def qualityThresholdByLang(
-      spark: SparkSession, sfDir: String, pct: Double = 0.2,
-      driverScoredCap: Int = DriverScoredCap): DataFrame = {
+      spark: SparkSession, sfDir: String, pct: Double = 0.2): DataFrame = {
     import spark.implicits._
     val scoredLazy = classifierScored(Tables.documents(spark, sfDir))
       .select(col("doc_id"), col("lang"), col("logit"))
@@ -112,9 +99,10 @@ object TextStats {
     // down to 1). The selected threshold is an actual data element and
     // every count is an integer — bit-identical; past the cap the
     // distributed branch runs unchanged.
-    if (Tables.parquetRowCount(spark, sfDir, "documents") <= driverScoredCap) {
-      val rows = scoredLazy.select(col("lang"), col("logit"))
-        .as[(String, Long)].collect()
+    val langLogit = scoredLazy.select(col("lang"), col("logit"))
+    if (Tables.parquetRowCount(spark, sfDir, "documents") <=
+        graft.ops.Materialize.rowCap(spark, langLogit.schema)) {
+      val rows = langLogit.as[(String, Long)].collect()
       return rows.groupBy(_._1).toSeq
           .flatMap { case (lang, rs) =>
             val logits = rs.map(_._2).sorted
@@ -140,7 +128,7 @@ object TextStats {
     try {
       val thresholds = graft.ops.Ranks.selectOrderStatistic(
         scored, Seq("lang"), col("logit"), pct, "threshold")
-      graft.ops.Materialize.smallLocal(
+      graft.ops.Materialize.localOrSpill(
         scored.join(broadcast(thresholds), Seq("lang"))
           .groupBy(col("lang"), col("threshold"))
           .agg(
@@ -713,8 +701,7 @@ object TextStats {
     */
   def qualityCalibration(
       spark: SparkSession, sfDir: String, nBuckets: Int = 10,
-      minWords: Int = 5, maxWords: Int = 100000,
-      driverScoredCap: Int = DriverScoredCap): DataFrame = {
+      minWords: Int = 5, maxWords: Int = 100000): DataFrame = {
     import spark.implicits._
     val scoredLazy = classifierScored(Tables.documents(spark, sfDir))
       .select(col("doc_id"), col("logit"),
@@ -728,7 +715,8 @@ object TextStats {
     // ([[graft.ops.Ranks.ntileLocal]]), integer counts, one IEEE
     // division per bucket — bit-identical; past the cap the distributed
     // branch below runs unchanged.
-    if (Tables.parquetRowCount(spark, sfDir, "documents") <= driverScoredCap) {
+    if (Tables.parquetRowCount(spark, sfDir, "documents") <=
+        graft.ops.Materialize.rowCap(spark, scoredLazy.schema)) {
       val rows = scoredLazy.as[(Long, Long, Boolean)].collect()
       val n = rows.length.toLong
       val sorted = rows.sortWith { (a, b) =>
@@ -764,7 +752,7 @@ object TextStats {
         .withColumn("rule_pass_rate",
           col("n_rule_pass").cast("double") / col("n_docs").cast("double"))
         .orderBy(col("score_decile").asc)
-      graft.ops.Materialize.smallLocal(out, maxRows = math.max(nBuckets, 1024))
+      graft.ops.Materialize.localOrSpill(out)
     } finally scored.unpersist()
   }
 
@@ -1121,8 +1109,7 @@ object TextStats {
     * corpus-wide sort anywhere.
     */
   def zipfFit(
-      spark: SparkSession, sfDir: String, topK: Int = 2000,
-      driverHistoCap: Int = DriverScoredCap): DataFrame = {
+      spark: SparkSession, sfDir: String, topK: Int = 2000): DataFrame = {
     val tf = Tables.documents(spark, sfDir)
       .select(col("source"),
         explode(expr("""filter(split(lower(text), '\\s+'), t -> t <> '')"""))
@@ -1135,7 +1122,7 @@ object TextStats {
     // whole fit is arithmetic over the (source, cnt, class size)
     // HISTOGRAM — a frame bounded by the distinct frequency values per
     // source (O(√corpus) by Zipf itself), probe-collected under the
-    // family cap. One tokenize pass + one tiny extra hash-agg replaces
+    // driver budget. One tokenize pass + one tiny extra hash-agg replaces
     // the rank primitive's sample pass + bucketed windows over the full
     // tf frame. Past the cap, the distributed rank path below runs
     // unchanged (parity spec-pinned).
@@ -1143,7 +1130,7 @@ object TextStats {
     val histoProbe = graft.ops.Materialize.collectIfDriverSized(
       tf.groupBy(col("source"), col("cnt"))
         .agg(count(lit(1)).as("freq"))
-        .as[(String, Long, Long)], driverHistoCap)
+        .as[(String, Long, Long)])
     histoProbe match {
       case Some(rows) => return zipfFitLocal(spark, rows, topK)
       case None       => ()
@@ -1545,8 +1532,7 @@ object TextStats {
     * before returning (library convention for call-scoped caches).
     */
   def perplexityBuckets(
-      spark: SparkSession, sfDir: String, nBuckets: Int = 4,
-      driverScoredCap: Int = DriverScoredCap): DataFrame = {
+      spark: SparkSession, sfDir: String, nBuckets: Int = 4): DataFrame = {
     import spark.implicits._
     val scoredLazy = lmScored(spark, sfDir)
     // Size-adaptive fast path (r13 optimization, the [[graft.ext.Graph]]
@@ -1562,10 +1548,11 @@ object TextStats {
     // arithmetic ([[graft.ops.Ranks.ntileLocal]]), sums are integer,
     // min/max are order-independent — bit-identical report; past the cap
     // the distributed exact-rank branch runs unchanged.
-    if (Tables.parquetRowCount(spark, sfDir, "documents") <= driverScoredCap) {
-      val rows = scoredLazy.select(col("doc_id"), col("n_tokens"),
-        col("rank_sum"), col("mean_rank")).as[(Long, Long, Long, Double)]
-        .collect()
+    val scoredCols = scoredLazy.select(col("doc_id"), col("n_tokens"),
+      col("rank_sum"), col("mean_rank"))
+    if (Tables.parquetRowCount(spark, sfDir, "documents") <=
+        graft.ops.Materialize.rowCap(spark, scoredCols.schema)) {
+      val rows = scoredCols.as[(Long, Long, Long, Double)].collect()
       val n = rows.length.toLong
       val sorted = rows.sortWith { (a, b) =>
         val c = java.lang.Double.compare(a._4, b._4)
@@ -1599,7 +1586,7 @@ object TextStats {
           min(col("mean_rank")).as("min_mean_rank"),
           max(col("mean_rank")).as("max_mean_rank"))
         .orderBy(col("ppl_bucket").asc)
-      graft.ops.Materialize.smallLocal(out, maxRows = math.max(nBuckets, 1024))
+      graft.ops.Materialize.localOrSpill(out)
     } finally scored.unpersist()
   }
 }

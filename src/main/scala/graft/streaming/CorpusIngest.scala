@@ -675,28 +675,15 @@ object CorpusIngest {
     * the DuckDB oracle proves it through `ingest_edge_index`, whose
     * readback folds the census rows in under [[CensusMark]]).
     */
-  /** Driver-local row cap for [[edgeBatchBody]]'s fast path, byte-budgeted:
-    * one collected (l_orderkey, l_partkey) tuple is ~48 heap bytes (two
-    * boxed longs + Tuple2), so the default 2M-row cap bounds each of the
-    * two live collects (batch pairs, touched committed memberships) at
-    * ~100 MB — the same budget discipline as [[graft.ext.Graph]]'s
-    * DriverEdgeCap. Overridable per deployment
-    * (`graft.edgeBodyDriverCap`); 0 forces the distributed branch (the
-    * parity spec's knob).
-    */
-  private[graft] val EdgeBodyDriverCap = 2_000_000
-
-  /** Dev-only phase tracing of [[edgeBatchBody]]'s fast path. */
-  private[graft] var EdgeBodyTrace = false
-
   /** One foreachBatch body of [[ingestEdges]] — dispatcher. A micro-batch
-    * whose pair list AND touched committed memberships both fit
-    * [[EdgeBodyDriverCap]] takes the DRIVER-LOCAL body (the r13 graph-
-    * report discipline: the probe IS the collect, pair production over
-    * ≤[[graft.ext.Graph.MaxBasket]]-part baskets is local integer
-    * arithmetic, and the three epoch writes become single-task local-
-    * relation writes — the face measured 2.9 s of almost pure plan/stage
-    * overhead at sf0.1, identical at sf0.001). Bigger batches take the
+    * whose pair list AND touched committed memberships both fit the
+    * [[graft.ops.Materialize]] driver budget takes the DRIVER-LOCAL body
+    * (the r13 graph-report discipline: the probe IS the collect, pair
+    * production over ≤[[graft.ext.Graph.MaxBasket]]-part baskets is
+    * local integer arithmetic, and the three epoch writes become
+    * single-task local-relation writes — the face measured 2.9 s of
+    * almost pure plan/stage overhead at sf0.1, identical at sf0.001).
+    * Bigger batches take the
     * unchanged distributed branch; both branches derive the SAME epoch
     * rows (multiset-identical, spec-pinned), so mixed local/distributed
     * replays converge exactly as before.
@@ -704,38 +691,23 @@ object CorpusIngest {
   private[graft] def edgeBatchBody(
       batch: DataFrame, indexPath: String, epoch: Long): Unit = {
     val spark = batch.sparkSession
-    val cap0 = spark.conf.get(
-      "graft.edgeBodyDriverCap", EdgeBodyDriverCap.toString).toLong
-    val cap = math.min(cap0, (Int.MaxValue - 2).toLong).toInt
     val sp = spark; import sp.implicits._
-    def t[T](name: String)(f: => T): T = {
-      if (!EdgeBodyTrace) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"EDGEBODY $name sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-        r
-      }
-    }
-    val batchPairs =
-      if (cap <= 0) None
-      else t("probe_batch")(graft.ops.Materialize.collectIfDriverSized(
-        batch.select(col("l_orderkey"), col("l_partkey"))
-          .as[(Long, Long)], cap))
+    val batchPairs = graft.ops.Materialize.collectIfDriverSized(
+      batch.select(col("l_orderkey"), col("l_partkey")).as[(Long, Long)])
     val localDone = batchPairs.exists { raw =>
       val priorDirs = epochDirList(spark, s"$indexPath/members", Some(epoch))
       val newRaw = raw.distinct
       val touched = newRaw.map(_._1).distinct
       val oldTouched: Option[Array[(Long, Long)]] =
         if (priorDirs.isEmpty) Some(Array.empty)
-        else t("probe_old")(graft.ops.Materialize.collectIfDriverSized(
+        else graft.ops.Materialize.collectIfDriverSized(
           spark.read.schema(memberSchema)
             .parquet(priorDirs.toIndexedSeq: _*)
             .join(broadcast(touched.toSeq.toDF("l_orderkey")),
               Seq("l_orderkey"), "left_semi")
-            .as[(Long, Long)], cap))
+            .as[(Long, Long)])
       oldTouched.exists { old =>
-        t("local_compute_write")(
-          localEdgeBody(spark, newRaw, old, indexPath, epoch)); true
+        localEdgeBody(spark, newRaw, old, indexPath, epoch); true
       }
     }
     if (!localDone) edgeBatchBodyDistributed(batch, indexPath, epoch)
@@ -1061,8 +1033,13 @@ object CorpusIngest {
     val lines = graft.io.Tables.lineitem(spark, sfDir)
       .filter(pmod(col("l_orderkey"), lit(8L)) === 0L)
       .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"))
+    def shard(r: Int): DataFrame = lines
+      .filter(pmod(col("l_linenumber"), lit(2L)) === r.toLong)
+      .select(col("l_orderkey"), col("l_partkey"))
     withMicroBatchPartitions(spark) {
-      faceBodies(spark, dir, lines)
+      edgeBatchBody(shard(0), dir, 0L)
+      edgeBatchBody(shard(1), dir, 1L)
+      edgeBatchBody(shard(1), dir, 1L) // replay: same epoch, net no-op
     }
     val edges = readEdgeIndex(spark, dir)
       .filter(pmod(col("src"), lit(17L)) === 0L)
@@ -1082,90 +1059,6 @@ object CorpusIngest {
         col("pc").as("w"))
     edges.unionByName(census)
       .orderBy(col("src").asc, col("dst").asc)
-  }
-
-  /** The face's three epoch bodies. Driver fast path (r14): the face
-    * re-derives its whole input from one deterministic lineitem slice,
-    * so when that slice fits [[EdgeBodyDriverCap]] it is collected ONCE
-    * (one job instead of three 2-column scan probes) and the committed
-    * member state THREADS IN MEMORY between the bodies — epoch 1 (and
-    * its replay) would otherwise re-read from parquet exactly the member
-    * rows epoch 0 just wrote from a local array (two more jobs). Every
-    * epoch FILE is still written identically via [[localEdgeBody]] (the
-    * readback consumes only the files, and the stream-parity spec pins
-    * the face against a real [[ingestEdges]] stream, which keeps the
-    * probe-per-batch path); past the cap the three [[edgeBatchBody]]
-    * calls run unchanged.
-    */
-  private def faceBodies(
-      spark: SparkSession, dir: String, lines: DataFrame): Unit = {
-    val sp = spark; import sp.implicits._
-    val cap0 = spark.conf.get(
-      "graft.edgeBodyDriverCap", EdgeBodyDriverCap.toString).toLong
-    val cap = math.min(cap0, (Int.MaxValue - 2).toLong).toInt
-    val local =
-      if (cap <= 0) None
-      else graft.ops.Materialize.collectIfDriverSized(
-        lines.as[(Long, Long, Long)], cap)
-    local match {
-      case Some(rows) =>
-        // shard split by line-number parity, exactly as the lazy frames
-        val s0 = rows.iterator.filter(r => math.floorMod(r._3, 2L) == 0L)
-          .map(r => (r._1, r._2)).toArray.distinct
-        val s1 = rows.iterator.filter(r => math.floorMod(r._3, 2L) == 1L)
-          .map(r => (r._1, r._2)).toArray.distinct
-        // epoch 0: no prior members; its committed member rows ARE the
-        // distinct epoch-0 pairs (old = empty ⇒ newOnly = all)
-        localEdgeBody(spark, s0, Array.empty, dir, 0L)
-        // epoch 1 + replay: prior members = epoch 0's, semi-joined to
-        // the batch's touched orders — threaded, not re-read
-        val touched1 = new java.util.HashSet[java.lang.Long]()
-        s1.foreach(p => { touched1.add(p._1); () })
-        val old1 = s0.filter(p => touched1.contains(p._1))
-        localEdgeBody(spark, s1, old1, dir, 1L)
-        localEdgeBody(spark, s1, old1, dir, 1L) // replay: net no-op
-      case None =>
-        def shard(r: Int): DataFrame = lines
-          .filter(pmod(col("l_linenumber"), lit(2L)) === r.toLong)
-          .select(col("l_orderkey"), col("l_partkey"))
-        edgeBatchBody(shard(0), dir, 0L)
-        edgeBatchBody(shard(1), dir, 1L)
-        edgeBatchBody(shard(1), dir, 1L) // replay: same epoch, net no-op
-    }
-  }
-
-  /** Dev-only phase decomposition of [[edgeIngestFace]] (same bodies,
-    * individually timed) — drives [[graft.tools.ProfileEdge]].
-    */
-  private[graft] def profileFacePhases(
-      spark: SparkSession, sfDir: String): Unit = {
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"PROFILE $name sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      r
-    }
-    val dir = resetDir(spark, sfDir, "graft_ingest_edge")
-    val lines = graft.io.Tables.lineitem(spark, sfDir)
-      .filter(pmod(col("l_orderkey"), lit(8L)) === 0L)
-      .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"))
-    def shard(r: Int): DataFrame = lines
-      .filter(pmod(col("l_linenumber"), lit(2L)) === r.toLong)
-      .select(col("l_orderkey"), col("l_partkey"))
-    withMicroBatchPartitions(spark) {
-      timed("body_epoch0")(edgeBatchBody(shard(0), dir, 0L))
-      timed("body_epoch1")(edgeBatchBody(shard(1), dir, 1L))
-      timed("body_epoch1_replay")(edgeBatchBody(shard(1), dir, 1L))
-    }
-    val edges = readEdgeIndex(spark, dir)
-      .filter(pmod(col("src"), lit(17L)) === 0L)
-      .select(col("src"), col("dst"), col("w"))
-    val census = readCensusIndex(spark, dir)
-      .filter(col("l_partkey") % 7 === 0L || col("l_partkey") === -1L)
-      .select(col("l_partkey").as("src"), lit(CensusMark).as("dst"),
-        col("pc").as("w"))
-    timed("readback")(
-      edges.unionByName(census)
-        .orderBy(col("src").asc, col("dst").asc).count())
   }
 
   /** `dst` marker of the census rows folded into [[edgeIngestFace]]'s

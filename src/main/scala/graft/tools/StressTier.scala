@@ -165,7 +165,7 @@ object StressTier {
 
     // admit the 100-doc buckets (maxBucket=128) and keep the pair list
     // DISTRIBUTED: ~nBase * C(100,2) verified pairs — far past the
-    // smallLocal cap and past the 2M driver edge limit
+    // driver budget
     val (pairs, tPairs) = timed("b.pairs")(
       Dedup.minHashPairsDistributed(spark, dir, maxBucket = 128))
     val nPairs = pairs.count()

@@ -329,9 +329,15 @@ class PlanQualitySpec extends SparkSpec {
     // run over an already-aggregated (tiny) frame.
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    // zipf_fit's registered plan is the driver branch's local report at
+    // this SF; its rank windows live on the distributed branch, built
+    // here with the driver budget at 0
+    def frame(q: String) =
+      if (q == "zipf_fit") withDriverBudget(0)(graft.ext.TextStats.zipfFit(spark, sf))
+      else SparkEntry.queries(q)(spark, sf)
     try for (q <- Seq("winsorized_stats", "length_band", "lm_score",
       "zipf_fit")) {
-      val phys = SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan
+      val phys = frame(q).queryExecution.executedPlan
       val windows = phys.collect {
         case w: org.apache.spark.sql.execution.window.WindowExec => w
       }
@@ -352,8 +358,10 @@ class PlanQualitySpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
     // ppl_buckets drains its call-scoped cache through a driver-side
     // materialization — the registered plan is the bounded local report
-    // (its rank machinery is covered above via lm_score and by RanksSpec)
+    // (its rank machinery is covered above via lm_score and by RanksSpec);
+    // zipf_fit's registered plan is the driver branch's local report
     assert(plan("ppl_buckets").contains("LocalTableScan"))
+    assert(plan("zipf_fit").contains("LocalTableScan"))
   }
 
   test("quality_classifier scores at scan speed: no hash exchange, no join") {
@@ -426,12 +434,12 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("calibration + mix reports drain through bounded local materialization") {
-    // both collapse the corpus to a tiny report and refuse past the cap —
+    // both collapse the corpus to a tiny report and spill past the budget —
     // the registered plan is the LocalTableScan of that bounded frame
     // (rank machinery covered by the two-level-rank guard + RanksSpec)
     for (q <- Seq("quality_calibration", "domain_mix_report")) {
       val p = plan(q)
-      assert(p.contains("LocalTableScan"), s"$q must materialize via smallLocal")
+      assert(p.contains("LocalTableScan"), s"$q must materialize via localOrSpill")
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
     }
   }
@@ -440,7 +448,7 @@ class PlanQualitySpec extends SparkSpec {
     // the report is one row per DELTA doc — it grows with the ingest
     // batch, so the registered plan must stay a distributed scan of the
     // signature-index artifact end-to-end: no LocalTableScan anywhere
-    // (the r6 form drained it through Materialize.smallLocal and would
+    // (the r6 form drained it through a driver-side materialization and would
     // refuse a 100 TB ingest batch at the 500k cap)
     val p = plan("dedup_incremental_near")
     assert(!p.contains("LocalTableScan"),

@@ -38,10 +38,10 @@ class DedupScaleSpec extends SparkSpec {
     writeFixture()
     val viaDriver = Dedup.minHashMembership(spark, dir)
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    // driverEdgeLimit=0 forces the distributed min-label loop through the
+    // driver budget 0 forces the distributed min-label loop through the
     // same public operator — both paths must label identically
-    val viaLoop = Dedup.minHashMembership(spark, dir, driverEdgeLimit = 0L)
-      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val viaLoop = withDriverBudget(0)(Dedup.minHashMembership(spark, dir)
+      .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
     assert(viaDriver === viaLoop)
     // and the planted family actually clustered (the test is not vacuous)
     assert(viaDriver.count { case (d, c) => c === 1L } >= 2)
@@ -84,14 +84,16 @@ class DedupScaleSpec extends SparkSpec {
     // maxIter=0 — zero rounds against a non-empty dup graph — must still
     // throw the loud non-convergence error, which is the knob (and the
     // loud-failure contract) working as intended.
-    val out = Curation.trainingSet(
-      spark, dir, fractions = Map("en" -> 1.0), defaultFraction = 1.0,
-      maxIter = 1, driverEdgeLimit = 0L)
-    assert(out.count() >= 1)
-    intercept[IllegalStateException] {
-      Curation.trainingSet(
+    withDriverBudget(0) {
+      val out = Curation.trainingSet(
         spark, dir, fractions = Map("en" -> 1.0), defaultFraction = 1.0,
-        maxIter = 0, driverEdgeLimit = 0L).count()
+        maxIter = 1)
+      assert(out.count() >= 1)
+      intercept[IllegalStateException] {
+        Curation.trainingSet(
+          spark, dir, fractions = Map("en" -> 1.0), defaultFraction = 1.0,
+          maxIter = 0).count()
+      }
     }
   }
 

@@ -30,26 +30,26 @@ class DedupSpec extends SparkSpec {
       "unrelated doc must not pair")
   }
 
-  test("releaseClusterFrames reclaims CC spill roots; later calls unaffected") {
+  test("releaseSpills reclaims CC spill roots; later calls unaffected") {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
     val docs = (1L to 6L).toDF("doc_id")
-    // driverEdgeLimit = 0 forces the distributed (spill-backed) path
-    val cc1 = Dedup.connectedComponents(pairs, docs, driverEdgeLimit = 0L)
+    // driver budget 0 forces the distributed (spill-backed) path
+    val cc1 = withDriverBudget(0)(Dedup.connectedComponents(pairs, docs))
     val expect = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 6L)
     assert(cc1.as[(Long, Long)].collect().toMap === expect)
-    val backing = cc1.inputFiles.filter(_.contains("graft_cc"))
+    val backing = cc1.inputFiles.filter(_.contains("graft_spill"))
     assert(backing.nonEmpty, "distributed CC must be parquet-spill-backed")
     def exists(uri: String) =
       new java.io.File(java.net.URI.create(uri).getPath).exists()
     assert(backing.forall(exists))
-    Dedup.releaseClusterFrames()
+    graft.ops.Materialize.releaseSpills()
     assert(backing.forall(f => !exists(f)),
       "release must delete the per-call final-mapping dirs")
     // a fresh clustering after the sweep is unaffected
-    val cc2 = Dedup.connectedComponents(pairs, docs, driverEdgeLimit = 0L)
+    val cc2 = withDriverBudget(0)(Dedup.connectedComponents(pairs, docs))
     assert(cc2.as[(Long, Long)].collect().toMap === expect)
-    Dedup.releaseClusterFrames()
+    graft.ops.Materialize.releaseSpills()
   }
 
   test("connectedComponents closes transitive chains; singletons self-label") {
@@ -178,8 +178,8 @@ class DedupSpec extends SparkSpec {
     val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val docs = (1L to 6L).toDF("doc_id")
     val e = intercept[IllegalStateException] {
-      // driverEdgeLimit=0 forces the distributed loop; maxIter=1 starves it
-      Dedup.connectedComponents(pairs, docs, maxIter = 1, driverEdgeLimit = 0L)
+      // driver budget 0 forces the distributed loop; maxIter=1 starves it
+      withDriverBudget(0)(Dedup.connectedComponents(pairs, docs, maxIter = 1))
         .count()
     }
     assert(e.getMessage.contains("not converged"))

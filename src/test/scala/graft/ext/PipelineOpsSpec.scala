@@ -417,38 +417,38 @@ class PipelineOpsSpec extends SparkSpec {
 
   test("graph reports: driver fast path == distributed branch (r13)") {
     import spark.implicits._
-    // driverEdgeCap = 0 forces every call down the distributed loop; the
+    // driver budget 0 forces every call down the distributed loop; the
     // default takes the typed-collect fast path. Both must emit the same
     // rows in the same order — the optimization contract.
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    def rows(df: => org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.collect().toSeq.map(_.toSeq)
     assert(rows(Graph.copurchaseKCore(spark, sf)) ===
-      rows(Graph.copurchaseKCore(spark, sf, driverEdgeCap = 0)))
+      withDriverBudget(0)(rows(Graph.copurchaseKCore(spark, sf))))
     assert(rows(Graph.copurchaseCommunities(spark, sf)) ===
-      rows(Graph.copurchaseCommunities(spark, sf, driverEdgeCap = 0)))
+      withDriverBudget(0)(rows(Graph.copurchaseCommunities(spark, sf))))
     assert(rows(Graph.partTriangles(spark, sf)) ===
-      rows(Graph.partTriangles(spark, sf, driverEdgeCap = 0)))
+      withDriverBudget(0)(rows(Graph.partTriangles(spark, sf))))
   }
 
   test("rank reports: driver fast path == distributed branch (r13)") {
-    // driverScoredCap = 0 forces the distributed exact-rank machinery; the
+    // driver budget 0 forces the distributed exact-rank machinery; the
     // default takes the footer-probed collect + local ntile/census path.
     // Same rows, same order — the optimization contract.
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    def rows(df: => org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.collect().toSeq.map(_.toSeq)
     assert(rows(TextStats.perplexityBuckets(spark, sf)) ===
-      rows(TextStats.perplexityBuckets(spark, sf, driverScoredCap = 0)))
+      withDriverBudget(0)(rows(TextStats.perplexityBuckets(spark, sf))))
     assert(rows(TextStats.qualityCalibration(spark, sf)) ===
-      rows(TextStats.qualityCalibration(spark, sf, driverScoredCap = 0)))
+      withDriverBudget(0)(rows(TextStats.qualityCalibration(spark, sf))))
     assert(rows(TextStats.qualityThresholdByLang(spark, sf)) ===
-      rows(TextStats.qualityThresholdByLang(spark, sf, driverScoredCap = 0)))
+      withDriverBudget(0)(rows(TextStats.qualityThresholdByLang(spark, sf))))
     // r14: zipf_fit's histogram-arithmetic driver branch vs the
     // exact-rank distributed branch, including a topK that cuts MID-tie
     // (same ln-micro sums either way: tied-cnt ranks share yi)
     assert(rows(TextStats.zipfFit(spark, sf)) ===
-      rows(TextStats.zipfFit(spark, sf, driverHistoCap = 0)))
+      withDriverBudget(0)(rows(TextStats.zipfFit(spark, sf))))
     assert(rows(TextStats.zipfFit(spark, sf, topK = 7)) ===
-      rows(TextStats.zipfFit(spark, sf, topK = 7, driverHistoCap = 0)))
+      withDriverBudget(0)(rows(TextStats.zipfFit(spark, sf, topK = 7))))
   }
 
   test("clusterBalancedSample: per-cell quota, disjoint, deterministic") {

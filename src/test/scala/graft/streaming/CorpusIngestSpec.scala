@@ -942,9 +942,7 @@ class CorpusIngestSpec extends SparkSpec {
     val dL = Files.createTempDirectory("graft_edgepar_l").toString
     run(dL) // default cap: the driver-local body
     val dD = Files.createTempDirectory("graft_edgepar_d").toString
-    spark.conf.set("graft.edgeBodyDriverCap", "0") // force distributed
-    try run(dD)
-    finally spark.conf.unset("graft.edgeBodyDriverCap")
+    withDriverBudget(0)(run(dD)) // force distributed
     def rows(dir: String, kind: String, epoch: Long): Map[Seq[Any], Int] =
       spark.read.parquet(s"$dir/index/$kind/epoch=$epoch")
         .collect().toSeq.map(_.toSeq)
