@@ -188,26 +188,30 @@ object SparkEntry {
     // per-label embedding L2-norm profile (decimal-summed mean)
     "embedding_norms"    -> ((s, d) => Similarity.normStats(s, d)),
     // recall@k of the LSH path vs the exact path — the ANN quality gate
-    "ann_recall"         -> ((s, d) => Similarity.annRecall(s, d)),
+    "ann_recall"         -> ((s, d) =>
+      Similarity.annRecall(s, d, Similarity.lshTopK)),
     // same gate for the IVF and IVF-PQ production legs (one brute truth)
-    "ann_recall_ivf"     -> ((s, d) => Similarity.annRecallIvf(s, d)),
-    "ann_recall_ivfpq"   -> ((s, d) => Similarity.annRecallIvfPq(s, d)),
+    "ann_recall_ivf"     -> ((s, d) =>
+      Similarity.annRecall(s, d, Similarity.ivfTopK)),
+    "ann_recall_ivfpq"   -> ((s, d) =>
+      Similarity.annRecall(s, d, Similarity.ivfPqTopK)),
     "ann_recall_ivf_trained" -> ((s, d) =>
-      Similarity.annRecallIvfTrained(s, d)),
+      Similarity.annRecall(s, d, Similarity.ivfTopKTrained)),
     // recall of the ADC-shortlist→exact-re-rank tier: should recover the
     // IVF candidate-set recall the raw 4-byte ADC row gives up
     "ann_recall_ivfpq_rerank" -> ((s, d) =>
-      Similarity.annRecallIvfPqRerank(s, d)),
+      Similarity.annRecall(s, d, Similarity.ivfPqRerankTopK)),
     // rank-quality eval of the LSH retrieval: MRR + average precision
     // (log-free rationals; exact top-k as the binary relevance set)
-    "retrieval_metrics"  -> ((s, d) => Similarity.retrievalMetrics(s, d)),
+    "retrieval_metrics"  -> ((s, d) =>
+      Similarity.retrievalMetrics(s, d, Similarity.lshTopK)),
     // same rank-quality eval for the production IVF leg
     "retrieval_metrics_ivf" -> ((s, d) =>
-      Similarity.retrievalMetricsIvf(s, d)),
+      Similarity.retrievalMetrics(s, d, Similarity.ivfTopK)),
     // and for the deployable shortlist→re-rank tier (should sit at the
     // IVF leg's level: stage 2 re-orders the shortlist exactly)
     "retrieval_metrics_rerank" -> ((s, d) =>
-      Similarity.retrievalMetricsIvfPqRerank(s, d)),
+      Similarity.retrievalMetrics(s, d, Similarity.ivfPqRerankTopK)),
     // product-quantization codes (the IVF-PQ compression half)
     "pq_codes"           -> ((s, d) => Similarity.pqCodes(s, d)),
     // cohort retention matrix (first-seen day × day offset)
@@ -1280,7 +1284,7 @@ object SparkEntry {
   /** Recall tail over [[ivfTrainedSearchPrefix]]'s `ranked` list — the
     * trained-quantizer leg of the ann_recall family (same brute truth).
     */
-  private def annRecallIvfTrainedOracle(
+  private def ivfTrainedRecallOracle(
       iters: Int = 5, nCells: Int = 16, nProbes: Int = 5, k: Int = 5,
       cellProbes: Int = 4): String =
     s"""${ivfTrainedSearchPrefix(iters, nCells, nProbes, k, cellProbes)},
@@ -1352,7 +1356,7 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] = Map(
     "knn_ivf_trained" -> knnIvfTrainedOracle(),
-    "ann_recall_ivf_trained" -> annRecallIvfTrainedOracle(),
+    "ann_recall_ivf_trained" -> ivfTrainedRecallOracle(),
     "kmeans_cells_trained" -> kmeansCellsTrainedOracle(),
     "length_quantiles" -> lengthQuantilesOracle(),
     "robust_stats" -> robustStatsOracle(),

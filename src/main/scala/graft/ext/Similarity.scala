@@ -36,6 +36,55 @@ object Similarity {
   private val simExpr: Column =
     expr("graft_dot(q_vec, c_vec)") / (col("q_norm") * col("c_norm"))
 
+  /** A top-k retrieval over the first `nProbes` vectors:
+    * `(spark, sfDir, nProbes, k)` → rows keyed (q_id, nn_rank,
+    * neighbor_id). Every search below has this shape, and the recall
+    * harness ([[annRecall]], [[retrievalMetrics]]) takes one.
+    */
+  type Retrieval = (SparkSession, String, Int, Int) => DataFrame
+
+  /** The exact-cosine top-k tail every cosine retrieval ends in: score
+    * (q_id, c_id) pairs carrying both vectors and norms, keep each
+    * probe's `k` best (sim desc, c_id asc), and emit the (q_id, nn_rank,
+    * neighbor_id, cosine_sim) contract. The vectors are dropped before
+    * the per-probe window, so its exchange moves only narrow rows.
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.select(col("q_id"), col("c_id"), simExpr.as("sim"))
+      .withColumn("nn_rank", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id").asc)))
+      .filter(col("nn_rank") <= k)
+      .select(col("q_id"), col("nn_rank"), col("c_id").as("neighbor_id"),
+        round(col("sim"), 6).as("cosine_sim"))
+      .orderBy(col("q_id").asc, col("nn_rank").asc)
+
+  /** The probe slice (q_id, q_vec, q_norm) — filtered to
+    * `vec_id < nProbes` at the scan, so a broadcast of it never ships
+    * the corpus — and the corpus side (c_id, c_vec, c_norm).
+    */
+  private def probesAndCorpus(
+      spark: SparkSession, sfDir: String, nProbes: Int): (DataFrame, DataFrame) = {
+    val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
+    (emb.filter(col("vec_id") < nProbes).select(col("vec_id").as("q_id"),
+      col("embedding").as("q_vec"), col("__norm").as("q_norm")),
+      emb.select(col("vec_id").as("c_id"),
+        col("embedding").as("c_vec"), col("__norm").as("c_norm")))
+  }
+
+  /** Raw vectors for a (q_id, c_id) candidate list, ready for
+    * [[cosineTopK]]. The candidates joined to the probe slice are the
+    * BROADCAST side and the corpus streams past them: unhinted, Spark's
+    * size estimate broadcast the whole embeddings scan instead (a corpus
+    * collect through the driver, plans/r14/ann_recall_before.txt node
+    * 30); at 100 TB only the candidate side can ever ship.
+    */
+  private def fetchCandidates(
+      spark: SparkSession, sfDir: String, cands: DataFrame,
+      nProbes: Int): DataFrame = {
+    val (q, c) = probesAndCorpus(spark, sfDir, nProbes)
+    broadcast(cands.join(broadcast(q), Seq("q_id"))).join(c, Seq("c_id"))
+  }
+
   /** Exact top-k cosine neighbors for the first `nProbes` vectors.
     *
     * Scale shape: the probe side is tiny and broadcast; the corpus is
@@ -44,20 +93,9 @@ object Similarity {
     */
   def bruteForceTopK(
       spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame = {
-    val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
-    val probes = emb.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"), col("__norm").as("q_norm"))
-    val corpus = emb.select(
-      col("vec_id").as("c_id"), col("embedding").as("c_vec"), col("__norm").as("c_norm"))
-    broadcast(probes).crossJoin(corpus)
-      .filter(col("q_id") =!= col("c_id"))
-      .withColumn("sim", simExpr)
-      .withColumn("nn_rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id").asc)))
-      .filter(col("nn_rank") <= k)
-      .select(col("q_id"), col("nn_rank"), col("c_id").as("neighbor_id"),
-        round(col("sim"), 6).as("cosine_sim"))
-      .orderBy(col("q_id").asc, col("nn_rank").asc)
+    val (probes, corpus) = probesAndCorpus(spark, sfDir, nProbes)
+    cosineTopK(broadcast(probes).crossJoin(corpus)
+      .filter(col("q_id") =!= col("c_id")), k)
   }
 
   private[graft] val Bands = 8
@@ -117,8 +155,6 @@ object Similarity {
     */
   def lshTopK(
       spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame = {
-    val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), col("__norm"))
     // ONE lazy plan, probe-side BROADCAST, no persist (r14): the probe
     // leg's scan takes the `vec_id < nProbes` pushdown, so its signature
     // pass touches only nProbes vectors (≤ nProbes×Bands = 40 band rows
@@ -131,10 +167,8 @@ object Similarity {
     // materialized through the driver any more (the r13 driver pin
     // serialized this leg against its consumers' other legs — measured:
     // ann_recall/retrieval_metrics lost the brute∥LSH stage overlap);
-    // the rerank's corpus join is left UNHINTED so AQE broadcasts the
-    // post-distinct candidates off their true runtime size, and a
-    // band-bucket-collapsed degenerate corpus degrades to a distributed
-    // sort-merge join instead of refusing.
+    // the rerank fetch broadcasts the post-distinct candidates
+    // (`fetchCandidates`).
     val banded = bandSignatures(spark, sfDir)
     val candIds = banded
       .select(col("band_idx"), col("band_sig"), col("vec_id").as("c_id"))
@@ -143,37 +177,18 @@ object Similarity {
         Seq("band_idx", "band_sig"))
       .filter(col("q_id") =!= col("c_id"))
       .select("q_id", "c_id").distinct()
-    // the broadcast side must be the PROBE slice, never the raw corpus
-    // frame: candIds restricts q_id < nProbes anyway, but without the
-    // static filter Spark would ship every vector in the broadcast
-    // (review r12 — the bruteForceTopK pattern applied here)
-    val q = emb.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("q_id"),
-        col("embedding").as("q_vec"), col("__norm").as("q_norm"))
-    val c = emb.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_vec"), col("__norm").as("c_norm"))
-    // the broadcast side of the vector fetch must be the CANDIDATE list,
-    // never the corpus: unhinted, Spark's size estimate broadcast the
-    // whole embeddings scan (a corpus collect through the driver — the
-    // r13 LocalRelation shape had the same inversion,
-    // plans/r14/ann_recall_before.txt node 30); at 100 TB only the
-    // candidate side can ever ship
-    broadcast(candIds.join(broadcast(q), Seq("q_id"))).join(c, Seq("c_id"))
-      .withColumn("sim", simExpr)
-      .withColumn("nn_rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id").asc)))
-      .filter(col("nn_rank") <= k)
-      .select(col("q_id"), col("nn_rank"), col("c_id").as("neighbor_id"),
-        round(col("sim"), 6).as("cosine_sim"))
-      .orderBy(col("q_id").asc, col("nn_rank").asc)
+    cosineTopK(fetchCandidates(spark, sfDir, candIds, nProbes), k)
   }
 
   // ───────────────────────── IVF cell-layout artifact ──────────────────
-  // The registered ANN config. The maintained index artifact is built for
-  // exactly this shape; calls with other parameters take the live
-  // (scan-and-quantize) paths below, which define the semantics the
-  // artifact must reproduce bit-for-bit.
+  // The ANN config. The maintained index artifacts are built for exactly
+  // this shape, and every IVF / IVF-PQ search runs against them.
   private[graft] val IvfNCells = 16
+  private val IvfCellProbes = 4
+  private val IvfTrainIters = 5
+  /** ADC shortlist depth before the exact re-rank, as a multiple of k —
+    * see [[ivfPqRerankTopK]] for the measured recall-vs-depth curve. */
+  private val PqShortlistFactor = 24
 
   /** Version of the TRAINED-quantizer lineage: bump when
     * [[kmeansModelInt]]'s quantization/training changes. Shared by the
@@ -378,178 +393,86 @@ object Similarity {
     }
   }
 
-  /** (q_id, cell) probe routing computed AT THE DRIVER from the collected
-    * probe vectors and seed model — nProbes×nCells dot products of query
-    * planning, which is what turns the candidate retrieval into a STATIC
-    * `cell IN (...)` filter the bucketed scan can prune on (a join-derived
-    * cell set would defeat bucket pruning). Scores are [[dotFD]] folds and
-    * cells are the dot-space centroid-vec_id labels, bit-identical to the
-    * live explode-and-rank path (rank order equals vec_id order, so the
-    * index tie-break IS the cell-asc tie-break).
-    */
-  private def probeCells(
-      probes: Seq[(Long, Seq[Float])], sm: SeedModel,
-      cellProbes: Int): Seq[(Long, Long)] =
-    probes.flatMap { case (qid, qv) =>
-      (0 until sm.size)
-        .map(i => (dotFD(qv, sm.unitVec(i)), i))
-        .sortBy { case (s, i) => (-s, i) }
-        .take(cellProbes)
-        .map { case (_, i) => (qid, sm.ids(i)) }
-    }
+  /** Probes routed into an IVF index: (q_id, embedding, norm) per probe,
+    * and their candidates — every other index row in a probe's routed
+    * cells, with the probe's `q_id` beside the index columns. */
+  private case class ProbeRoute(
+      probes: Seq[(Long, Seq[Float], Double)], candidates: DataFrame)
 
-  /** Bounded probe fetch from the index: nProbes rows of
-    * (vec_id, embedding, norm). */
-  private def collectProbes(
-      index: DataFrame, nProbes: Int): Seq[(Long, Seq[Float], Double)] =
-    index.filter(col("vec_id") < nProbes)
+  /** An IVF search's driver-side prelude, shared by the seeded, trained
+    * and PQ searches: the first `nProbes` vectors fetched off `index`
+    * (a bounded nProbes-row collect), each routed to its
+    * [[IvfCellProbes]] best cells by [[dotFD]] against the unit centroids
+    * `cells` (cell label → unit vector, in label order, so the index
+    * tie-break IS the cell-asc tie-break), and the candidates read off
+    * `index` pruned to the routed cells. Routing at the driver is what
+    * turns candidate retrieval into a STATIC `cell IN (...)` filter the
+    * bucketed scan can prune on (a join-derived cell set would defeat
+    * bucket pruning). The candidates are ONE broadcast equi-join against
+    * the pruned index — a vector lives in exactly one cell and the routed
+    * (q_id, cell) rows are unique, so (q_id, vec_id) pairs cannot
+    * duplicate: no `distinct`, no candidate-id re-join (each of those was
+    * a full candidate-set shuffle, the second one carrying vector
+    * payloads — tier N measured the pair costing ~2× the whole search at
+    * 200k vectors).
+    */
+  private def routeProbes(
+      spark: SparkSession, index: DataFrame, nProbes: Int,
+      cells: IndexedSeq[(Long, Array[Double])]): ProbeRoute = {
+    val sp = spark; import sp.implicits._
+    val probes = index.filter(col("vec_id") < nProbes)
       .select(col("vec_id"), col("embedding"), col("norm"))
       .collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq, r.getDouble(2)))
+    val routed = probes.flatMap { case (qid, qv, _) =>
+      cells.indices
+        .map(i => (dotFD(qv, cells(i)._2), i))
+        .sortBy { case (s, i) => (-s, i) }
+        .take(IvfCellProbes)
+        .map { case (_, i) => (qid, cells(i)._1) }
+    }
+    val wanted = routed.map(_._2).distinct.sorted
+    ProbeRoute(probes, broadcast(routed.toDF("q_id", "cell"))
+      .join(index.filter(col("cell").isin(wanted: _*)), Seq("cell"))
+      .filter(col("q_id") =!= col("vec_id")))
+  }
+
+  /** The seed quantizer's cells for [[routeProbes]]: centroid vec_id →
+    * unit centroid. */
+  private def seedCells(sm: SeedModel): IndexedSeq[(Long, Array[Double])] =
+    (0 until sm.size).map(i => (sm.ids(i), sm.unitVec(i)))
+
+  /** Exact-cosine search of routed probes' candidates; norms and
+    * vectors come straight off the index. */
+  private def prunedProbeTopK(
+      spark: SparkSession, route: ProbeRoute, k: Int): DataFrame = {
+    val sp = spark; import sp.implicits._
+    val q = route.probes.toDF("q_id", "q_vec", "q_norm")
+    cosineTopK(route.candidates
+      .select(col("q_id"), col("vec_id").as("c_id"),
+        col("embedding").as("c_vec"), col("norm").as("c_norm"))
+      .join(broadcast(q), Seq("q_id")), k)
+  }
 
   /** IVF (inverted-file) approximate top-k — the FAISS-style scale path
     * complementing the hyperplane-LSH variant: a tiny coarse quantizer
-    * partitions the corpus into cells; queries search only their
-    * `cellProbes` nearest cells.
+    * (the [[IvfNCells]] lowest-id vectors) partitions the corpus into
+    * cells; queries search only their [[IvfCellProbes]] nearest cells.
     *
-    * At the registered config the search runs against the MAINTAINED
-    * [[ivfCellIndex]] artifact: probe routing is driver-side query
-    * planning (nProbes×nCells dots), candidates come from a bucket-PRUNED
-    * scan of only the probed cells' buckets, and the exact re-rank reads
-    * norms/vectors straight off the index — `embeddings.parquet` is never
-    * touched. Other configs take the live scan-and-quantize path whose
-    * results the artifact reproduces bit-for-bit.
+    * The search runs against the MAINTAINED [[ivfCellIndex]] artifact:
+    * probe routing is driver-side query planning (nProbes×nCells dots),
+    * candidates come from a bucket-PRUNED scan of only the probed cells'
+    * buckets, and the exact re-rank reads norms/vectors straight off the
+    * index — `embeddings.parquet` is never touched.
     *
     * Recall < 1 by design (property-tested vs brute force).
     */
-  /** Shared tail of the artifact-backed IVF searches: probes already
-    * routed (driver-side), candidates from the bucket-pruned scan of the
-    * probed cells. ONE broadcast equi-join against the pruned index —
-    * a vector lives in exactly one cell and the routed (q_id, cell) rows
-    * are unique, so (q_id, c_id) pairs cannot duplicate: no `distinct`,
-    * no candidate-id re-join (each of those was a full candidate-set
-    * shuffle, the second one carrying vector payloads — tier N measured
-    * the pair costing ~2× the whole search at 200k vectors). The vector
-    * columns are dropped BEFORE the per-probe top-k window, so the only
-    * data exchange moves narrow (q_id, c_id, sim) rows.
-    */
-  private def prunedProbeTopK(
-      spark: SparkSession, index: DataFrame,
-      probes: Seq[(Long, Seq[Float], Double)], routed: Seq[(Long, Long)],
-      k: Int): DataFrame = {
-    val sp = spark; import sp.implicits._
-    val wanted = routed.map(_._2).distinct.sorted
-    val qcells = routed.toDF("q_id", "cell")
-    val pruned = index.filter(col("cell").isin(wanted: _*))
-    val q = probes.toDF("q_id", "q_vec", "q_norm")
-    broadcast(qcells).join(pruned, Seq("cell"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("c_id"),
-        col("embedding").as("c_vec"), col("norm").as("c_norm"))
-      .join(broadcast(q), Seq("q_id"))
-      .withColumn("sim", simExpr)
-      .select(col("q_id"), col("c_id"), col("sim"))
-      .withColumn("nn_rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id").asc)))
-      .filter(col("nn_rank") <= k)
-      .select(col("q_id"), col("nn_rank"), col("c_id").as("neighbor_id"),
-        round(col("sim"), 6).as("cosine_sim"))
-      .orderBy(col("q_id").asc, col("nn_rank").asc)
-  }
-
   def ivfTopK(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5,
-      nCells: Int = 16, cellProbes: Int = 4): DataFrame = {
-    if (nCells == IvfNCells) {
-      val index = ivfCellIndex(spark, sfDir)
-      val sm = collectSeeds(
-        index.select(col("vec_id"), col("embedding"), col("norm")), nCells)
-      val probes = collectProbes(index, nProbes)
-      val routed = probeCells(probes.map(p => (p._1, p._2)), sm, cellProbes)
-      prunedProbeTopK(spark, index, probes, routed, k)
-    } else ivfTopKLive(spark, sfDir, nProbes, k, nCells, cellProbes)
-  }
-
-  /** The index-free IVF search (scan + quantize per call) — the semantics
-    * [[ivfCellIndex]] must reproduce, and the path for ad-hoc quantizer
-    * configs no maintained artifact covers.
-    */
-  private def ivfTopKLive(
-      spark: SparkSession, sfDir: String, nProbes: Int, k: Int,
-      nCells: Int, cellProbes: Int): DataFrame = {
-    val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), col("__norm"))
-    // coarse quantizer: the nCells lowest-ID vectors (orderBy + limit, so
-    // the contract holds for sparse or non-zero-based id spaces too),
-    // unit-normalized at the driver so cell score = graft_dot(embedding,
-    // centroid) ranks by cosine.
-    val centroids: Seq[(Long, String)] = emb
-      .select(col("vec_id"), col("embedding"), col("__norm"))
-      .orderBy(col("vec_id").asc).limit(nCells)
-      .collect().toSeq
-      .map { r =>
-        val id = r.getLong(0)
-        val nrm = r.getDouble(2)
-        val lit = r.getSeq[Float](1)
-          .map(v => (v / nrm).toString + "D").mkString("array(", ",", ")")
-        (id, lit)
-      }
-    ivfSearchWithCentroids(spark, sfDir, centroids, nProbes, k, cellProbes)
-  }
-
-  /** The IVF search body under an arbitrary UNIT-centroid model (plan-time
-    * array literals, labeled by cell id): quantize the corpus, route each
-    * probe to its `cellProbes` best cells, exact-cosine-rerank the probed
-    * cells' members. Shared by the ad-hoc seeded live path and the
-    * TRAINED-quantizer search — the model is the only difference.
-    */
-  private def ivfSearchWithCentroids(
-      spark: SparkSession, sfDir: String, centroids: Seq[(Long, String)],
-      nProbes: Int, k: Int, cellProbes: Int): DataFrame = {
-    GraftFunctions.register(spark)
-    val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), col("__norm"))
-    val cellScores = centroids.map { case (cid, c) =>
-      struct(expr(s"graft_dot(embedding, $c)").as("s"), lit(-cid).as("negid"))
-    }
-    // 1 cell per corpus vector: argmax score, smallest cell id on ties
-    val assigned = emb.withColumn("cell", -greatest(cellScores: _*).getField("negid"))
-    // probes fan out to their cellProbes best cells (explode + rank)
-    val exploded = emb.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("q_id"),
-        explode(array(centroids.map { case (cid, c) =>
-          struct(lit(cid).as("cell"), expr(s"graft_dot(embedding, $c)").as("s"))
-        }: _*)).as("cs"))
-      .select(col("q_id"), col("cs.cell").as("cell"), col("cs.s").as("s"))
-    val topCells = exploded
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("s").desc, col("cell").asc)))
-      .filter(col("rk") <= cellProbes)
-      .select("q_id", "cell")
-    // the cell fan-out streams the ASSIGNED corpus through a broadcast of
-    // the ≤ nProbes×cellProbes probe-cell rows (r14; unhinted, the size
-    // estimate could invert this at any SF where the corpus scan looks
-    // small)
-    val candIds = assigned.select(col("cell"), col("vec_id").as("c_id"))
-      .join(broadcast(topCells), Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select("q_id", "c_id").distinct()
-    // probe-slice broadcast, never the raw corpus frame (the lshTopK fix)
-    val q = emb.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("q_id"),
-        col("embedding").as("q_vec"), col("__norm").as("q_norm"))
-    val c = emb.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_vec"), col("__norm").as("c_norm"))
-    // candidate side broadcast, corpus streamed (same inversion fix as
-    // the lshTopK tail)
-    broadcast(candIds.join(broadcast(q), Seq("q_id"))).join(c, Seq("c_id"))
-      .withColumn("sim", simExpr)
-      .withColumn("nn_rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id").asc)))
-      .filter(col("nn_rank") <= k)
-      .select(col("q_id"), col("nn_rank"), col("c_id").as("neighbor_id"),
-        round(col("sim"), 6).as("cosine_sim"))
-      .orderBy(col("q_id").asc, col("nn_rank").asc)
+      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame = {
+    val index = ivfCellIndex(spark, sfDir)
+    val sm = collectSeeds(
+      index.select(col("vec_id"), col("embedding"), col("norm")), IvfNCells)
+    prunedProbeTopK(spark, routeProbes(spark, index, nProbes, seedCells(sm)), k)
   }
 
   /** Embedding-space near-duplicate pairs, exact all-pairs formulation
@@ -934,15 +857,6 @@ object Similarity {
     } finally { xq.unpersist(); () }
   }
 
-  /** IVF search against the TRAINED quantizer ([[kmeansModelInt]]) — the
-    * registered `knn_ivf_trained`: same search shape as [[ivfTopK]], but
-    * the cells come from k Lloyd iterations instead of the raw lowest-id
-    * seeds, which is what a production deployment runs (seeds are only the
-    * oracle-friendly degenerate case; on clustered real data the trained
-    * cells bound candidate sets far better). Cells are labeled by training
-    * rank; the exactly-reproducible trainer means this query hash-checks
-    * against a DuckDB twin that replays all `iters` rounds relationally.
-    */
   /** The trained quantizer as a MAINTAINED MODEL ARTIFACT: (cell, pos,
     * micro-unit component) rows — k·dim total — via
     * [[graft.ops.Layout.ensureDerived]]. Training runs once per corpus
@@ -954,13 +868,12 @@ object Similarity {
     * refresh would diverge from it) — any census change rebuilds.
     */
   private def trainedModelArtifact(
-      spark: SparkSession, sfDir: String, nCells: Int,
-      iters: Int): IndexedSeq[Array[Long]] = {
+      spark: SparkSession, sfDir: String): IndexedSeq[Array[Long]] = {
     val sp = spark; import sp.implicits._
     val rows = graft.ops.Layout.ensureDerived(
       spark, sfDir, s"ivf_model", Seq("embeddings.parquet"),
       key = "cell", buckets = 4, version = IvfModelVersion) {
-      kmeansModelInt(spark, sfDir, nCells, iters).zipWithIndex.flatMap {
+      kmeansModelInt(spark, sfDir, IvfNCells, IvfTrainIters).zipWithIndex.flatMap {
         case (c, cell) => c.zipWithIndex.map { case (v, pos) =>
           (cell.toLong, pos, v)
         }
@@ -977,8 +890,8 @@ object Similarity {
 
   /** Unit-normalized trained centroids as driver doubles — the same
     * `v / ‖c‖` values the expr()-literal form round-trips (Double
-    * toString is exact), shared by the artifact derive, the driver-side
-    * probe routing, and the live fallback path.
+    * toString is exact), shared by the artifact derive and the
+    * driver-side probe routing.
     */
   private def trainedUnits(model: IndexedSeq[Array[Long]]): IndexedSeq[Array[Double]] =
     model.map { c =>
@@ -1006,7 +919,7 @@ object Similarity {
       // census would otherwise serve the OLD model's bucketing to probes
       // routed with the NEW model's units — silent wrong-cell scans
       key = "cell", buckets = 32, version = IvfModelVersion) {
-      val units = trainedUnits(trainedModelArtifact(spark, sfDir, IvfNCells, 5))
+      val units = trainedUnits(trainedModelArtifact(spark, sfDir))
       val gdot = GraftFunctions.dot _
       val cellScores = units.zipWithIndex.map { case (u, i) =>
         struct(gdot(col("embedding"), lit(u)).as("s"),
@@ -1020,37 +933,23 @@ object Similarity {
     }
   }
 
+  /** IVF search against the TRAINED quantizer ([[kmeansModelInt]]) — the
+    * registered `knn_ivf_trained`: same search shape as [[ivfTopK]], but
+    * the cells come from [[IvfTrainIters]] Lloyd iterations instead of the
+    * raw lowest-id seeds, which is what a production deployment runs
+    * (seeds are only the oracle-friendly degenerate case; on clustered
+    * real data the trained cells bound candidate sets far better). Cells
+    * are labeled by training rank; the exactly-reproducible trainer means
+    * this query hash-checks against a DuckDB twin that replays every
+    * round relationally. Candidates come from a bucket-PRUNED scan of the
+    * maintained [[ivfCellIndexTrained]].
+    */
   def ivfTopKTrained(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5,
-      nCells: Int = 16, iters: Int = 5, cellProbes: Int = 4): DataFrame = {
-    if (nCells == IvfNCells && iters == 5) {
-      // artifact path: probe routing is driver-side query planning
-      // (nProbes×nCells dotFD folds — bit-identical to the live explode
-      // + rank, whose rank order equals the cell-asc tie-break), and
-      // candidates come from a bucket-PRUNED scan of the maintained
-      // trained index — the exact [[ivfTopK]] shape
-      val units = trainedUnits(trainedModelArtifact(spark, sfDir, nCells, iters))
-      val index = ivfCellIndexTrained(spark, sfDir)
-      val probes = collectProbes(index, nProbes)
-      val routed = probes.flatMap { case (qid, qv, _) =>
-        units.zipWithIndex
-          .map { case (u, i) => (dotFD(qv, u), i) }
-          .sortBy { case (s, i) => (-s, i) }
-          .take(cellProbes)
-          .map { case (_, i) => (qid, i.toLong) }
-      }
-      prunedProbeTopK(spark, index, probes, routed, k)
-    } else {
-      // live fallback for ad-hoc quantizer configs — the semantics the
-      // artifact must reproduce bit-for-bit
-      val model = kmeansModelInt(spark, sfDir, nCells, iters)
-      val centroids: Seq[(Long, String)] = model.zipWithIndex.map { case (c, i) =>
-        val n = math.sqrt(c.map(v => v * v).sum.toDouble)
-        (i.toLong,
-          c.map(v => (v / n).toString + "D").mkString("array(", ",", ")"))
-      }
-      ivfSearchWithCentroids(spark, sfDir, centroids, nProbes, k, cellProbes)
-    }
+      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame = {
+    val units = trainedUnits(trainedModelArtifact(spark, sfDir))
+    val index = ivfCellIndexTrained(spark, sfDir)
+    prunedProbeTopK(spark, routeProbes(spark, index, nProbes,
+      units.indices.map(i => (i.toLong, units(i)))), k)
   }
 
   /** Per-cell size + cohesion summary of the TRAINED integer quantizer —
@@ -1074,7 +973,7 @@ object Similarity {
       spark: SparkSession, sfDir: String, k: Int = 16, iters: Int = 5): DataFrame = {
     GraftFunctions.register(spark)
     val model =
-      if (k == IvfNCells && iters == 5) trainedModelArtifact(spark, sfDir, k, iters)
+      if (k == IvfNCells && iters == IvfTrainIters) trainedModelArtifact(spark, sfDir)
       else kmeansModelInt(spark, sfDir, k, iters)
     val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
     val xq = emb.select(col("vec_id"), expr(
@@ -1264,126 +1163,24 @@ object Similarity {
       .orderBy(col("label").asc)
   }
 
-  /** Recall@k of the LSH approximate top-k against the brute-force exact
-    * top-k, per probe — THE quality metric an ANN deployment tracks (a
-    * bucketing change that silently drops recall is worse than a slow
-    * index). Output is integers plus one exact division, oracle-checked
-    * end-to-end through BOTH retrieval paths.
+  /** Recall@k of an approximate retrieval against the brute-force exact
+    * top-k ([[bruteForceTopK]]), per probe — THE quality metric an ANN
+    * deployment tracks (a bucketing change that silently drops recall is
+    * worse than a slow index). Output is integers plus one exact
+    * division, oracle-checked end-to-end through BOTH retrieval paths.
+    * One harness for every leg: `annRecall(s, d, Similarity.ivfTopK)`
+    * audits the seeded IVF index, [[ivfPqTopK]] measures cell pruning
+    * and PQ distortion at once, [[ivfTopKTrained]] the Lloyd trainer,
+    * and [[ivfPqRerankTopK]] what the re-rank tier recovers.
     *
-    * Scale shape: both sides are bounded (nProbes × k rows); the expensive
-    * parts are the underlying retrievals themselves, which keep their own
-    * documented shapes. In production this runs on a sampled probe set —
-    * recall is an estimate, the sample IS the method.
+    * Scale shape: both sides are bounded (nProbes × k rows); the
+    * expensive parts are the underlying retrievals themselves, which keep
+    * their own documented shapes. In production this runs on a sampled
+    * probe set — recall is an estimate, the sample IS the method.
     */
   def annRecall(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame =
-    recallVsBrute(spark, sfDir, lshTopK(spark, sfDir, nProbes, k), nProbes, k)
-
-  /** Recall@k of the IVF coarse-quantizer retrieval ([[ivfTopK]]) against
-    * the same brute-force truth set — the production-shaped index path
-    * gets the same audited quality metric as the LSH leg, so a quantizer
-    * or cell-probe regression shows up as a hash change here.
-    */
-  def annRecallIvf(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame =
-    recallVsBrute(spark, sfDir, ivfTopK(spark, sfDir, nProbes, k), nProbes, k)
-
-  /** Recall@k of the compressed-domain IVF-PQ retrieval ([[ivfPqTopK]])
-    * against the brute truth — measures BOTH losses at once (cell pruning
-    * + PQ distance distortion), the number that decides whether 4-byte
-    * codes are deployable for a given corpus.
-    */
-  def annRecallIvfPq(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame =
-    recallVsBrute(spark, sfDir, ivfPqTopK(spark, sfDir, nProbes, k), nProbes, k)
-
-  /** Recall@k of the TRAINED-quantizer IVF retrieval ([[ivfTopKTrained]])
-    * against the brute truth — completes the recall audit across all
-    * four retrieval paths (LSH, seeded IVF, trained IVF, IVF-PQ): a
-    * Lloyd-trainer regression now shows up as a recall hash change, not
-    * just a neighbor-list change.
-    */
-  def annRecallIvfTrained(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame =
-    recallVsBrute(spark, sfDir, ivfTopKTrained(spark, sfDir, nProbes, k),
-      nProbes, k)
-
-  /** ADC shortlist → EXACT re-rank: the deployable compressed-domain
-    * retrieval pattern the raw [[annRecallIvfPq]] number (0.40 at 4-byte
-    * codes) motivates. Stage 1 runs [[ivfPqTopK]] for a shortlist of
-    * `shortlistFactor`×k candidates — the corpus side touches only PQ
-    * codes (4 bytes/vector), never raw embeddings. Stage 2 fetches raw
-    * vectors for ONLY the shortlist ids (nProbes × shortlistFactor × k
-    * rows — a broadcast-keyed point lookup at any corpus size) and
-    * re-ranks by exact cosine, so PQ distance distortion can only cost
-    * recall when a true neighbor misses the shortlist entirely, not when
-    * it is merely mis-ordered inside it.
-    *
-    * Output matches [[bruteForceTopK]]'s contract (q_id, nn_rank,
-    * neighbor_id, cosine_sim) — downstream consumers cannot tell the
-    * compressed index was involved.
-    *
-    * Scale shape: stage 1 keeps [[ivfPqTopK]]'s bucket-pruned artifact
-    * scan; stage 2 is one broadcast semi-shaped join against the
-    * embeddings table keyed on vec_id. At 100 TB the shortlist fetch is
-    * the textbook "re-rank tier": O(probes × shortlist) vector reads
-    * regardless of corpus size.
-    *
-    * Shortlist depth scales with CODE COARSENESS, not with k alone: at
-    * production code sizes (8–16 subspaces × 256 codes = 64–128
-    * bits/vector) the usual 4–8×k suffices; this corpus's deliberately
-    * tiny 16-bit codes (4×16, chosen so the twin stays tractable) need a
-    * wider window. Measured recall@5 vs depth at sf0.01: 4×k → 0.52,
-    * 8×k → 0.76, 16×k → 0.88, 24×k → 0.92 — SATURATING at exactly
-    * [[annRecallIvf]]'s 0.92 (the shared cell-pruning bound), which is
-    * the designed behavior: past the distortion window, re-rank recall
-    * equals candidate-set recall and the 4-byte codes cost nothing.
-    * Default 24×k registers the saturated point.
-    */
-  def ivfPqRerankTopK(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5,
-      shortlistFactor: Int = 24): DataFrame = {
-    val shortlist = ivfPqTopK(spark, sfDir, nProbes, k * shortlistFactor)
-      .select(col("q_id"), col("neighbor_id").as("c_id"))
-    val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
-    val probes = emb.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"),
-        col("__norm").as("q_norm"))
-    val corpus = emb.select(col("vec_id").as("c_id"),
-      col("embedding").as("c_vec"), col("__norm").as("c_norm"))
-    broadcast(shortlist)
-      .join(corpus, Seq("c_id")) // raw vectors read for shortlist ids only
-      .join(broadcast(probes), Seq("q_id"))
-      .withColumn("sim", simExpr)
-      .withColumn("nn_rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("sim").desc, col("c_id").asc)))
-      .filter(col("nn_rank") <= k)
-      .select(col("q_id"), col("nn_rank"), col("c_id").as("neighbor_id"),
-        round(col("sim"), 6).as("cosine_sim"))
-      .orderBy(col("q_id").asc, col("nn_rank").asc)
-  }
-
-  /** Recall@k of the shortlist→re-rank retrieval ([[ivfPqRerankTopK]])
-    * against the brute truth — the number that shows the re-rank tier
-    * recovering the recall the raw ADC row gives up: bounded above by
-    * the IVF candidate-set recall (cell pruning is shared), it should
-    * sit at or near [[annRecallIvf]]'s level, far above
-    * [[annRecallIvfPq]]'s.
-    */
-  def annRecallIvfPqRerank(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame =
-    recallVsBrute(spark, sfDir, ivfPqRerankTopK(spark, sfDir, nProbes, k),
-      nProbes, k)
-
-  /** Shared recall kernel: left-join the approximate list onto the exact
-    * cosine top-k ([[bruteForceTopK]]) and count hits per probe. Both
-    * sides are bounded (nProbes × k rows); the expensive parts are the
-    * retrievals themselves, which keep their own documented shapes.
-    */
-  private def recallVsBrute(
-      spark: SparkSession, sfDir: String, approx: DataFrame,
-      nProbes: Int, k: Int): DataFrame = {
+      spark: SparkSession, sfDir: String, retrieve: Retrieval,
+      nProbes: Int = 5, k: Int = 5): DataFrame = {
     // approx leg BROADCAST (bounded by construction: ≤ nProbes×k rows) —
     // the r13 plan paid a SortMergeJoin with an Exchange+Sort on EACH
     // ≤25-row side (plans/r14/ann_recall_before.txt nodes 18/19 + 41/42);
@@ -1393,7 +1190,7 @@ object Similarity {
     // measured SLOWER by exactly the lost overlap)
     val exact = bruteForceTopK(spark, sfDir, nProbes, k)
       .select(col("q_id"), col("neighbor_id"))
-    val hits = broadcast(approx
+    val hits = broadcast(retrieve(spark, sfDir, nProbes, k)
       .select(col("q_id"), col("neighbor_id"), lit(1L).as("__hit")))
     exact.join(hits, Seq("q_id", "neighbor_id"), "left")
       .groupBy(col("q_id"))
@@ -1404,13 +1201,55 @@ object Similarity {
       .orderBy(col("q_id").asc)
   }
 
-  /** Rank-quality evaluation of the ANN retrieval beyond [[annRecall]]'s
-    * set recall: per probe, MRR (reciprocal rank of the first true
-    * neighbor in the LSH list) and average precision at k (AP — the
-    * area-under-PR summary IR evaluation standardizes on), with the
-    * exact cosine top-k as the binary relevance set. Recall says how
-    * many true neighbors surfaced; MRR/AP say how EARLY — the quantity
-    * that decides whether a downstream re-ranker ever sees them.
+  /** ADC shortlist → EXACT re-rank: the deployable compressed-domain
+    * retrieval pattern the raw [[ivfPqTopK]] recall (0.40 at 4-byte
+    * codes) motivates. Stage 1 runs [[ivfPqTopK]] for a shortlist of
+    * [[PqShortlistFactor]]×k candidates — the corpus side touches only PQ
+    * codes (4 bytes/vector), never raw embeddings. Stage 2 fetches raw
+    * vectors for ONLY the shortlist ids (nProbes × shortlist rows — a
+    * broadcast-keyed point lookup at any corpus size) and re-ranks by
+    * exact cosine, so PQ distance distortion can only cost recall when a
+    * true neighbor misses the shortlist entirely, not when it is merely
+    * mis-ordered inside it.
+    *
+    * Output matches [[bruteForceTopK]]'s contract (q_id, nn_rank,
+    * neighbor_id, cosine_sim) — downstream consumers cannot tell the
+    * compressed index was involved.
+    *
+    * Scale shape: stage 1 keeps [[ivfPqTopK]]'s bucket-pruned artifact
+    * scan; stage 2 is [[fetchCandidates]]' broadcast of the shortlist
+    * against the streamed embeddings table. At 100 TB the shortlist fetch
+    * is the textbook "re-rank tier": O(probes × shortlist) vector reads
+    * regardless of corpus size.
+    *
+    * Shortlist depth scales with CODE COARSENESS, not with k alone: at
+    * production code sizes (8–16 subspaces × 256 codes = 64–128
+    * bits/vector) the usual 4–8×k suffices; this corpus's deliberately
+    * tiny 16-bit codes (4×16, chosen so the twin stays tractable) need a
+    * wider window. Measured recall@5 vs depth at sf0.01: 4×k → 0.52,
+    * 8×k → 0.76, 16×k → 0.88, 24×k → 0.92 — SATURATING at exactly the
+    * seeded IVF recall of 0.92 (the shared cell-pruning bound), which is
+    * the designed behavior: past the distortion window, re-rank recall
+    * equals candidate-set recall and the 4-byte codes cost nothing. The
+    * 24×k depth registers the saturated point.
+    */
+  def ivfPqRerankTopK(
+      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame = {
+    val shortlist = ivfPqTopK(spark, sfDir, nProbes, k * PqShortlistFactor)
+      .select(col("q_id"), col("neighbor_id").as("c_id"))
+    cosineTopK(fetchCandidates(spark, sfDir, shortlist, nProbes), k)
+  }
+
+  /** Rank-quality evaluation of an approximate retrieval beyond
+    * [[annRecall]]'s set recall: per probe, MRR (reciprocal rank of the
+    * first true neighbor in the retrieved list) and average precision at
+    * k (AP — the area-under-PR summary IR evaluation standardizes on),
+    * with the exact cosine top-k as the binary relevance set. Recall says
+    * how many true neighbors surfaced; MRR/AP say how EARLY — the
+    * quantity that decides whether a downstream re-ranker ever sees
+    * them. For [[ivfPqRerankTopK]], whose stage 2 re-orders the
+    * shortlist by exact cosine, these measure ONLY what the candidate
+    * set missed, so they sit at the [[ivfTopK]] leg's level.
     *
     * Cross-engine exactness: both metrics are LOG-FREE rationals —
     * precision terms hits@r / r are divides of small integers, each
@@ -1420,41 +1259,13 @@ object Similarity {
     * libm log2 is not guaranteed bit-identical across engines, AP
     * carries the same ordering signal exactly.
     *
-    * Scale shape: the two retrieval legs are the already-bounded
-    * [[bruteForceTopK]]/[[lshTopK]] probe frames (≤ nProbes·k rows
-    * each); everything after is arithmetic on their join.
+    * Scale shape: the two retrieval legs are bounded probe frames
+    * (≤ nProbes·k rows each); everything after is arithmetic on their
+    * join.
     */
   def retrievalMetrics(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame =
-    retrievalMetricsVsBrute(spark, sfDir,
-      lshTopK(spark, sfDir, nProbes, k), nProbes, k)
-
-  /** [[retrievalMetrics]] for the production IVF leg — MRR/AP of
-    * [[ivfTopK]]'s list against the same brute relevance set, so the
-    * bucket-pruned index path carries the full rank-quality audit, not
-    * just set recall ([[annRecallIvf]]).
-    */
-  def retrievalMetricsIvf(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame =
-    retrievalMetricsVsBrute(spark, sfDir,
-      ivfTopK(spark, sfDir, nProbes, k), nProbes, k)
-
-  /** [[retrievalMetrics]] for the DEPLOYABLE shortlist→re-rank tier —
-    * MRR/AP of [[ivfPqRerankTopK]]'s list against the same brute
-    * relevance set, completing the rank-quality audit across all three
-    * retrieval legs (r11 verdict, Missing #3: the rerank tier had a
-    * recall row but no MRR/AP row). Because stage 2 re-orders the
-    * shortlist by exact cosine, these metrics measure ONLY what the
-    * candidate set missed, so they should sit at the IVF leg's level.
-    */
-  def retrievalMetricsIvfPqRerank(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame =
-    retrievalMetricsVsBrute(spark, sfDir,
-      ivfPqRerankTopK(spark, sfDir, nProbes, k), nProbes, k)
-
-  private def retrievalMetricsVsBrute(
-      spark: SparkSession, sfDir: String, approxList: DataFrame,
-      nProbes: Int, k: Int): DataFrame = {
+      spark: SparkSession, sfDir: String, retrieve: Retrieval,
+      nProbes: Int = 5, k: Int = 5): DataFrame = {
     // truth leg stays LAZY but BROADCAST at both uses: the two `exact`
     // references share the brute subtree's inner q_id Exchange via
     // ReuseExchange (one corpus pass), and the broadcast builds overlap
@@ -1462,7 +1273,7 @@ object Similarity {
     // measured SLOWER by the lost overlap)
     val exact = bruteForceTopK(spark, sfDir, nProbes, k)
       .select(col("q_id"), col("neighbor_id"), lit(1L).as("__rel"))
-    val approx = approxList
+    val approx = retrieve(spark, sfDir, nProbes, k)
       .select(col("q_id"), col("nn_rank"), col("neighbor_id"))
     val marked = approx.join(broadcast(exact), Seq("q_id", "neighbor_id"), "left")
       .withColumn("rel", coalesce(col("__rel"), lit(0L)))
@@ -1477,7 +1288,7 @@ object Similarity {
       sum(col("rel")).as("n_hits"),
       min(when(col("rel") === 1L, col("nn_rank"))).as("__first"),
       sum(col("__prec")).as("__ap_sum"))
-    // probes with an EMPTY LSH list (no band collision at all) still
+    // probes with an EMPTY retrieved list (e.g. no LSH band collision) still
     // belong in the report, scored zero
     exact.select(col("q_id")).distinct()
       .join(broadcast(agg), Seq("q_id"), "left")
@@ -1489,36 +1300,23 @@ object Similarity {
       .orderBy(col("q_id").asc)
   }
 
-  /** Product-quantization codes — the compression half of an IVF-PQ index:
-    * each embedding split into `subspaces` contiguous sub-vectors, each
-    * sub-vector replaced by the id of its nearest codebook centroid
-    * (squared-L2 argmin, ties to the smallest code). 64 dims × 4 bytes
-    * become `subspaces` bytes — the difference between an ANN index that
-    * fits executor memory at 10⁹ vectors and one that doesn't.
-    *
-    * Codebooks here are seeded from the `codebookSize` lowest-id vectors'
-    * sub-vectors (deterministic; production would k-means-refine each
-    * subspace — [[kmeansCells]] shows that loop). The driver collects only
-    * the seed rows (a bounded model fetch, the IVF pattern) and embeds
-    * them as plan literals, so cell assignment is a pure narrow map stage:
-    * no shuffle, no join, corpus scanned once.
-    *
-    * Cross-engine exactness: squared L2 enters as `c·c − 2·x·c` (the ‖x‖²
-    * term is constant per sub-vector and cannot change the argmin, so both
-    * sides drop it); every dot is the same sequential fold the knn twins
-    * already match bit-for-bit, and only the integer codes are emitted.
-    */
   /** IVF-PQ top-k — the COMPRESSED-DOMAIN ANN path, completing the triad
-    * after [[bruteTopK]] (exact), [[lshTopK]]/[[ivfTopK]] (pruned exact):
-    * candidates come from the IVF coarse cells exactly as in [[ivfTopK]],
-    * but ranking runs on PQ CODES via asymmetric distance (ADC) — each
-    * candidate contributes only its `subspaces` byte-sized code ids, and
-    * the estimated squared L2 distance is the sum of per-subspace
-    * ||q_m − c_{code_m}||² lookups against the codebook literals. At
-    * 100 TB this is THE deployable shape: the raw vectors never join the
-    * search (4 bytes/vector here instead of 256), the per-candidate work
-    * is a codegen'd case-when over codebook-literal dot products, and
-    * exact re-ranking (if wanted) touches only the final k ids.
+    * after [[bruteForceTopK]] (exact), [[lshTopK]]/[[ivfTopK]] (pruned
+    * exact): candidates come from the IVF coarse cells exactly as in
+    * [[ivfTopK]], but ranking runs on PQ CODES via asymmetric distance
+    * (ADC) — each candidate contributes only its [[PqSubspaces]]
+    * byte-sized code ids, and the estimated squared L2 distance is the
+    * sum of per-subspace ||q_m − c_{code_m}||² lookups against the
+    * codebook literals. At 100 TB this is THE deployable shape: the raw
+    * vectors never join the search (4 bytes/vector here instead of 256),
+    * the per-candidate work is a codegen'd lookup over codebook-literal
+    * dot products, and exact re-ranking ([[ivfPqRerankTopK]]) touches
+    * only a shortlist.
+    *
+    * Candidates' PQ codes and cells come off the bucket-pruned
+    * [[ivfCellIndex]] scan — per candidate the search reads 1 +
+    * [[PqSubspaces]] small ids, never the raw vector; probe routing is
+    * driver-side planning exactly as in [[ivfTopK]].
     *
     * Oracle-exact: codebooks/centroids are the deterministic lowest-id
     * seeds ([[pqCodes]]/[[ivfTopK]] contracts); every distance is the
@@ -1526,124 +1324,32 @@ object Similarity {
     * with `list_inner_product`; ADC ties break on candidate id.
     */
   def ivfPqTopK(
-      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5,
-      nCells: Int = 16, cellProbes: Int = 4,
-      subspaces: Int = 4, codebookSize: Int = 16): DataFrame = {
-    if (nCells == IvfNCells && subspaces == PqSubspaces &&
-      codebookSize == PqCodebookSize) {
-      // Artifact-backed ADC: candidates' PQ codes and cells come off the
-      // bucket-pruned [[ivfCellIndex]] scan — per candidate the search
-      // reads 1 + subspaces small ids, never the raw vector; probe routing
-      // is driver-side planning exactly as in [[ivfTopK]].
-      val sp = spark; import sp.implicits._
-      GraftFunctions.register(spark)
-      val index = ivfCellIndex(spark, sfDir)
-      val sm = collectSeeds(
-        index.select(col("vec_id"), col("embedding"), col("norm")), nCells)
-      require(sm.vecs.forall(_.length == EmbeddingDim),
-        s"ivfPqTopK: corpus is not $EmbeddingDim-dimensional")
-      // a corpus smaller than the codebook builds the index with NULL PQ
-      // codes (pqReady = false) — the live path rejects that loudly; the
-      // artifact path must too, not rank candidates by null distances
-      require(sm.size == PqCodebookSize,
-        s"ivfPqTopK: ${sm.size} vectors < codebook size $PqCodebookSize — " +
-          "the index carries no PQ codes")
-      val subDim = EmbeddingDim / subspaces
-      val probes = collectProbes(index, nProbes)
-      val routed = probeCells(probes.map(p => (p._1, p._2)), sm, cellProbes)
-      val wanted = routed.map(_._2).distinct.sorted
-      val topCells = routed.toDF("q_id", "cell")
-      val subCols = (0 until subspaces).map { m =>
-        expr(s"slice(embedding, ${m * subDim + 1}, $subDim)").as(s"__sub$m")
-      }
-      val queries = probes.map(p => (p._1, p._2)).toDF("vec_id", "embedding")
-        .select((col("vec_id").as("q_id") +: subCols): _*)
-      val pruned = index.filter(col("cell").isin(wanted: _*))
-      val indexSide = pruned.select((col("vec_id").as("c_id") +: col("cell") +:
-        (0 until subspaces).map(m => col(s"code$m"))): _*)
-      val est = adcEstimator(sm.vecs, subspaces, subDim, codebookSize)
-      return broadcast(topCells)
-        .join(indexSide, Seq("cell"))
-        .filter(col("q_id") =!= col("c_id"))
-        // no distinct: a vector lives in exactly one cell and the routed
-        // (q_id, cell) rows are unique, so (q_id, c_id) cannot duplicate —
-        // the dedup was a full candidate-set shuffle (prunedProbeTopK's
-        // lesson applied to the ADC leg)
-        .select((Seq("q_id", "c_id") ++
-          (0 until subspaces).map(m => s"code$m")).map(col): _*)
-        .join(broadcast(queries), Seq("q_id"))
-        .withColumn("l2sq_est", est)
-        .withColumn("nn_rank", row_number().over(
-          Window.partitionBy(col("q_id"))
-            .orderBy(col("l2sq_est").asc, col("c_id").asc)))
-        .filter(col("nn_rank") <= k)
-        .select(col("q_id"), col("nn_rank"), col("c_id").as("neighbor_id"),
-          round(col("l2sq_est"), 6).as("l2sq_est"))
-        .orderBy(col("q_id").asc, col("nn_rank").asc)
-    }
+      spark: SparkSession, sfDir: String, nProbes: Int = 5, k: Int = 5): DataFrame = {
+    val sp = spark; import sp.implicits._
     GraftFunctions.register(spark)
-    require(EmbeddingDim % subspaces == 0, s"dim $EmbeddingDim not divisible")
-    val subDim = EmbeddingDim / subspaces
-    val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
-      .select(col("vec_id"), col("embedding"), col("__norm"))
-    val centroids: Seq[(Long, String)] = emb
-      .orderBy(col("vec_id").asc).limit(nCells)
-      .collect().toSeq
-      .map { r =>
-        val nrm = r.getDouble(2)
-        (r.getLong(0), r.getSeq[Float](1)
-          .map(v => (v / nrm).toString + "D").mkString("array(", ",", ")"))
-      }
-    val seeds: Seq[Seq[Float]] = Tables.embeddings(spark, sfDir)
-      .orderBy(col("vec_id").asc).limit(codebookSize)
-      .select("embedding").collect().toSeq
-      .map(_.getSeq[Float](0).toSeq)
-    def cbLit(m: Int, j: Int): String =
-      seeds(j).slice(m * subDim, (m + 1) * subDim)
-        .map(v => v.toDouble.toString + "D").mkString("array(", ",", ")")
-    // corpus side: IVF cell + PQ code per subspace — 1 + subspaces small
-    // ids per vector; this is ALL the search ever reads of the corpus
-    val cellScores = centroids.map { case (cid, c) =>
-      struct(expr(s"graft_dot(embedding, $c)").as("s"), lit(-cid).as("negid"))
-    }
-    val subCols = (0 until subspaces).map { m =>
+    val index = ivfCellIndex(spark, sfDir)
+    val sm = collectSeeds(
+      index.select(col("vec_id"), col("embedding"), col("norm")), IvfNCells)
+    require(sm.vecs.forall(_.length == EmbeddingDim),
+      s"ivfPqTopK: corpus is not $EmbeddingDim-dimensional")
+    // a corpus smaller than the codebook builds the index with NULL PQ
+    // codes (pqReady = false) — reject it loudly, do not rank candidates
+    // by null distances
+    require(sm.size == PqCodebookSize,
+      s"ivfPqTopK: ${sm.size} vectors < codebook size $PqCodebookSize — " +
+        "the index carries no PQ codes")
+    val route = routeProbes(spark, index, nProbes, seedCells(sm))
+    val subDim = EmbeddingDim / PqSubspaces
+    val subCols = (0 until PqSubspaces).map { m =>
       expr(s"slice(embedding, ${m * subDim + 1}, $subDim)").as(s"__sub$m")
     }
-    val codeCols = (0 until subspaces).map { m =>
-      val cands = (0 until codebookSize).map { j =>
-        val c = cbLit(m, j)
-        struct(expr(s"graft_dot($c, $c) - 2D * graft_dot(__sub$m, $c)")
-          .as("dist"), lit(j).as("j"))
-      }
-      least(cands: _*).getField("j").as(s"code$m")
-    }
-    val index = emb
-      .withColumn("cell", -greatest(cellScores: _*).getField("negid"))
-      .select((col("vec_id").as("c_id") +: col("cell") +: subCols): _*)
-      .select((col("c_id") +: col("cell") +: codeCols): _*)
-    // query side: probe the cellProbes best cells (ivfTopK contract)
-    val exploded = emb.filter(col("vec_id") < nProbes)
-      .select(col("vec_id").as("q_id"),
-        explode(array(centroids.map { case (cid, c) =>
-          struct(lit(cid).as("cell"), expr(s"graft_dot(embedding, $c)").as("s"))
-        }: _*)).as("cs"))
-      .select(col("q_id"), col("cs.cell").as("cell"), col("cs.s").as("s"))
-    val topCells = exploded
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("s").desc, col("cell").asc)))
-      .filter(col("rk") <= cellProbes)
-      .select("q_id", "cell")
-    val queries = emb.filter(col("vec_id") < nProbes)
-      .select((col("vec_id").as("q_id") +: subCols.map(c => c)): _*)
-    val est = adcEstimator(seeds, subspaces, subDim, codebookSize)
-    topCells
-      .join(index, Seq("cell"))
-      .filter(col("q_id") =!= col("c_id"))
-      .select((Seq("q_id", "c_id") ++
-        (0 until subspaces).map(m => s"code$m")).map(col): _*)
-      .distinct()
+    val queries = route.probes.map(p => (p._1, p._2)).toDF("vec_id", "embedding")
+      .select((col("vec_id").as("q_id") +: subCols): _*)
+    route.candidates
+      .select((col("q_id") +: col("vec_id").as("c_id") +:
+        (0 until PqSubspaces).map(m => col(s"code$m"))): _*)
       .join(broadcast(queries), Seq("q_id"))
-      .withColumn("l2sq_est", est)
+      .withColumn("l2sq_est", adcEstimator(sm.vecs))
       .withColumn("nn_rank", row_number().over(
         Window.partitionBy(col("q_id"))
           .orderBy(col("l2sq_est").asc, col("c_id").asc)))
@@ -1654,20 +1360,16 @@ object Similarity {
   }
 
   /** The ADC L2² estimator column over `__sub0..` and `code0..`:
-    * est = Σ_m ( q_m·q_m − 2·q_m·c_code + ||c_code||² ), the codebook
-    * riding as array-of-arrays LITERALS indexed by the code id
+    * est = Σ_m ( q_m·q_m − 2·q_m·c_code + ||c_code||² ), the seed
+    * codebook riding as array-of-arrays LITERALS indexed by the code id
     * (element_at), so each subspace costs ONE runtime dot product — a
     * 16-branch case-when variant measured a ~1.9 s codegen-compile floor
     * from the 64 inlined dot expressions. ||c_j||² is driver-computed
     * with the same left-to-right summation graft_dot uses, so the
     * constant equals the twin's runtime list_inner_product bit-for-bit.
-    * ONE definition shared by [[ivfPqTopK]]'s artifact-backed and live
-    * branches — their bit-for-bit agreement IS the artifact contract
-    * (review r12: the block was previously duplicated verbatim).
     */
-  private def adcEstimator(
-      seedVecs: Seq[Seq[Float]], subspaces: Int, subDim: Int,
-      codebookSize: Int): Column = {
+  private def adcEstimator(seedVecs: Seq[Seq[Float]]): Column = {
+    val subDim = EmbeddingDim / PqSubspaces
     def cbLit(m: Int, j: Int): String =
       seedVecs(j).slice(m * subDim, (m + 1) * subDim)
         .map(v => v.toDouble.toString + "D").mkString("array(", ",", ")")
@@ -1675,10 +1377,10 @@ object Similarity {
       var s = 0.0; var i = 0
       while (i < a.length) { s += a(i) * a(i); i += 1 }; s
     }
-    (0 until subspaces).map { m =>
-      val cbArr = (0 until codebookSize).map(j => cbLit(m, j))
+    (0 until PqSubspaces).map { m =>
+      val cbArr = (0 until PqCodebookSize).map(j => cbLit(m, j))
         .mkString("array(", ",", ")")
-      val ccArr = (0 until codebookSize).map { j =>
+      val ccArr = (0 until PqCodebookSize).map { j =>
         selfDot(seedVecs(j).slice(m * subDim, (m + 1) * subDim)
           .map(_.toDouble)).toString + "D"
       }.mkString("array(", ",", ")")
@@ -1766,54 +1468,48 @@ object Similarity {
       .orderBy(col("cell").asc)
   }
 
-  def pqCodes(
-      spark: SparkSession, sfDir: String,
-      subspaces: Int = 4, codebookSize: Int = 16): DataFrame = {
-    if (subspaces == PqSubspaces && codebookSize == PqCodebookSize) {
-      // codes are index columns — one scan, the per-(row, code) argmin was
-      // paid once at artifact build. A corpus smaller than the codebook
-      // holds NULL codes (pqReady = false at build): reject it like the
-      // live path below would (footer count — no scan)
-      require(
-        Tables.parquetRowCount(spark, sfDir, "embeddings") >= PqCodebookSize,
-        s"pqCodes: corpus smaller than codebook size $PqCodebookSize — " +
-          "the index carries no PQ codes")
-      return ivfCellIndex(spark, sfDir)
-        .select((col("vec_id") +: (0 until subspaces).map(m =>
-          col(s"code$m").cast("long").as(s"code$m"))): _*)
-        .orderBy(col("vec_id").asc)
-    }
-    GraftFunctions.register(spark)
-    require(EmbeddingDim % subspaces == 0, s"dim $EmbeddingDim not divisible")
-    val subDim = EmbeddingDim / subspaces
-    val emb = Tables.embeddings(spark, sfDir)
-    // bounded model fetch: codebookSize rows (the seed codebook), never
-    // the corpus — same contract as ivfTopK's coarse quantizer
-    val seeds: Seq[Seq[Float]] = emb
-      .orderBy(col("vec_id").asc).limit(codebookSize)
-      .select("embedding").collect().toSeq
-      .map(_.getSeq[Float](0).toSeq)
-    val subCols = (0 until subspaces).map { m =>
-      expr(s"slice(embedding, ${m * subDim + 1}, $subDim)").as(s"__sub$m")
-    }
-    val sliced = emb.select((col("vec_id") +: subCols): _*)
-    val codeCols = (0 until subspaces).map { m =>
-      val cands = (0 until codebookSize).map { j =>
-        val cLit = seeds(j).slice(m * subDim, (m + 1) * subDim)
-          .map(v => v.toDouble.toString + "D").mkString("array(", ",", ")")
-        // c·c folds to a literal at plan time (graft_dot is evaluable);
-        // x·c is one codegen'd dot per (row, code)
-        struct(
-          expr(s"graft_dot($cLit, $cLit) - 2D * graft_dot(__sub$m, $cLit)")
-            .as("dist"),
-          lit(j.toLong).as("j"))
-      }
-      // struct least = (dist asc, j asc) — argmin with deterministic ties
-      least(cands: _*).getField("j").as(s"code$m")
-    }
-    sliced.select((col("vec_id") +: codeCols): _*)
+  /** Product-quantization codes — the compression half of an IVF-PQ index:
+    * each embedding split into [[PqSubspaces]] (4) contiguous
+    * sub-vectors, each sub-vector replaced by the id of its nearest
+    * codebook centroid (squared-L2 argmin, ties to the smallest code).
+    * 64 dims × 4 bytes become 4 bytes — the difference between an ANN
+    * index that fits executor memory at 10⁹ vectors and one that doesn't.
+    *
+    * Codebooks are seeded from the [[PqCodebookSize]] (16) lowest-id
+    * vectors' sub-vectors (deterministic; production would
+    * k-means-refine each subspace — [[kmeansCells]] shows that loop).
+    * The codes are columns of the maintained [[ivfCellIndex]], derived
+    * once at build against the seed codebook as plan literals, so a call
+    * is one scan: no shuffle, no join, no dot products.
+    *
+    * Cross-engine exactness: squared L2 enters as `c·c − 2·x·c` (the ‖x‖²
+    * term is constant per sub-vector and cannot change the argmin, so both
+    * sides drop it); every dot is the same sequential fold the knn twins
+    * already match bit-for-bit, and only the integer codes are emitted.
+    */
+  def pqCodes(spark: SparkSession, sfDir: String): DataFrame = {
+    // a corpus smaller than the codebook holds NULL codes (pqReady =
+    // false at build): reject it (footer count — no scan)
+    require(
+      Tables.parquetRowCount(spark, sfDir, "embeddings") >= PqCodebookSize,
+      s"pqCodes: corpus smaller than codebook size $PqCodebookSize — " +
+        "the index carries no PQ codes")
+    ivfCellIndex(spark, sfDir)
+      .select((col("vec_id") +: (0 until PqSubspaces).map(m =>
+        col(s"code$m").cast("long").as(s"code$m"))): _*)
       .orderBy(col("vec_id").asc)
   }
+
+  /** [[semanticDedup]] with the census-derived quantizer width — the
+    * registered `semantic_dedup` path, closing the one cell-scoped
+    * sibling that was still registered at fixed k after
+    * decontaminate/bitext/hard-negatives converted (review r12): at
+    * fixed k cell sizes grow linearly with the corpus and the in-cell
+    * self-join goes quadratic — the tier-H flag [[bitextCensusK]] fixes.
+    */
+  def semanticDedupAdaptive(
+      spark: SparkSession, sfDir: String, threshold: Double = 0.4): DataFrame =
+    semanticDedup(spark, sfDir, bitextCensusK(spark, sfDir), threshold)
 
   /** SemDeDup-style semantic deduplication: assign every vector to a
     * quantizer cell, then search for near-duplicates ONLY within each cell
@@ -1832,17 +1528,6 @@ object Similarity {
     * cosine is the same sequential `graft_dot` fold the twins match
     * bit-for-bit; only ids, the cell, and a boolean are emitted.
     */
-  /** [[semanticDedup]] with the census-derived quantizer width — the
-    * registered `semantic_dedup` path, closing the one cell-scoped
-    * sibling that was still registered at fixed k after
-    * decontaminate/bitext/hard-negatives converted (review r12): at
-    * fixed k cell sizes grow linearly with the corpus and the in-cell
-    * self-join goes quadratic — the tier-H flag [[bitextCensusK]] fixes.
-    */
-  def semanticDedupAdaptive(
-      spark: SparkSession, sfDir: String, threshold: Double = 0.4): DataFrame =
-    semanticDedup(spark, sfDir, bitextCensusK(spark, sfDir), threshold)
-
   def semanticDedup(
       spark: SparkSession, sfDir: String, k: Int = 16,
       threshold: Double = 0.4): DataFrame = {
@@ -1866,6 +1551,17 @@ object Similarity {
       .orderBy(col("vec_id").asc)
   }
 
+  /** [[semanticDecontaminate]] with the census-derived quantizer width
+    * ([[bitextCensusK]]) — the registered path: cell size stays bounded
+    * as the corpus grows, so the within-cell eval×train join stays
+    * corpus-linear (tier H flagged the fixed-k form at 10.6× under 10×).
+    */
+  def semanticDecontaminateAdaptive(
+      spark: SparkSession, sfDir: String, threshold: Double = 0.4,
+      evalMod: Int = 10, evalRem: Int = 9): DataFrame =
+    semanticDecontaminate(spark, sfDir, bitextCensusK(spark, sfDir),
+      threshold, evalMod, evalRem)
+
   /** Embedding-space DECONTAMINATION — the semantic twin of the n-gram
     * [[Contamination.decontaminate]]: for each EVAL-split vector, find the
     * most similar TRAIN-split vector; cosine ≥ `threshold` flags the eval
@@ -1886,17 +1582,6 @@ object Similarity {
     * join keys on cell_id, and the per-eval argmax is a window over the
     * threshold survivors — work is cell-local, never eval × train.
     */
-  /** [[semanticDecontaminate]] with the census-derived quantizer width
-    * ([[bitextCensusK]]) — the registered path: cell size stays bounded
-    * as the corpus grows, so the within-cell eval×train join stays
-    * corpus-linear (tier H flagged the fixed-k form at 10.6× under 10×).
-    */
-  def semanticDecontaminateAdaptive(
-      spark: SparkSession, sfDir: String, threshold: Double = 0.4,
-      evalMod: Int = 10, evalRem: Int = 9): DataFrame =
-    semanticDecontaminate(spark, sfDir, bitextCensusK(spark, sfDir),
-      threshold, evalMod, evalRem)
-
   def semanticDecontaminate(
       spark: SparkSession, sfDir: String, k: Int = 16,
       threshold: Double = 0.4, evalMod: Int = 10, evalRem: Int = 9): DataFrame = {
@@ -1927,25 +1612,6 @@ object Similarity {
       .orderBy(col("vec_id").asc)
   }
 
-  /** Cross-group nearest-neighbor MINING — the bitext/parallel-corpus
-    * shape (CCMatrix/LASER-style margin mining): for every vector, the
-    * most similar vector carrying a DIFFERENT label, plus the margin of
-    * that match over the runner-up cross-label candidate. High
-    * similarity + high margin = a confident alignment; in a multilingual
-    * corpus labels are languages and the output is mined translation
-    * pairs, in a dedup setting labels are sources and the output is
-    * cross-source duplicates.
-    *
-    * Pair production is cell-scoped exactly like [[semanticDedup]] —
-    * quantizer cells bound the candidate join, never all-pairs — and the
-    * per-query top-2 is a window over the threshold survivors. Margin is
-    * one exactly-rounded subtraction of two twin-matched cosines (a
-    * missing runner-up contributes 0 ⇒ margin = similarity).
-    *
-    * Scale shape: join-free assignment (centroid literals), one
-    * cell-keyed join, one (cell-bounded) per-query window; one row per
-    * vector with ≥1 cross-label neighbor above `threshold`.
-    */
   /** The quantizer width the REGISTERED bitext path uses: 16 cells per
     * 500 corpus vectors (the sf0.01 base census), so the EXPECTED cell
     * size stays ~31 at any corpus size and within-cell pair production —
@@ -1972,6 +1638,25 @@ object Similarity {
       spark: SparkSession, sfDir: String, threshold: Double = 0.3): DataFrame =
     crossLabelMine(spark, sfDir, bitextCensusK(spark, sfDir), threshold)
 
+  /** Cross-group nearest-neighbor MINING — the bitext/parallel-corpus
+    * shape (CCMatrix/LASER-style margin mining): for every vector, the
+    * most similar vector carrying a DIFFERENT label, plus the margin of
+    * that match over the runner-up cross-label candidate. High
+    * similarity + high margin = a confident alignment; in a multilingual
+    * corpus labels are languages and the output is mined translation
+    * pairs, in a dedup setting labels are sources and the output is
+    * cross-source duplicates.
+    *
+    * Pair production is cell-scoped exactly like [[semanticDedup]] —
+    * quantizer cells bound the candidate join, never all-pairs — and the
+    * per-query top-2 is a window over the threshold survivors. Margin is
+    * one exactly-rounded subtraction of two twin-matched cosines (a
+    * missing runner-up contributes 0 ⇒ margin = similarity).
+    *
+    * Scale shape: join-free assignment (centroid literals), one
+    * cell-keyed join, one (cell-bounded) per-query window; one row per
+    * vector with ≥1 cross-label neighbor above `threshold`.
+    */
   def crossLabelMine(
       spark: SparkSession, sfDir: String, k: Int = 16,
       threshold: Double = 0.3): DataFrame = {
@@ -2006,6 +1691,19 @@ object Similarity {
       .orderBy(col("vec_id").asc)
   }
 
+  /** [[hardNegatives]] with the census-derived quantizer width
+    * ([[bitextCensusK]]) — the registered path (tier H flagged the
+    * fixed-k form at 19.8× under 10×: at fixed k=16 the per-cell
+    * candidate join is quadratic in cell size, which grows linearly
+    * with the corpus; the adaptive width keeps expected cell size ~31).
+    */
+  def hardNegativesAdaptive(
+      spark: SparkSession, sfDir: String, nNeg: Int = 3,
+      lo: Double = 0.2, hi: Double = 0.95,
+      evalMod: Int = 10, evalRem: Int = 9): DataFrame =
+    hardNegatives(spark, sfDir, bitextCensusK(spark, sfDir), nNeg, lo, hi,
+      evalMod, evalRem)
+
   /** Hard-negative mining for contrastive retriever training — for every
     * held-out anchor (the eval split [[semanticDecontaminate]] audits),
     * the `nNeg` most-similar TRAIN vectors that are confusable but NOT
@@ -2027,19 +1725,6 @@ object Similarity {
     * the [[crossLabelMine]] envelope with a band filter instead of the
     * label inequality.
     */
-  /** [[hardNegatives]] with the census-derived quantizer width
-    * ([[bitextCensusK]]) — the registered path (tier H flagged the
-    * fixed-k form at 19.8× under 10×: at fixed k=16 the per-cell
-    * candidate join is quadratic in cell size, which grows linearly
-    * with the corpus; the adaptive width keeps expected cell size ~31).
-    */
-  def hardNegativesAdaptive(
-      spark: SparkSession, sfDir: String, nNeg: Int = 3,
-      lo: Double = 0.2, hi: Double = 0.95,
-      evalMod: Int = 10, evalRem: Int = 9): DataFrame =
-    hardNegatives(spark, sfDir, bitextCensusK(spark, sfDir), nNeg, lo, hi,
-      evalMod, evalRem)
-
   def hardNegatives(
       spark: SparkSession, sfDir: String, k: Int = 16, nNeg: Int = 3,
       lo: Double = 0.2, hi: Double = 0.95,

@@ -44,9 +44,11 @@ object ProfileR14 {
     timed("knn_lsh")(
       { graft.ext.Similarity.lshTopK(spark, sfDir).count(); () })
     timed("ann_recall")(
-      { graft.ext.Similarity.annRecall(spark, sfDir).count(); () })
+      { graft.ext.Similarity.annRecall(
+        spark, sfDir, graft.ext.Similarity.lshTopK).count(); () })
     timed("retrieval_metrics")(
-      { graft.ext.Similarity.retrievalMetrics(spark, sfDir).count(); () })
+      { graft.ext.Similarity.retrievalMetrics(
+        spark, sfDir, graft.ext.Similarity.lshTopK).count(); () })
     // containment
     timed("containment_pairs")(
       { graft.ext.Dedup.containmentPairs(spark, sfDir).count(); () })

@@ -2,8 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ext.{Curation, Dedup}
+import graft.ops.Materialize
 
 /** The 100× duplicate stress tier — the scale proof the small-SF oracle
   * runs cannot give. Replicates the `documents` table `reps`× with
@@ -20,9 +22,10 @@ import graft.ext.{Curation, Dedup}
   *
   *   Tier B (sf0.01 × 100 = 50k docs, maxBucket raised to admit the
   *   100-doc buckets): the QUADRATIC-bounded path for real — ~2.5M
-  *   verified pairs (past connectedComponents' 2M driver edge limit),
-  *   so the DISTRIBUTED min-label loop runs on a multi-million-edge
-  *   graph and must converge with every replica family in one cluster.
+  *   verified pairs, run under a driver budget set below the ~5M-edge
+  *   dup graph, so the DISTRIBUTED min-label loop runs on a
+  *   multi-million-edge graph on any driver heap and must converge with
+  *   every replica family in one cluster.
   *
   *   Tier C (lineitem × 10): the iterative graph operators — weighted-
   *   edge collapse keeps per-round cost flat; both pagerank join plans
@@ -35,8 +38,8 @@ import graft.ext.{Curation, Dedup}
   *   Tier E (embeddings × 10 = 20k identical-twin vectors): the
   *   similarity family — LSH top-k combinatorics exact under bucket
   *   flooding, near-dup pair counts exact where bounded, and the
-  *   driver-materialization cap REFUSING loudly past its budget
-  *   (see [[tierE]]).
+  *   near-dup pair frame SPILLING to storage past the driver budget
+  *   with the count still exact (see [[tierE]]).
   *
   *   Tier F (documents × 100 = 500k twin docs): the text/rank family —
   *   Zipf mean_ranks and classifier logits are replication-invariant,
@@ -159,6 +162,12 @@ object StressTier {
 
   private def tierB(spark: SparkSession, baseDir: String, dir: String): Unit = {
     val reps = 100
+    // a 1M-edge driver budget, far below the ~5M-edge dup graph: CC's
+    // branch choice must not depend on the heap this tool runs with
+    val edgeSchema = StructType(Seq(
+      StructField("src", LongType), StructField("dst", LongType)))
+    spark.conf.set(Materialize.BudgetConf,
+      (1000000L * Materialize.rowBytes(edgeSchema)).toString)
     val (_, tRep) = timed("b.replicate")(replicate(spark, baseDir, dir, reps))
     val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
     println(f"STRESS b.replicate seconds=$tRep%.1f docs=$nDocs")
@@ -170,11 +179,12 @@ object StressTier {
       Dedup.minHashPairsDistributed(spark, dir, maxBucket = 128))
     val nPairs = pairs.count()
     println(f"STRESS b.pairs seconds=$tPairs%.1f pairs=$nPairs")
-    check(nPairs > 2_000_000L,
-      s"stress pairs $nPairs must cross the 2M driver edge limit")
+    val edgeCap = Materialize.rowCap(spark, edgeSchema)
+    check(2 * nPairs > edgeCap,
+      s"stress edges ${2 * nPairs} must exceed the driver edge cap $edgeCap")
 
-    // connected components: edge count (2*pairs) > driver limit forces the
-    // distributed min-label loop — the branch this tier exists to prove
+    // connected components: edge count (2*pairs) past the row cap forces
+    // the distributed min-label loop — the branch this tier exists to prove
     val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id")
     val (membership, tCC) = timed("b.cc")(
       Dedup.connectedComponents(pairs, docs).persist())
@@ -214,7 +224,7 @@ object StressTier {
     check(nDelta == nDocs / 10, s"delta carve must be 10% ($nDelta)")
     check(missed == 0L, s"$missed delta docs missed their family keeper")
     inc.unpersist()
-    ()
+    spark.conf.unset(Materialize.BudgetConf)
   }
 
   /** Tier C: the ITERATIVE GRAPH operators under 10× order volume.
@@ -1352,10 +1362,12 @@ object StressTier {
 
     // first call builds the trained-quantizer + PQ artifacts at 200k
     val (rIvf, tIvf) = timed("n.recall_ivf_trained")(
-      meanRecall(Similarity.annRecallIvfTrained(spark, dir, probes, k)))
+      meanRecall(Similarity.annRecall(
+        spark, dir, Similarity.ivfTopKTrained, probes, k)))
     println(f"STRESS n.recall_ivf_trained seconds=$tIvf%.1f recall=$rIvf%.3f")
     val (rRr, tRr) = timed("n.recall_ivfpq_rerank")(
-      meanRecall(Similarity.annRecallIvfPqRerank(spark, dir, probes, k)))
+      meanRecall(Similarity.annRecall(
+        spark, dir, Similarity.ivfPqRerankTopK, probes, k)))
     println(f"STRESS n.recall_ivfpq_rerank seconds=$tRr%.1f recall=$rRr%.3f")
     // floors: the sf0.1-audited legs sit at 0.88-0.92; cell pruning over
     // a 100x-denser corpus may cost some, but a collapse means the

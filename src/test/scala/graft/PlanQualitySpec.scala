@@ -247,6 +247,43 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
+  test("ANN vector fetches broadcast the candidates, never the corpus") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, LessThan}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    // the single-child chain under a broadcast ends at what it ships: a
+    // join means a candidate-filtered side, a scan means raw table rows
+    def shipped(p: SparkPlan): SparkPlan = p.children match {
+      case Seq(only) => shipped(only)
+      case _ => p
+    }
+    def probeFiltered(s: FileSourceScanExec): Boolean = s.dataFilters.exists {
+      case LessThan(a: AttributeReference, _) => a.name == "vec_id"
+      case _ => false
+    }
+    // the r13 inversion (plans/r14/ann_recall_before.txt node 30): the
+    // vector fetch broadcast the whole embeddings scan, a corpus collect
+    // through the driver. Any embeddings scan a broadcast ships must be
+    // the `vec_id < nProbes` probe slice.
+    for (q <- Seq("knn_lsh", "knn_ivfpq_rerank", "ann_recall",
+        "ann_recall_ivfpq_rerank")) {
+      val broadcasts = nodes(SparkEntry.queries(q)(spark, sf).queryExecution.executedPlan)
+        .collect { case b: BroadcastExchangeExec => b }
+      assert(broadcasts.nonEmpty, s"$q: no broadcast in the plan")
+      broadcasts.map(b => shipped(b.child)).foreach {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.toString.contains("embeddings.parquet")) =>
+          assert(probeFiltered(s), s"$q broadcasts the unfiltered corpus: $s")
+        case _ =>
+      }
+    }
+  }
+
   test("winsorized_stats caps via a broadcast of the |types|-row thresholds") {
     val p = plan("winsorized_stats")
     assert(p.contains("BroadcastHashJoin"), p.take(2000))

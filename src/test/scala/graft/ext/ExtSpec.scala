@@ -614,16 +614,34 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("brute-force top-k: self excluded, ranks contiguous, sims descending") {
-    val out = Similarity.bruteForceTopK(spark, sf, nProbes = 3, k = 4).collect()
-    assert(out.length === 12)
-    val byProbe = out.groupBy(_.getAs[Long]("q_id"))
-    assert(byProbe.keySet === Set(0L, 1L, 2L))
-    byProbe.values.foreach { rows =>
-      val sorted = rows.sortBy(_.getAs[Int]("nn_rank"))
-      assert(sorted.map(_.getAs[Int]("nn_rank")).toSeq === Seq(1, 2, 3, 4))
-      val sims = sorted.map(_.getAs[Double]("cosine_sim")).toSeq
-      assert(sims === sims.sorted.reverse, "similarity must be non-increasing")
-      assert(!rows.exists(r => r.getAs[Long]("neighbor_id") == r.getAs[Long]("q_id")))
+    // every cosine retrieval ends in the same exact-cosine tail: each keeps
+    // the contract, and scores each pair with brute's cosine for that pair
+    val nVecs = graft.io.Tables.embeddings(spark, sf).count().toInt
+    val truth = Similarity.bruteForceTopK(spark, sf, nProbes = 3, k = nVecs)
+      .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id")) ->
+        r.getAs[Double]("cosine_sim")).toMap
+    val retrievals: Seq[(String, Similarity.Retrieval)] = Seq(
+      "brute" -> Similarity.bruteForceTopK, "lsh" -> Similarity.lshTopK,
+      "ivf" -> Similarity.ivfTopK, "ivf_trained" -> Similarity.ivfTopKTrained,
+      "ivfpq_rerank" -> Similarity.ivfPqRerankTopK)
+    for ((name, retrieve) <- retrievals) {
+      val out = retrieve(spark, sf, 3, 4).collect()
+      assert(out.length === 12, name)
+      val byProbe = out.groupBy(_.getAs[Long]("q_id"))
+      assert(byProbe.keySet === Set(0L, 1L, 2L), name)
+      byProbe.values.foreach { rows =>
+        val sorted = rows.sortBy(_.getAs[Int]("nn_rank"))
+        assert(sorted.map(_.getAs[Int]("nn_rank")).toSeq === Seq(1, 2, 3, 4), name)
+        val sims = sorted.map(_.getAs[Double]("cosine_sim")).toSeq
+        assert(sims === sims.sorted.reverse, s"$name: similarity must be non-increasing")
+        assert(!rows.exists(r => r.getAs[Long]("neighbor_id") == r.getAs[Long]("q_id")),
+          name)
+        rows.foreach { r =>
+          val pair = (r.getAs[Long]("q_id"), r.getAs[Long]("neighbor_id"))
+          assert(r.getAs[Double]("cosine_sim") === truth(pair),
+            s"$name: cosine of $pair differs from brute force")
+        }
+      }
     }
   }
 

@@ -45,7 +45,7 @@ class PipelineOpsSpec extends SparkSpec {
     val lsh = Similarity.lshTopK(spark, sf)
       .select("q_id", "neighbor_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    val got = Similarity.annRecall(spark, sf)
+    val got = Similarity.annRecall(spark, sf, Similarity.lshTopK)
       .select("q_id", "n_hits").as[(Long, Long)].collect().toMap
     assert(got.keySet === brute.keySet)
     got.foreach { case (q, hits) =>

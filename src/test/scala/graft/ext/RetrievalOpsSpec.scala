@@ -240,10 +240,10 @@ class RetrievalOpsSpec extends SparkSpec {
   // ---------------------------------------------------------------- //
 
   test("retrievalMetrics: hit counts agree with annRecall; MRR/AP bounded and consistent") {
-    val m = Similarity.retrievalMetrics(spark, sf).collect()
+    val m = Similarity.retrievalMetrics(spark, sf, Similarity.lshTopK).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
     assert(m.nonEmpty)
-    val recall = Similarity.annRecall(spark, sf).collect()
+    val recall = Similarity.annRecall(spark, sf, Similarity.lshTopK).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     m.foreach { case (q, hits, mrr, ap) =>
       assert(hits == recall(q), s"probe $q: n_hits diverges from annRecall")
