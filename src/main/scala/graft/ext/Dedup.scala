@@ -1330,7 +1330,7 @@ object Dedup {
     def pinAt(df: DataFrame): (DataFrame, String) = {
       val p = s"$spillRoot/r$roundN"; roundN += 1
       df.write.mode("overwrite").parquet(p)
-      (sparkCC.read.parquet(p), p)
+      (sparkCC.read.schema(df.schema).parquet(p), p)
     }
     def rmDir(p: String): Unit =
       graft.ops.Materialize.deleteRecursively(new java.io.File(p))

@@ -705,18 +705,11 @@ object Similarity {
     * reproduces it exactly — hash-checking the codegen'd assignment
     * machinery the iterative trainer reuses every round.
     */
-  def kmeansSeedAssign(
-      spark: SparkSession, sfDir: String, k: Int = 16): DataFrame =
-    if (k == IvfNCells)
-      // the seed assignment IS an index column — one scan, no dot products
-      ivfCellIndex(spark, sfDir)
-        .select(col("vec_id"), col("cell_id"), round(col("sim"), 6).as("sim"))
-        .orderBy(col("vec_id").asc)
-    else
-      kmeansAssignments(spark, sfDir, k, iters = 0)
-        .select(col("vec_id"), col("cell_id").cast("long").as("cell_id"),
-          round(col("sim"), 6).as("sim"))
-        .orderBy(col("vec_id").asc)
+  def kmeansSeedAssign(spark: SparkSession, sfDir: String): DataFrame =
+    // the seed assignment IS an index column — one scan, no dot products
+    ivfCellIndex(spark, sfDir)
+      .select(col("vec_id"), col("cell_id"), round(col("sim"), 6).as("sim"))
+      .orderBy(col("vec_id").asc)
 
   /** (vec_id, cell_id, embedding, __norm, label) under the k-cell seed
     * quantizer — off the maintained [[ivfCellIndex]] when the config
@@ -969,12 +962,9 @@ object Similarity {
     * artifact; the summary is ONE narrow codegen'd corpus scan (k dots
     * against literals, no join) + one k-row hash agg.
     */
-  def kmeansCellsTrained(
-      spark: SparkSession, sfDir: String, k: Int = 16, iters: Int = 5): DataFrame = {
+  def kmeansCellsTrained(spark: SparkSession, sfDir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val model =
-      if (k == IvfNCells && iters == IvfTrainIters) trainedModelArtifact(spark, sfDir)
-      else kmeansModelInt(spark, sfDir, k, iters)
+    val model = trainedModelArtifact(spark, sfDir)
     val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
     val xq = emb.select(col("vec_id"), expr(
       "transform(embedding, v -> CAST(floor(v / __norm * 1000000.0D + 0.5D) AS DOUBLE))")
@@ -1402,41 +1392,18 @@ object Similarity {
     * production the slices are the corpus and the candidate batch, and
     * the cells come from the maintained quantizer.
     *
-    * Scale shape: one scan, 16 codegen'd dot products per row, one tiny
+    * Scale shape: one column scan of the maintained cell index, one tiny
     * groupBy — the same single-pass shape as the length-bucket drift op.
     */
-  def embeddingDrift(
-      spark: SparkSession, sfDir: String, nCells: Int = 16): DataFrame = {
-    GraftFunctions.register(spark)
-    // At the registered config the occupancy read is a pure column scan of
-    // the maintained [[ivfCellIndex]] — (cell, vec_id) only, ZERO dot
-    // products per call (the assignments were paid once at index build);
-    // ad-hoc cell counts quantize live.
-    val cellsOf: (DataFrame, Seq[Long]) =
-      if (nCells == IvfNCells) {
-        val index = ivfCellIndex(spark, sfDir)
-        val seedIds = index.select(col("vec_id"))
-          .orderBy(col("vec_id").asc).limit(nCells)
-          .collect().toSeq.map(_.getLong(0))
-        (index.select(col("cell"), col("vec_id")), seedIds)
-      } else {
-        val emb = withNorm(spark, Tables.embeddings(spark, sfDir))
-          .select(col("vec_id"), col("embedding"), col("__norm"))
-        val centroids: Seq[(Long, String)] = emb
-          .orderBy(col("vec_id").asc).limit(nCells)
-          .collect().toSeq
-          .map { r =>
-            val nrm = r.getDouble(2)
-            (r.getLong(0), r.getSeq[Float](1)
-              .map(v => (v / nrm).toString + "D").mkString("array(", ",", ")"))
-          }
-        val cellScores = centroids.map { case (cid, c) =>
-          struct(expr(s"graft_dot(embedding, $c)").as("s"), lit(-cid).as("negid"))
-        }
-        (emb.withColumn("cell", -greatest(cellScores: _*).getField("negid"))
-          .select(col("cell"), col("vec_id")), centroids.map(_._1))
-      }
-    val counts = cellsOf._1
+  def embeddingDrift(spark: SparkSession, sfDir: String): DataFrame = {
+    // The occupancy read is a pure column scan of the maintained
+    // [[ivfCellIndex]] — (cell, vec_id) only, ZERO dot products per call
+    // (the assignments were paid once at index build).
+    val index = ivfCellIndex(spark, sfDir)
+    val seedIds = index.select(col("vec_id"))
+      .orderBy(col("vec_id").asc).limit(IvfNCells)
+      .collect().toSeq.map(_.getLong(0))
+    val counts = index
       .select(col("cell"), (col("vec_id") % 10 === 9).as("is_cur"))
       .groupBy(col("cell"))
       .agg(
@@ -1444,7 +1411,7 @@ object Similarity {
         count_if(col("is_cur")).as("n_cur"))
     val spine = {
       val sp = spark; import sp.implicits._
-      cellsOf._2.toDF("cell")
+      seedIds.toDF("cell")
     }
     val totals = counts.agg(
       sum(col("n_ref")).as("__tr"), sum(col("n_cur")).as("__tc"))

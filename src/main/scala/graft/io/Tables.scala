@@ -1,22 +1,76 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Parquet readers for the driver-generated test tables (TESTDATA.md).
+/** Parquet readers for the driver-generated test tables (TESTDATA.md) and
+  * the warehouse artifacts queries read by path.
   *
   * Schemas are fixed and carried by the parquet footers; we deliberately do
   * NOT re-declare them here so Catalyst's vectorized parquet reader can prune
-  * columns straight from the file metadata. At cluster scale these would be
-  * catalog tables (possibly bucketed); the `sfDir` parameter stands in for
-  * the warehouse location.
+  * columns straight from the file metadata. The footers stay the source of
+  * truth, but they are read once per file listing, not once per query:
+  * [[parquet]] infers a path's schema the first time it sees that path's
+  * data files and hands the cached schema to every later read, so building
+  * a query starts no Spark job. At cluster scale these would be catalog
+  * tables (possibly bucketed); the `sfDir` parameter stands in for the
+  * warehouse location.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** One entry per path: the data-file listing its footer schema was read
+    * under, and that schema. A rewritten, rebuilt or compacted path lists
+    * differently, so its next read infers again and replaces the entry.
+    */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[String], StructType)]()
+
+  /** `spark.read.parquet(path)` with the footer schema supplied: inference
+    * (one Spark job reading a footer) runs only when `path`'s data-file
+    * listing differs from the one last seen for it. The listing is taken
+    * BEFORE inference, so a file landing in between at worst costs one
+    * more inference on the next read, never a stale schema.
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val listing = dataFiles(spark, path)
+    val cached = schemas.get(path)
+    val schema =
+      if (cached != null && cached._1 == listing) cached._2
+      else {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(path, (listing, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  /** "<len>|<mtime>|<absolute path>" per data file under `path` (the path
+    * itself when it is a file), listed recursively, sorted; empty when
+    * `path` does not exist. Marker and hidden files (`_SUCCESS`, `.crc`)
+    * are skipped at every level: parquet readers ignore them, and Spark's
+    * own append rewrites `_SUCCESS`.
+    */
+  private[graft] def dataFiles(spark: SparkSession, path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    if (fs.exists(p)) {
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val s = it.next()
+        val n = s.getPath.getName
+        if (!n.startsWith("_") && !n.startsWith("."))
+          buf += s"${s.getLen}|${s.getModificationTime}|${s.getPath.toString}"
+      }
+    }
+    buf.sorted.toSeq
+  }
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = table(s, d, "nation")

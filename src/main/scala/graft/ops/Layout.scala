@@ -300,7 +300,7 @@ object Layout {
             new org.apache.hadoop.fs.Path(wh, StaleFile)).isDefined)
             staleServedTables.add(table)
           registerExternal(spark, table, wh,
-            spark.read.parquet(wh.toString).schema.toDDL, key, buckets)
+            graft.io.Tables.parquet(spark, wh.toString).schema.toDDL, key, buckets)
         } else {
           if (fs.exists(wh)) fs.delete(wh, true)
           // append-only source delta + a committed predecessor + a
@@ -516,36 +516,18 @@ object Layout {
     }
   }
 
-  /** Source census for artifact invalidation: one
-    * "<len>|<mtime>|<absolute path>" entry per source DATA file (path
-    * LAST: it may itself contain the separator in a URI scheme), listed
-    * RECURSIVELY so partitioned (key=value subdir) layouts still
-    * invalidate on nested changes. Marker/hidden files (_SUCCESS, .crc)
-    * are EXCLUDED at every level: parquet readers ignore them, so they
-    * cannot change artifact content — and Spark's own `.mode("append")`
-    * write rewrites the dir's _SUCCESS, which would otherwise turn every
-    * real shard append into a non-append delta and defeat the refresh
-    * path.
+  /** Source census for artifact invalidation: the [[graft.io.Tables.dataFiles]]
+    * listing of every source — one "<len>|<mtime>|<absolute path>" entry
+    * per DATA file (path LAST: it may itself contain the separator in a
+    * URI scheme), recursive so partitioned (key=value subdir) layouts
+    * still invalidate on nested changes, marker/hidden files excluded so
+    * Spark's own `.mode("append")` rewrite of `_SUCCESS` does not turn
+    * every real shard append into a non-append delta.
     */
   private def censusEntries(
-      spark: SparkSession, sfDir: String, sources: Seq[String]): Seq[String] = {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(sfDir).getFileSystem(hadoopConf)
-    sources.flatMap { t =>
-      val p = new org.apache.hadoop.fs.Path(sfDir, t)
-      if (fs.exists(p)) {
-        val it = fs.listFiles(p, true)
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val s = it.next()
-          val n = s.getPath.getName
-          if (!n.startsWith("_") && !n.startsWith("."))
-            buf += s"${s.getLen}|${s.getModificationTime}|${s.getPath.toString}"
-        }
-        buf.toSeq
-      } else Seq.empty
-    }.sorted
-  }
+      spark: SparkSession, sfDir: String, sources: Seq[String]): Seq[String] =
+    sources.flatMap(t => graft.io.Tables.dataFiles(spark,
+      new org.apache.hadoop.fs.Path(sfDir, t).toString)).sorted
 
   /** True when `t` is, or is caused (transitively) by, a [[FullRebuild]]
     * — a deferred expressibility check surfaces wrapped in Spark's
@@ -1080,7 +1062,7 @@ object Layout {
     val path = ensureZOrdered(
       spark, sfDir, "zorder_orders", "orders.parquet",
       "o_custkey", "o_totalprice")
-    spark.read.parquet(path)
+    graft.io.Tables.parquet(spark, path)
       .filter(col("o_custkey").between(100L, 400L) &&
         col("o_totalprice").between(50000.0, 150000.0))
       .groupBy(col("o_orderpriority"))
@@ -1121,17 +1103,11 @@ object Layout {
     val backup = path.stripSuffix("/") + "__backup"
     val tmpP = new org.apache.hadoop.fs.Path(tmp)
     val bakP = new org.apache.hadoop.fs.Path(backup)
-    // name|length|mtime, the sourceCensus discipline (ADVICE r12): an
-    // in-place same-length overwrite landing during the rewrite would be
-    // invisible to a name|length key and its rows silently dropped by
-    // the swap; mtime catches it. The quiesce contract still owns the
-    // rename window itself.
-    def listSnapshot(): Set[String] =
-      fs.listStatus(src)
-        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith("."))
-        .map(s => s"${s.getPath.getName}|${s.getLen}|${s.getModificationTime}")
-        .toSet
+    // the census listing (length|mtime|path): an in-place same-length
+    // overwrite landing during the rewrite would be invisible to a
+    // name|length key and its rows silently dropped by the swap; mtime
+    // catches it. The quiesce contract still owns the rename window itself.
+    def listSnapshot(): Seq[String] = graft.io.Tables.dataFiles(spark, path)
     // Crash-window auto-restore: a previous compact that died between the
     // two renames below left the table readable ONLY under __backup —
     // restore it before doing anything else. (A leftover backup alongside a

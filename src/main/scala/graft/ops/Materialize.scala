@@ -79,8 +79,9 @@ object Materialize {
     * (persisted frames the caller unpersists before returning): under
     * the budget it lands on the driver and comes back as a local frame
     * with the same schema; past it (a flooded corpus multiplying
-    * candidate pairs) it SPILLS to the spill store and is read back —
-    * distributed, lineage severed, bounded only by storage. The spill
+    * candidate pairs) it SPILLS to the spill store and is read back with
+    * `df`'s own schema (no footer-inference job) — distributed, lineage
+    * severed, bounded only by storage. The spill
     * write re-executes the plan once, same as any storage-backed
     * materialization, and the flood case is the rare one.
     */
@@ -91,7 +92,7 @@ object Materialize {
         df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
       case None => withSpillRoot { root =>
         df.write.mode("overwrite").parquet(root)
-        df.sparkSession.read.parquet(root)
+        df.sparkSession.read.schema(df.schema).parquet(root)
       }
     }
   }

@@ -318,9 +318,10 @@ object CorpusIngest {
 
   /** Snapshot of one long id column off an index dir's committed parquet
     * files (file-list binding, as in [[readIndex]] — appends only ADD
-    * files, so the explicit list is a consistent snapshot); empty frame
-    * when the index doesn't exist yet. Shared by the vector, postings,
-    * and media ingest faces.
+    * files, so the explicit list is a consistent snapshot), read with the
+    * column's known schema so an epoch starts no footer-inference job;
+    * empty frame when the index doesn't exist yet. Shared by the vector,
+    * postings, and media ingest faces.
     */
   private def committedIds(
       spark: SparkSession, indexPath: String, idCol: String): DataFrame = {
@@ -335,11 +336,11 @@ object CorpusIngest {
           }
           .map(_.toString)
       else Array.empty[String]
+    val schema = StructType(Seq(StructField(idCol, LongType)))
     if (parts.isEmpty)
       spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(Seq(StructField(idCol, LongType))))
-    else spark.read.parquet(parts.toIndexedSeq: _*).select(col(idCol))
+        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+    else spark.read.schema(schema).parquet(parts.toIndexedSeq: _*)
   }
 
   /** Snapshot of the vector index's vec_ids; empty when absent. */

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,5 +30,32 @@ abstract class SparkSpec extends AnyFunSuite {
   def withDriverBudget[T](bytes: Long)(f: => T): T = {
     spark.conf.set(graft.ops.Materialize.BudgetConf, bytes.toString)
     try f finally spark.conf.unset(graft.ops.Materialize.BudgetConf)
+  }
+
+  /** Spark jobs `f` schedules, counted off the listener bus; one trailing
+    * fence job guarantees every earlier job's event has been delivered.
+    */
+  def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"spec_jobs_${java.util.UUID.randomUUID()}"
+    val jobs = new AtomicInteger()
+    val fence = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(g) if g == group => jobs.incrementAndGet(); ()
+          case Some(g) if g == s"${group}_fence" => fence.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      f
+      sc.setJobGroup(s"${group}_fence", group)
+      sc.parallelize(Seq(1), 1).count()
+      assert(fence.await(60, TimeUnit.SECONDS), "listener bus never drained")
+      jobs.get
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 }

@@ -66,4 +66,26 @@ class SourcesSpec extends SparkSpec {
         r.getAs[java.sql.Timestamp]("updatedAt"))
     }
   }
+
+  test("Tables: a warm read of a fixture table starts no Spark job") {
+    Tables.orders(spark, sf); Tables.events(spark, sf) // warm the schemas
+    assert(jobsOf(Tables.orders(spark, sf)) === 0)
+    // events' ts-type check reads the carried schema, not a footer
+    assert(jobsOf(Tables.events(spark, sf)) === 0)
+  }
+
+  test("Tables: a rewritten table is read with its new schema and rows") {
+    val dir = Files.createTempDirectory("graft_tables").toString
+    Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(s"$dir/t.parquet")
+    val before = Tables.table(spark, dir, "t")
+    assert(before.columns.toSeq === Seq("id", "v"))
+    assert(before.as[(Long, String)].collect().toSet === Set((1L, "a"), (2L, "b")))
+    // same path, new files and one more column: the listing changed, so
+    // the footer is read again
+    Seq((3L, "c", 30.0)).toDF("id", "v", "w")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val after = Tables.table(spark, dir, "t")
+    assert(after.columns.toSeq === Seq("id", "v", "w"))
+    assert(after.as[(Long, String, Double)].collect().toSeq === Seq((3L, "c", 30.0)))
+  }
 }

@@ -1,10 +1,6 @@
 package graft.ops
 
 import java.io.File
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpec
 import graft.ext.{Dedup, Graph, TextStats}
@@ -76,33 +72,6 @@ class MaterializeSpec extends SparkSpec {
     withDriverBudget(Long.MaxValue) {
       assert(Materialize.rowCap(spark, edge) === Int.MaxValue - 2)
     }
-  }
-
-  /** Spark jobs `f` schedules, counted off the listener bus; one trailing
-    * fence job guarantees every earlier job's event has been delivered.
-    */
-  private def jobsOf(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"budget_spec_${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger()
-    val fence = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(g) if g == group => jobs.incrementAndGet(); ()
-          case Some(g) if g == s"${group}_fence" => fence.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      f
-      sc.setJobGroup(s"${group}_fence", group)
-      sc.parallelize(Seq(1), 1).count()
-      assert(fence.await(60, TimeUnit.SECONDS), "listener bus never drained")
-      jobs.get
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
   }
 
   test("driver budget: every dual-path family runs local by default, distributed at 0") {

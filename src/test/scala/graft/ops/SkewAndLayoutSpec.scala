@@ -238,6 +238,30 @@ class LayoutSpec extends SparkSpec {
     assert(zed === raw)
   }
 
+  test("zorderScan over a warm warehouse starts no Spark job while it is built") {
+    Layout.zorderScan(spark, sf) // builds or finds the artifact, reads its schema
+    assert(jobsOf(Layout.zorderScan(spark, sf)) === 0)
+  }
+
+  test("an artifact rebuilt or compacted at its path is read with its new schema") {
+    val dir = Files.createTempDirectory("graft_rebuilt").toString + "/z"
+    val base = spark.range(2000).select(col("id").as("x"), (col("id") % 97).as("y"))
+    Layout.writeZOrdered(base, "x", "y", dir, outFiles = 4)
+    assert(graft.io.Tables.parquet(spark, dir).columns.toSeq === Seq("x", "y"))
+    // rebuild in place with one more column
+    Layout.writeZOrdered(base.withColumn("w", col("x") * 2), "x", "y", dir,
+      outFiles = 4)
+    def check(): Unit = {
+      val df = graft.io.Tables.parquet(spark, dir)
+      assert(df.columns.toSeq === Seq("x", "y", "w"))
+      assert(df.agg(count(lit(1)), sum(col("w"))).head().toSeq ===
+        Seq(2000L, 2L * (0L until 2000L).sum))
+    }
+    check()
+    Layout.compact(spark, dir, targetFileBytes = 512L * 1024 * 1024)
+    check()
+  }
+
   test("compact auto-restores a table stranded under __backup by a crash") {
     val dir = Files.createTempDirectory("graft_compact_crash").toString + "/t"
     val df = spark.range(5000).withColumn("v", col("id") * 3)
