@@ -16,11 +16,12 @@ import org.apache.spark.sql.SparkSession
   *     TIMESTAMP(NANOS); see graft.io.Tables.events for the conversion).
   *
   * AQE (adaptive execution) and parquet filter pushdown are Spark defaults
-  * and intentionally not overridden.
+  * and intentionally not overridden. No checkpoint dir is set: the library
+  * cuts lineage only with [[graft.ops.Materialize.pin]]'s parquet spill.
   */
 object GraftSession {
-  def build(master: String, shufflePartitions: Int): SparkSession = {
-    val spark = SparkSession.builder()
+  def build(master: String, shufflePartitions: Int): SparkSession =
+    SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
@@ -36,27 +37,7 @@ object GraftSession {
       // registry sweep resident (compiled classes are small; the cache is
       // weak-ref'd) and makes repeat passes compile-free.
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // ContextCleaner reads this at context startup: checkpoint files of
-      // GC'd RDDs are deleted instead of accumulating per clustering call
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .getOrCreate()
-    // Reliable-checkpoint root for distributed frames whose lineage must
-    // be severed off a call-scoped aggregation (the heavy-dup pair lists
-    // and signatures in graft.ext.Dedup, the term counts in
-    // graft.ext.TextStats; connectedComponents pins its rounds to parquet
-    // in the graft.ops.Materialize spill store instead).
-    // Local mode: a tmp dir. Cluster deployment: point this at shared
-    // storage (HDFS/S3) so checkpointed blocks survive executor loss —
-    // unlike localCheckpoint, which pins them to unreplicated executors.
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-")
-      spark.sparkContext.setCheckpointDir(dir.toString)
-      // the ContextCleaner (enabled above) removes per-RDD checkpoints as
-      // they are GC'd; the temp ROOT itself is swept at exit
-      sys.addShutdownHook(graft.ops.Materialize.deleteRecursively(dir.toFile))
-    }
-    spark
-  }
 
   /** Harness form: local[cpus] with one shuffle partition per core. */
   def local(cpus: Int): SparkSession = build(s"local[$cpus]", cpus)

@@ -223,11 +223,9 @@ object Dedup {
     // whole report keeps DISTRIBUTED lineage end-to-end: one row per
     // delta doc scales with the ingest batch, which at 100 TB must never
     // transit the driver. The non-twinnable (xxhash throughput) form
-    // derives signatures inline and reliable-checkpoints them instead —
-    // distributed, lineage severed from the 64-slot aggregation its three
-    // consumers share.
+    // derives signatures inline, in the same lazy plan.
     val perDoc = if (twinnable) minHashSignaturesShared(spark, sfDir)
-      else minHashPerDoc(spark, sfDir, twinnable).checkpoint()
+      else minHashPerDoc(spark, sfDir, twinnable)
     val best = {
       val isDelta = col("doc_id") % deltaMod === deltaRem
       // index-side cap only: a single corpus doc in a bucket is already a
@@ -378,8 +376,9 @@ object Dedup {
       .orderBy(col("doc_a").asc, col("doc_b").asc)
 
   /** [[minHashPairs]] for corpus-scale consumers: the verified pair list
-    * stays DISTRIBUTED — reliable-checkpointed to sever its lineage off
-    * the call-scoped signature cache — instead of driver-materialized.
+    * stays DISTRIBUTED — pinned to the [[graft.ops.Materialize]] spill
+    * store, cut loose from the call-scoped signature cache — instead of
+    * driver-materialized.
     * Pair counts grow with dup density (a 100-way-duplicated corpus emits
     * ~n·dups/2 pairs), so past the [[graft.ops.Materialize]] driver
     * budget they must never transit the driver; this is the variant the
@@ -599,12 +598,12 @@ object Dedup {
       // queries and every later plan pays canonicalize-and-compare against
       // each 64-aggregate cached plan). Normal corpora: the verified pair
       // list is tiny (ids + one double) — driver-side materialization, no
-      // unreplicated block to lose with an executor, no write+read round
-      // trip. Heavy-dup corpora (materialize = false): pair counts scale
-      // with dup density, so the list reliable-checkpoints instead and
-      // stays distributed.
+      // write+read round trip. Heavy-dup corpora (materialize = false):
+      // pair counts scale with dup density, so the list is pinned to the
+      // spill store and stays distributed.
       if (materialize) graft.ops.Materialize.localOrSpill(verified)
-      else verified.checkpoint()
+      else graft.ops.Materialize.withSpillRoot(
+        graft.ops.Materialize.pin(verified, _))
     } finally perDoc.unpersist()
   }
 
@@ -1307,18 +1306,13 @@ object Dedup {
     // contracted graph has NO edges — every component has collapsed onto
     // its min id, which the per-round min-monotone labels preserve.
     //
-    // Each round is PINNED TO STORAGE (parquet spill + read-back): the
-    // label frame feeds the round several times, so a persist-only loop
-    // grows the logical plan exponentially — tier H measured that as a
-    // planner OOM long before any executor ran out. Parquet, not RDD
-    // checkpoint: a checkpointed LogicalRDD reports UNKNOWN stats
-    // (defaultSizeInBytes = Long.MaxValue) and multiplying that through
-    // the round's joins overflows the planner's BigInteger size
-    // estimate — a FileScan carries real stats, so round plans stay
-    // constant-size. Superseded rounds are deleted as the loop advances
-    // (only the final mapping's files back the returned frame); the
-    // spill root itself belongs to the spill store's lifecycle.
-    val sparkCC = pairs.sparkSession
+    // Each round is PINNED TO STORAGE ([[graft.ops.Materialize.pin]]):
+    // the label frame feeds the round several times, so a persist-only
+    // loop grows the logical plan exponentially — tier H measured that as
+    // a planner OOM long before any executor ran out. Superseded rounds
+    // are deleted as the loop advances (only the final mapping's files
+    // back the returned frame); the spill root itself belongs to the
+    // spill store's lifecycle.
     graft.ops.Materialize.withSpillRoot { spillRoot =>
     var roundN = 0
     // pin returns the frame AND its backing dir so superseded rounds can
@@ -1329,8 +1323,7 @@ object Dedup {
     // (it backs the returned frame; the shutdown hook sweeps it)
     def pinAt(df: DataFrame): (DataFrame, String) = {
       val p = s"$spillRoot/r$roundN"; roundN += 1
-      df.write.mode("overwrite").parquet(p)
-      (sparkCC.read.schema(df.schema).parquet(p), p)
+      (graft.ops.Materialize.pin(df, p), p)
     }
     def rmDir(p: String): Unit =
       graft.ops.Materialize.deleteRecursively(new java.io.File(p))
@@ -1398,10 +1391,10 @@ object Dedup {
     rmDir(curDir) // converged: the empty edge frame is never read again
     val labels = mapping
     // The converged edge-touching labels are already STORAGE-pinned
-    // (dup-graph-sized parquet — survives executor loss, unlike
-    // localCheckpoint blocks). The corpus-sized singleton majority stays
-    // lazy: it is a pure anti-join against the pinned labels, so nothing
-    // corpus-sized is ever materialized here.
+    // (dup-graph-sized parquet that survives executor loss). The
+    // corpus-sized singleton majority stays lazy: it is a pure anti-join
+    // against the pinned labels, so nothing corpus-sized is ever
+    // materialized here.
     val pinned = labels
     edges.unpersist()
     if (dropSingletons) pinned
@@ -1898,7 +1891,7 @@ object Dedup {
         }
       val cands = winners.filter(col("doc_freq") >= lit(cut))
       // ≤ topK rows hang off the call-scoped cache — driver-materialize
-      // before unpersisting (the localOrSpill idiom, not localCheckpoint)
+      // before unpersisting
       graft.ops.Materialize.localOrSpill(
         cands
           .select(col("gram"), col("doc_freq"), col("first_doc_id"))

@@ -503,8 +503,8 @@ object Graph {
     *
     * Scale shape per round: two left-semi joins prune the edge artifact
     * to the surviving induced subgraph and one hash-agg computes degrees
-    * — fixed-width (long,long) rows, each round persisted and the
-    * previous round dropped (the CC/pagerank loop discipline). The
+    * — fixed-width (long,long) rows, each round pinned to the spill store
+    * and the previous round's files deleted (the CC loop discipline). The
     * report is `rounds` rows, assembled driver-side from per-round
     * counts (bounded actions, like the Lloyd trainer).
     */
@@ -517,8 +517,8 @@ object Graph {
       .select("src", "dst")
     // Size-adaptive fast path (r13 optimization): the strong graph the
     // peel runs on fits the driver budget, so the per-round
-    // degree-agg + two semi-joins + eager localCheckpoint + two counts —
-    // ~4 scheduled jobs × `rounds` — collapse into one typed collect and
+    // degree-agg + two semi-joins + pin + two counts — ~4 scheduled
+    // jobs × `rounds` — collapse into one typed collect and
     // local integer arithmetic. Identical peeling recurrence, identical
     // report rows; past the cap the distributed loop below is the
     // unchanged scale branch.
@@ -553,7 +553,9 @@ object Graph {
       case None => () // scale branch below
     }
     val und = undLazy.persist()
-    try {
+    try graft.ops.Materialize.withSpillRoot { root =>
+      def rmDir(p: String): Unit =
+        graft.ops.Materialize.deleteRecursively(new java.io.File(p))
       var induced = und
       // round 1's `converged` compares against the FULL node universe
       // (the twin's n0) — not a sentinel — so a graph that is already
@@ -570,22 +572,22 @@ object Graph {
           .groupBy(col("node")).agg(count(lit(1)).as("deg"))
         val nodes = deg.filter(col("deg") >= k).select("node").persist()
         val nNodes = nodes.count()
-        // localCheckpoint SEVERS the lineage: `induced` feeds three
-        // consumers per round, so a persist-only loop triples the LOGICAL
-        // plan every iteration — 3^rounds subtrees and a planner OOM (the
-        // same failure mode tier H caught in the first distributed CC
-        // loop). The checkpointed frame is a leaf; plan size stays O(1).
-        val nextInduced = induced
+        // each round is pinned: `induced` feeds three consumers per round,
+        // so an unpinned loop grows the plan 3^rounds (a planner OOM)
+        val nextInduced = graft.ops.Materialize.pin(induced
           .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .localCheckpoint(true)
+          .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi"),
+          s"$root/r$r")
         val nEdges = nextInduced.count()
         report += ((r, nNodes, nEdges, nNodes == prevNodes))
         prevNodes = nNodes
         nodes.unpersist()
+        // round r-1's files are read by nothing from here on
+        rmDir(s"$root/r${r - 1}")
         induced = nextInduced
         r += 1
       }
+      rmDir(root) // the report is driver rows; no round is read again
       report.toSeq.toDF("round", "n_nodes", "n_edges", "converged")
         .orderBy(col("round").asc)
     } finally { und.unpersist(); () }

@@ -853,16 +853,12 @@ object TextStats {
       targetSource: String = "src0"): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
     val isT = col("source") === targetSource
-    // checkpointed ONCE (the knScore discipline): the tokenize + the
-    // two-level hash-agg otherwise re-run for each of the three
-    // consumers below (vocab→ratios, vocab→tot, per — r12 review)
     val perDocTok = docs
       .select(col("doc_id"), col("source"),
         explode(expr("""filter(split(lower(text), '\\s+'), t -> t <> '')"""))
           .as("w"))
       .groupBy(col("doc_id"), col("source"), col("w"))
       .agg(count(lit(1)).as("cnt"))
-      .checkpoint()
     val vocab = perDocTok.groupBy(col("w"))
       .agg(
         sum(when(isT, col("cnt")).otherwise(0L)).as("c_t"),
@@ -1422,15 +1418,8 @@ object TextStats {
     // of the stream (the model build and the scoring join) drop the
     // corpus-wide Exchange+Window the posexplode/lead form paid
     val docBigrams = adjacentBigrams(Tables.documents(spark, sfDir))
-    // the bigram table feeds FOUR consumers (left totals, continuation
-    // counts, the type total, and the per-doc stream join); without the
-    // reliable checkpoint each consumer re-runs the tokenize + window
-    // pass (~2× the whole query's cost measured at sf0.1). Checkpoint,
-    // not persist: lineage severed with nothing left in the CacheManager,
-    // and the blocks survive executor loss on a cluster.
     val big = docBigrams.groupBy(col("l"), col("r"))
       .agg(count(lit(1)).as("c12"))
-      .checkpoint()
     val left = big.groupBy(col("l"))
       .agg(sum(col("c12")).as("c1"), count(lit(1)).as("n1r"))
     val cont = big.groupBy(col("r"))

@@ -15,20 +15,24 @@ import org.apache.spark.sql.types.StructType
   * budget whatever the row width. Budget 0 sends every caller down its
   * distributed branch (how the parity specs pin both branches).
   *
-  * Why collect at all, and not `localCheckpoint`: it stores the result in
-  * UNREPLICATED executor block storage and truncates lineage — any
-  * executor lost after the call returns makes the frame unrecoverable
-  * instead of recomputed — and the block write+read round trip
-  * double-materializes results that are a few kilobytes. Collecting to
-  * the driver and rebuilding a local relation costs one pass, keeps the
-  * frame immune to executor loss (the rows ARE the data), and leaves the
-  * CacheManager empty.
+  * Why collect at all: collecting a small result to the driver and
+  * rebuilding a local relation costs one pass, keeps the frame immune to
+  * executor loss (the rows ARE the data), and leaves the CacheManager
+  * empty.
   *
-  * ONE SPILL STORE. Frames past the budget that must still be cut loose
-  * from call-scoped caches or loop lineage are pinned to parquet under a
-  * spill root ([[withSpillRoot]]): in flight while the owning call runs,
-  * releasable once it returns ([[releaseSpills]]), and swept by one
-  * shutdown hook at JVM exit.
+  * ONE WAY TO CUT LINEAGE TO STORAGE. A frame that must outlive a
+  * call-scoped cache, or a loop whose plan would otherwise grow every
+  * round, is pinned with [[pin]]: written to parquet under a spill root
+  * ([[withSpillRoot]]) and read back with its own schema. Parquet, not an
+  * RDD checkpoint: a checkpointed `LogicalRDD` reports unknown stats
+  * (`Long.MaxValue`), which the planner multiplies through every join
+  * above it, while a parquet `FileScan` carries the real file sizes.
+  *
+  * Lifecycle of a spill root: in flight while the owning call runs,
+  * releasable once it returns ([[releaseSpills]] deletes it, and with it
+  * the files behind every frame the call returned), and swept by one
+  * shutdown hook at JVM exit. A loop may delete what it no longer reads
+  * under its root as it advances.
   */
 object Materialize {
 
@@ -90,11 +94,18 @@ object Materialize {
     collectIfDriverSized(df) match {
       case Some(rows) =>
         df.sparkSession.createDataFrame(rows.toSeq.asJava, df.schema)
-      case None => withSpillRoot { root =>
-        df.write.mode("overwrite").parquet(root)
-        df.sparkSession.read.schema(df.schema).parquet(root)
-      }
+      case None => withSpillRoot(pin(df, _))
     }
+  }
+
+  /** Write `df` to parquet at `dir` (under a [[withSpillRoot]] root) and
+    * return it read back with `df`'s own schema, so the read starts no
+    * footer-inference job. The returned frame is a parquet scan: its
+    * lineage ends at `dir`, and it lives as long as `dir` does.
+    */
+  private[graft] def pin(df: DataFrame, dir: String): DataFrame = {
+    df.write.mode("overwrite").parquet(dir)
+    df.sparkSession.read.schema(df.schema).parquet(dir)
   }
 
   // roots whose owning call has returned: their files back returned
@@ -136,8 +147,9 @@ object Materialize {
 
   /** Delete every spill root whose owning call has returned, NOW instead
     * of at JVM exit. Caller contract: no frame returned by an earlier
-    * spilling call ([[localOrSpill]] past the budget, the distributed
-    * [[graft.ext.Dedup.connectedComponents]]) may be consumed after this
+    * pinning call ([[localOrSpill]] past the budget, the distributed
+    * [[graft.ext.Dedup.connectedComponents]],
+    * [[graft.ext.Dedup.minHashPairsDistributed]]) may be consumed after this
     * — its backing files are gone (reads throw, they do not corrupt).
     * Calls in flight on other threads are safe: their roots are not
     * releasable until they exit.

@@ -79,8 +79,7 @@ object ChatStream {
     * The view update is a write-aside + backup swap (the
     * [[graft.ops.Layout.compact]] pattern): the merged view writes to a
     * SIBLING directory while the live one is still being read — no
-    * self-overwrite, so no materialization (the previous localCheckpoint
-    * pinned the view in unreplicated executor blocks) — then the live dir
+    * self-overwrite, so no materialization — then the live dir
     * swaps out through a backup rename with crash auto-restore at the
     * next batch. No crash instant leaves the view unreadable or silently
     * truncated to one batch.

@@ -35,35 +35,45 @@ object CorpusIngest {
     StructField("fp", StringType),
     StructField("keeper", LongType)))
 
-  /** Snapshot read of the index: bind the plan to the parquet part-files
-    * present NOW, not to the directory. Parquet files are immutable and
-    * appends only ADD files, so the explicit file list is a consistent
-    * snapshot by construction — both batch consumers see identical state
-    * while the same micro-batch appends to the directory, with no
-    * materialization at all (the previous localCheckpoint pinned the
-    * whole index in executor blocks, corpus-sized at scale and lost with
-    * any executor).
+  /** The committed entries directly under `root` that `keep` accepts, as
+    * paths; none when `root` does not exist. Hadoop FileSystem, not
+    * java.io.File: an index lives wherever the deployment points it
+    * (hdfs://, s3a://, file:), and a local-only listing would silently
+    * judge every batch against an EMPTY index.
     */
-  private def readIndex(spark: SparkSession, indexPath: String): DataFrame = {
-    // Hadoop FileSystem, not java.io.File: the index lives wherever the
-    // deployment points it (hdfs://, s3a://, file:) and a local-only
-    // listing would silently judge every batch against an EMPTY index.
-    val path = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (fs.exists(path))
-        fs.listStatus(path).map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-          }
-          .map(_.toString)
-      else Array.empty[String]
-    if (parts.isEmpty)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), indexSchema)
-    else spark.read.schema(indexSchema).parquet(parts.toIndexedSeq: _*)
+  private def listCommitted(spark: SparkSession, root: String)(
+      keep: org.apache.hadoop.fs.FileStatus => Boolean): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.listStatus(p).toSeq.filter(keep).map(_.getPath.toString)
+    else Seq.empty
   }
+
+  /** Snapshot read: the plan binds to `paths` — part-files or epoch dirs
+    * listed NOW by [[listCommitted]] — not to their directory. Parquet
+    * files are immutable and appends only ADD files, so the explicit list
+    * is a consistent snapshot by construction: every consumer of one
+    * micro-batch sees the same state while the batch appends. Read with
+    * the known `schema`, so an epoch starts no footer-inference job; an
+    * empty list (an index that does not exist yet) reads as an empty
+    * frame.
+    */
+  private def readSnapshot(
+      spark: SparkSession, paths: Seq[String], schema: StructType): DataFrame =
+    if (paths.isEmpty)
+      spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+    else spark.read.schema(schema).parquet(paths: _*)
+
+  /** Snapshot of the parquet part-files (no marker or hidden file)
+    * committed under `indexPath`.
+    */
+  private def readIndexFiles(
+      spark: SparkSession, indexPath: String, schema: StructType): DataFrame =
+    readSnapshot(spark, listCommitted(spark, indexPath) { s =>
+      val n = s.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+    }, schema)
 
   /** Dedup one (micro-)batch against the index: returns the per-doc report
     * (new_doc_id, dup_of, is_dup) and the index rows the batch contributes.
@@ -219,9 +229,9 @@ object CorpusIngest {
     batch.persist()
     try {
       val spark = batch.sparkSession
-      // readIndex binds to the current file list, so both consumers
-      // see the same snapshot while newEntries appends to the path
-      val index = readIndex(spark, indexPath)
+      // the snapshot binds to the current file list, so both consumers
+      // see the same index while newEntries appends to the path
+      val index = readIndexFiles(spark, indexPath, indexSchema)
       val (report, newEntries) = dedupBatch(batch, index)
       report.write.mode("append").parquet(reportPath)
       newEntries.write.mode("append").parquet(indexPath)
@@ -247,28 +257,6 @@ object CorpusIngest {
     StructField("doc_id", LongType) +:
       StructField("shset", ArrayType(LongType)) +:
       (0 until 64).map(j => StructField(s"__m$j", LongType)))
-
-  /** Snapshot read of the SIGNATURE index (same file-list binding as
-    * [[readIndex]] — parquet appends only add files, so the explicit list
-    * is a consistent snapshot while this batch appends).
-    */
-  private def readSigIndex(spark: SparkSession, indexPath: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (fs.exists(path))
-        fs.listStatus(path).map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-          }
-          .map(_.toString)
-      else Array.empty[String]
-    if (parts.isEmpty)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), sigIndexSchema)
-    else spark.read.schema(sigIndexSchema).parquet(parts.toIndexedSeq: _*)
-  }
 
   /** Streaming incremental NEAR-dup ingest — the minhash face of
     * [[ingestDedup]], and the streaming face of
@@ -308,7 +296,7 @@ object CorpusIngest {
       threshold: Double = 0.5, maxBucket: Int = 64): Unit = {
     val sig = graft.ext.Dedup.minHashSignaturesOf(batch).persist()
     try {
-      val index = readSigIndex(batch.sparkSession, indexPath)
+      val index = readIndexFiles(batch.sparkSession, indexPath, sigIndexSchema)
       val (report, newEntries) =
         graft.ext.Dedup.nearDupBatch(sig, index, threshold, maxBucket)
       report.write.mode("append").parquet(reportPath)
@@ -316,36 +304,21 @@ object CorpusIngest {
     } finally { sig.unpersist(); () }
   }
 
-  /** Snapshot of one long id column off an index dir's committed parquet
-    * files (file-list binding, as in [[readIndex]] — appends only ADD
-    * files, so the explicit list is a consistent snapshot), read with the
-    * column's known schema so an epoch starts no footer-inference job;
-    * empty frame when the index doesn't exist yet. Shared by the vector,
-    * postings, and media ingest faces.
+  /** Snapshot of one long id column off an index dir's committed files;
+    * empty when the index does not exist yet. Shared by the vector,
+    * postings and media ingest faces.
     */
   private def committedIds(
-      spark: SparkSession, indexPath: String, idCol: String): DataFrame = {
-    val path = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val parts =
-      if (fs.exists(path))
-        fs.listStatus(path).map(_.getPath)
-          .filter { p =>
-            val n = p.getName
-            n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-          }
-          .map(_.toString)
-      else Array.empty[String]
-    val schema = StructType(Seq(StructField(idCol, LongType)))
-    if (parts.isEmpty)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else spark.read.schema(schema).parquet(parts.toIndexedSeq: _*)
-  }
+      spark: SparkSession, indexPath: String, idCol: String): DataFrame =
+    readIndexFiles(spark, indexPath, StructType(Seq(StructField(idCol, LongType))))
 
-  /** Snapshot of the vector index's vec_ids; empty when absent. */
-  private def readVecIndexIds(spark: SparkSession, indexPath: String): DataFrame =
-    committedIds(spark, indexPath, "vec_id")
+  /** Append `rows` to the index at `indexPath`; returns their schema, which
+    * reads the committed index back with no footer-inference job.
+    */
+  private def appendTo(indexPath: String, rows: DataFrame): StructType = {
+    rows.write.mode("append").parquet(indexPath)
+    rows.schema
+  }
 
   /** One foreachBatch body of [[ingestVectors]], exposed for the
     * replay-idempotence spec: anti-join the batch against the index's
@@ -356,14 +329,15 @@ object CorpusIngest {
     * as [[ingestDedupBody]].
     */
   private[graft] def vectorBatchBody(
-      batch: DataFrame, quantizerSeeds: DataFrame, indexPath: String): Unit = {
+      batch: DataFrame, quantizerSeeds: DataFrame,
+      indexPath: String): StructType = {
     batch.persist()
     try {
       val spark = batch.sparkSession
       val fresh = batch.join(
-        readVecIndexIds(spark, indexPath), Seq("vec_id"), "left_anti")
-      graft.ext.Similarity.deriveIndexRows(spark, fresh, quantizerSeeds)
-        .write.mode("append").parquet(indexPath)
+        committedIds(spark, indexPath, "vec_id"), Seq("vec_id"), "left_anti")
+      appendTo(indexPath,
+        graft.ext.Similarity.deriveIndexRows(spark, fresh, quantizerSeeds))
     } finally { batch.unpersist(); () }
   }
 
@@ -391,17 +365,10 @@ object CorpusIngest {
     vectors.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        vectorBatchBody(batch, quantizerSeeds, indexPath)
+        vectorBatchBody(batch, quantizerSeeds, indexPath); ()
       }
       .start()
   }
-
-  /** Snapshot of the streamed postings index's doc_ids; empty when
-    * absent.
-    */
-  private def readPostingsDocIds(
-      spark: SparkSession, indexPath: String): DataFrame =
-    committedIds(spark, indexPath, "doc_id")
 
   /** One foreachBatch body of [[ingestPostings]], exposed for the
     * replay-idempotence spec: anti-join the batch against the index's
@@ -411,7 +378,7 @@ object CorpusIngest {
     * holds a duplicate doc's rows — the [[vectorBatchBody]] contract.
     */
   private[graft] def postingsBatchBody(
-      batch: DataFrame, indexPath: String): Unit = {
+      batch: DataFrame, indexPath: String): StructType = {
     batch.persist()
     try {
       val spark = batch.sparkSession
@@ -419,9 +386,8 @@ object CorpusIngest {
       // delivering the same shard row twice) would double its tf/dl in
       // the groupBy — collapse to one row per doc before tokenizing
       val fresh = batch.dropDuplicates("doc_id").join(
-        readPostingsDocIds(spark, indexPath), Seq("doc_id"), "left_anti")
-      graft.ext.Search.postingsOf(fresh)
-        .write.mode("append").parquet(indexPath)
+        committedIds(spark, indexPath, "doc_id"), Seq("doc_id"), "left_anti")
+      appendTo(indexPath, graft.ext.Search.postingsOf(fresh))
     } finally { batch.unpersist(); () }
   }
 
@@ -442,7 +408,7 @@ object CorpusIngest {
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        postingsBatchBody(batch, indexPath)
+        postingsBatchBody(batch, indexPath); ()
       }
       .start()
 
@@ -472,12 +438,12 @@ object CorpusIngest {
     def shard(r: Int): DataFrame = emb
       .filter(pmod(col("vec_id"), lit(8L)) === r.toLong)
       .select("vec_id", "embedding", "label")
-    withMicroBatchPartitions(spark) {
+    val written = withMicroBatchPartitions(spark) {
       vectorBatchBody(shard(0), seeds, dir)
       vectorBatchBody(shard(4), seeds, dir)
       vectorBatchBody(shard(4), seeds, dir) // replay: must append nothing
     }
-    spark.read.parquet(dir)
+    spark.read.schema(written).parquet(dir)
       .select(Seq(col("vec_id"), col("cell_id"),
         round(col("sim"), 6).as("sim")) ++
         (0 to 3).map(m => col(s"code$m").cast("long").as(s"code$m")): _*)
@@ -502,12 +468,12 @@ object CorpusIngest {
       .filter(pmod(col("doc_id"), lit(4L)) === 0L)
     def shard(r: Int): DataFrame =
       docs.filter(pmod(col("doc_id"), lit(8L)) === r.toLong)
-    withMicroBatchPartitions(spark) {
+    val written = withMicroBatchPartitions(spark) {
       postingsBatchBody(shard(0), dir)
       postingsBatchBody(shard(4), dir)
       postingsBatchBody(shard(4), dir) // replay: must append nothing
     }
-    spark.read.parquet(dir)
+    spark.read.schema(written).parquet(dir)
       .filter(pmod(col("doc_id"), lit(23L)) === 0L)
       .select(col("doc_id"), col("tok"), col("tf"), col("dl"))
       .orderBy(col("doc_id").asc, col("tok").asc)
@@ -522,7 +488,8 @@ object CorpusIngest {
     * replay after any crash window re-derives zero rows — the
     * [[vectorBatchBody]] contract.
     */
-  private[graft] def mediaBatchBody(batch: DataFrame, indexPath: String): Unit = {
+  private[graft] def mediaBatchBody(
+      batch: DataFrame, indexPath: String): StructType = {
     batch.persist()
     try {
       val spark = batch.sparkSession
@@ -531,8 +498,7 @@ object CorpusIngest {
       val fresh = batch.dropDuplicates("media_id").join(
         committedIds(spark, indexPath, "media_id"), Seq("media_id"),
         "left_anti")
-      graft.ext.Multimodal.mediaSignaturesOf(fresh)
-        .write.mode("append").parquet(indexPath)
+      appendTo(indexPath, graft.ext.Multimodal.mediaSignaturesOf(fresh))
     } finally { batch.unpersist(); () }
   }
 
@@ -554,7 +520,7 @@ object CorpusIngest {
     media.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        mediaBatchBody(batch, indexPath)
+        mediaBatchBody(batch, indexPath); ()
       }
       .start()
 
@@ -572,12 +538,12 @@ object CorpusIngest {
       .filter(pmod(col("media_id"), lit(4L)) === 0L)
     def shard(r: Int): DataFrame =
       media.filter(pmod(col("media_id"), lit(8L)) === r.toLong)
-    withMicroBatchPartitions(spark) {
+    val written = withMicroBatchPartitions(spark) {
       mediaBatchBody(shard(0), dir)
       mediaBatchBody(shard(4), dir)
       mediaBatchBody(shard(4), dir) // replay: must append nothing
     }
-    spark.read.parquet(dir)
+    spark.read.schema(written).parquet(dir)
       .select(col("media_id"), col("media_type"), col("phash"),
         col("is_perceptual"))
       .orderBy(col("media_id").asc)
@@ -596,36 +562,17 @@ object CorpusIngest {
     StructField("l_partkey", LongType),
     StructField("pc", LongType)))
 
-  /** Committed `epoch=N` subdirs of an ingest index root, read with an
-    * explicit schema (an empty or absent index must read as an empty
-    * frame, never a schema-inference throw); `before` restricts to
-    * epochs strictly below it — the pre-batch state a replayed epoch
-    * re-derives from.
+  /** Committed `epoch=N` subdirs of an ingest index root; `before`
+    * restricts to epochs strictly below it — the pre-batch state a
+    * replayed epoch re-derives from.
     */
   private def epochDirList(
-      spark: SparkSession, root: String, before: Option[Long]): Array[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-        .filter { d =>
-          d.getName.startsWith("epoch=") &&
-            d.getName.stripPrefix("epoch=").toLongOption.exists(e =>
-              before.forall(e < _))
-        }
-        .map(_.toString)
-    else Array.empty[String]
-  }
-
-  private def readEpochDirs(
-      spark: SparkSession, root: String, before: Option[Long],
-      schema: StructType): DataFrame = {
-    val dirs = epochDirList(spark, root, before)
-    if (dirs.isEmpty)
-      spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else spark.read.schema(schema).parquet(dirs.toIndexedSeq: _*)
-  }
+      spark: SparkSession, root: String, before: Option[Long]): Seq[String] =
+    listCommitted(spark, root) { s =>
+      val n = s.getPath.getName
+      s.isDirectory && n.startsWith("epoch=") &&
+        n.stripPrefix("epoch=").toLongOption.exists(e => before.forall(e < _))
+    }
 
   /** One foreachBatch body of [[ingestEdges]] — the streaming face of
     * the BASKET family's generational contract
@@ -702,8 +649,7 @@ object CorpusIngest {
       val oldTouched: Option[Array[(Long, Long)]] =
         if (priorDirs.isEmpty) Some(Array.empty)
         else graft.ops.Materialize.collectIfDriverSized(
-          spark.read.schema(memberSchema)
-            .parquet(priorDirs.toIndexedSeq: _*)
+          readSnapshot(spark, priorDirs, memberSchema)
             .join(broadcast(touched.toSeq.toDF("l_orderkey")),
               Seq("l_orderkey"), "left_semi")
             .as[(Long, Long)])
@@ -865,11 +811,7 @@ object CorpusIngest {
       // whole body collapses to the three concurrent epoch writes with no
       // probe action and no join legs (r14: one scheduled wave, not two)
       val priorDirs = epochDirList(spark, s"$indexPath/members", Some(epoch))
-      val oldMembers =
-        if (priorDirs.isEmpty)
-          spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), memberSchema)
-        else spark.read.schema(memberSchema).parquet(priorDirs.toIndexedSeq: _*)
+      val oldMembers = readSnapshot(spark, priorDirs, memberSchema)
       val touched = newRaw.select("l_orderkey").distinct()
       val oldTouched =
         (if (priorDirs.isEmpty) oldMembers
@@ -979,7 +921,7 @@ object CorpusIngest {
     */
   private[graft] def readEdgeIndex(
       spark: SparkSession, indexPath: String): DataFrame =
-    readEpochDirs(spark, s"$indexPath/edges", None, edgeSchema)
+    readSnapshot(spark, epochDirList(spark, s"$indexPath/edges", None), edgeSchema)
       .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
       .filter(col("w") > 0)
 
@@ -992,7 +934,8 @@ object CorpusIngest {
     */
   private[graft] def readCensusIndex(
       spark: SparkSession, indexPath: String): DataFrame =
-    readEpochDirs(spark, s"$indexPath/census", None, censusSchema)
+    readSnapshot(spark, epochDirList(spark, s"$indexPath/census", None),
+      censusSchema)
       .groupBy(col("l_partkey")).agg(sum(col("pc")).as("pc"))
       .filter(col("pc") > 0 || col("l_partkey") === -1L)
 

@@ -493,6 +493,25 @@ class PlanQualitySpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
+  test("no plan cuts lineage with an RDD checkpoint; the session has no checkpoint dir") {
+    // a checkpointed frame is a LogicalRDD leaf with unknown size stats;
+    // the library pins to parquet (a sized FileScan) instead
+    def assertNoRdd(what: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val p = df.queryExecution.optimizedPlan.toString
+      assert(!p.contains("LogicalRDD"), s"$what: ${p.take(3000)}")
+    }
+    for (q <- Seq("kn_score", "dsir_weights"))
+      assertNoRdd(q, SparkEntry.queries(q)(spark, sf))
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_pins").toString
+    graft.ext.DedupScaleSpec.writeFixture(spark, dir)
+    assertNoRdd("minHashPairsDistributed",
+      graft.ext.Dedup.minHashPairsDistributed(spark, dir))
+    assertNoRdd("incrementalMinHash",
+      graft.ext.Dedup.incrementalMinHash(spark, dir, twinnable = false))
+    assert(spark.sparkContext.getCheckpointDir.isEmpty,
+      spark.sparkContext.getCheckpointDir)
+  }
+
   test("dimension joins broadcast; hot paths stay in whole-stage codegen") {
     val p = plan("trades")
     assert(p.contains("BroadcastHashJoin"), p.take(2000))

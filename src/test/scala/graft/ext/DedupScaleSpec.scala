@@ -1,5 +1,6 @@
 package graft.ext
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -16,23 +17,7 @@ class DedupScaleSpec extends SparkSpec {
 
   private val dir = "/tmp/graft_test_ccscale"
 
-  private def writeFixture(): Unit = {
-    import spark.implicits._
-    // two planted dup families + unrelated docs, long enough for 16-token
-    // spans: family A = identical docs, family B = near-identical docs
-    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
-      "lambda mu nu xi omicron pi rho sigma tau upsilon"
-    val b = a.replace("kappa", "koppa")
-    val c = "one two three four five six seven eight nine ten eleven " +
-      "twelve thirteen fourteen fifteen sixteen seventeen eighteen"
-    Seq(
-      (1L, a, "en", "s"), (2L, a, "en", "s"), (3L, b, "en", "s"),
-      (10L, c, "en", "s"),
-      (20L, "short text only", "en", "s"))
-      .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-  }
+  private def writeFixture(): Unit = DedupScaleSpec.writeFixture(spark, dir)
 
   test("minHashMembership: distributed CC branch equals the driver union-find") {
     writeFixture()
@@ -126,5 +111,28 @@ class DedupScaleSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("graft_dot") &&
       e.getMessage.contains("2 arguments"), e.getMessage)
+  }
+}
+
+object DedupScaleSpec {
+
+  /** Two planted dup families plus unrelated docs, long enough for
+    * 16-token spans: family A = identical docs, family B = near-identical
+    * docs. Written as `dir/documents.parquet`.
+    */
+  def writeFixture(spark: SparkSession, dir: String): Unit = {
+    import spark.implicits._
+    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
+      "lambda mu nu xi omicron pi rho sigma tau upsilon"
+    val b = a.replace("kappa", "koppa")
+    val c = "one two three four five six seven eight nine ten eleven " +
+      "twelve thirteen fourteen fifteen sixteen seventeen eighteen"
+    Seq(
+      (1L, a, "en", "s"), (2L, a, "en", "s"), (3L, b, "en", "s"),
+      (10L, c, "en", "s"),
+      (20L, "short text only", "en", "s"))
+      .map { case (id, t, l, s) => (id, t, l, s, t.length.toLong) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
   }
 }

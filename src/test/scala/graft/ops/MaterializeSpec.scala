@@ -27,6 +27,14 @@ class MaterializeSpec extends SparkSpec {
       spilled.inputFiles.forall(_.contains("graft_spill")),
       "past the budget the frame must be backed by the spill store")
     assert(spilled.as[Long].collect().sorted.toSeq === (0L until 1000L))
+    // the distributed pair list is pinned to the same store at any budget
+    val pairsDir = java.nio.file.Files.createTempDirectory("graft_pairs").toString
+    graft.ext.DedupScaleSpec.writeFixture(spark, pairsDir)
+    val pairs = Dedup.minHashPairsDistributed(spark, pairsDir)
+    assert(pairs.inputFiles.nonEmpty &&
+      pairs.inputFiles.forall(_.contains("graft_spill")),
+      "the distributed pair list must be backed by the spill store")
+    assert(pairs.count() > 0L)
     // a call still in flight keeps its root through a concurrent release
     Materialize.withSpillRoot { root =>
       Materialize.releaseSpills()
