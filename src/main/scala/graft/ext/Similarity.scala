@@ -261,8 +261,8 @@ object Similarity {
     // node per centroid) instead of `expr()` strings: this plan embeds
     // 16 seeds × 64 doubles × 2 score families + 64 codebook subvectors,
     // and parsing+analyzing them as CreateArray trees dominated the
-    // per-call plan cost (ProfileIngest: ~0.7 s fixed at 10 rows — paid
-    // per streaming micro-batch). Same Literal doubles, same DotProduct
+    // per-call plan cost (profiled at ~0.7 s fixed on a 10-row input —
+    // paid per streaming micro-batch). Same Literal doubles, same DotProduct
     // node, bit-identical results; only the plan-build cost moves.
     val gdot = graft.functions.GraftFunctions.dot _
     val unitLits = (0 until sm.size).map(i => lit(sm.unitVec(i)))

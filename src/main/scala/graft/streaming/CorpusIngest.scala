@@ -748,14 +748,13 @@ object CorpusIngest {
     // row object into the task binary — measured ~4 µs/row, 1.0 s on a
     // 240k-row edge delta; the array closures move the same data as bulk
     // bytes and the tuple encoder runs codegen'd inside the task). File
-    // count rides the micro-batch sizing knob; the three independent
+    // count is the micro-batch partition count; the three independent
     // sinks are submitted concurrently like the distributed branch's,
     // settled before rethrow.
     val sp = spark; import sp.implicits._
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    val mb = math.max(1,
-      spark.conf.get("graft.microBatchPartitions", "4").toInt)
+    val mb = MicroBatchPartitions
     def stripe(s: Long, n: Int): Range =
       ((s * n / mb).toInt until ((s + 1) * n / mb).toInt)
     def writePairs(rows: Seq[(Long, Long)], names: (String, String),
@@ -1011,22 +1010,22 @@ object CorpusIngest {
     */
   private[graft] val CensusMark = -9L
 
-  /** Run `body` with micro-batch-sized shuffle partitions, restoring the
-    * session's setting after. The ingest-face bodies run ~10-stage DAGs
-    * over DELTA-sized batches; at the session's cluster-sized partition
-    * count those stages are task-launch-overhead bound (the edge face
-    * profiled 2× faster at 4–8 partitions than at 32 on identical data —
-    * BASELINE c12). This is exactly the knob a real streaming deployment
-    * sizes to its micro-batch volume, applied face-scoped; results are
-    * partition-count-invariant (hash-pinned at both SFs), only the job
-    * overhead moves.
+  /** Shuffle partitions of an epoch body, and write stripes of the edge
+    * body's driver branch. The ingest-face bodies run ~10-stage DAGs over
+    * DELTA-sized batches; at the session's cluster-sized partition count
+    * those stages are task-launch-overhead bound (the edge face profiled
+    * 2× faster at 4–8 partitions than at 32 on identical data — BASELINE
+    * c12). Results are partition-count-invariant (hash-pinned at both
+    * SFs); only the job overhead moves.
+    */
+  private val MicroBatchPartitions = 4
+
+  /** Run `body` with [[MicroBatchPartitions]] shuffle partitions,
+    * restoring the session's setting after.
     */
   private def withMicroBatchPartitions[T](spark: SparkSession)(body: => T): T = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    // overridable per deployment: a stream sizes this to its micro-batch
-    // volume (the faces' delta batches profile best at 4)
-    val mb = spark.conf.get("graft.microBatchPartitions", "4")
-    spark.conf.set("spark.sql.shuffle.partitions", mb)
+    spark.conf.set("spark.sql.shuffle.partitions", MicroBatchPartitions.toString)
     try body
     finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }

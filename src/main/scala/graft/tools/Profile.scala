@@ -1,185 +1,151 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Path, Paths}
 
-import graft.io.Tables
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Dev tool: stage-level timing probes for the heavy oracle-checkable
-  * queries — where does the signature pass actually spend its time?
-  * Usage: sbt "runMain graft.tools.Profile <sfDir>"
+import graft.{SparkEntry, Verify}
+import graft.obs.{Counts, QueryRecorder}
+import graft.ops.{Layout, Materialize}
+
+/** Profiles registered queries: one record per query, split into its
+  * build (the registry call that returns the frame, with any eager driver
+  * work and artifact builds) and its exec (the whole result written to a
+  * `noop` sink). Usage:
   *
-  * Findings at sf0.1 (r5): tokenize+window+sha ≈ 0.5 s warm; the combined
-  * 64-slot + collect_set aggregate adds ≈ 0.8 s (ObjectHashAggregate,
-  * interpreted slot updates). The split-aggregation variant probed below
-  * looked cheaper stage-by-stage but benched NET SLOWER end-to-end (extra
-  * job + join overhead) — see Dedup.minHashPerDoc's scaladoc; kept here so
-  * the next tuning round starts from data, not guesses.
+  *   sbt "runMain graft.tools.Profile [sfDir] [--budget BYTES] [name ...]"
+  *
+  * `sfDir` defaults to `$SPARK_GRAFT_SF_DIR`; no names profiles the whole
+  * registry. `--budget` sets the driver budget (`graft.driverBudgetBytes`)
+  * for the run; 0 sends every size-adaptive operator down its distributed
+  * branch and every local-or-spill materialization to the spill store.
+  *
+  * Each query runs four times, dropping its cached frames after each:
+  * a warm-up (build, `count()`, noop) that builds artifacts and compiles
+  * the code of both plans (`count()` prunes the output, so its plans
+  * differ); an untraced full-output run (build, noop); and a traced run,
+  * which runs build and exec under the job groups `<name>/build` and
+  * `<name>/exec` of a [[QueryRecorder]], then times `count()` of the same
+  * frame outside either group. Even-numbered queries run untraced first,
+  * odd ones traced first, so warm-up drift does not favour either side;
+  * the untraced and traced full-output totals measure the recorder's own
+  * overhead.
+  *
+  * Prints one JSON line per query and one of totals, and writes the same
+  * record to PROFILE_LAST.json.
   */
 object Profile {
+  private final case class Phase(
+      s: Double = 0.0, counts: Counts = Counts(),
+      builds: Long = 0L, refreshes: Long = 0L) {
+    def +(o: Phase): Phase =
+      Phase(s + o.s, counts + o.counts, builds + o.builds, refreshes + o.refreshes)
+    def json: String = Seq(
+      "s" -> num(s), "jobs" -> counts.jobs, "stages" -> counts.stages,
+      "tasks" -> counts.tasks, "plan_ms" -> num(counts.planNs / 1e6),
+      "shuffle_read_b" -> counts.shuffleReadBytes,
+      "shuffle_write_b" -> counts.shuffleWriteBytes,
+      "spill_b" -> counts.spillBytes, "result_b" -> counts.resultBytes,
+      "artifact_builds" -> builds, "artifact_refreshes" -> refreshes)
+      .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+  }
+
+  private final case class Row(name: String, build: Phase = Phase(),
+      exec: Phase = Phase(), countS: Double = 0.0, untracedS: Double = 0.0,
+      error: Option[String] = None) {
+    def json: String =
+      s"""{"name":${Verify.jsonString(name)},"count_s":${num(countS)},""" +
+        s""""untraced_full_s":${num(untracedS)},""" +
+        s""""build":${build.json},"exec":${exec.json}""" +
+        error.fold("")(e => s""","error":${Verify.jsonString(e)}""") + "}"
+  }
+
+  private def num(d: Double): String =
+    BigDecimal(d).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val usage = "usage: Profile [sfDir] [--budget BYTES] [name ...]"
+    val i = args.indexOf("--budget")
+    val budget = if (i < 0) None else Some(args(i + 1).toLong)
+    val pos = (if (i < 0) args else args.take(i) ++ args.drop(i + 2)).toSeq
+    val (sfDir, names) = pos match {
+      case sf +: rest if !SparkEntry.queries.contains(sf) => (sf, rest)
+      case _ => (sys.env.getOrElse("SPARK_GRAFT_SF_DIR", sys.error(usage)), pos)
+    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    def timed(name: String)(f: => Long): Unit = {
-      val t0 = System.nanoTime(); val n = f
-      println(f"PROFILE $name rows=$n sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-      spark.catalog.clearCache()
-    }
-    val toks = """filter(split(lower(text), '\\s+'), t -> t <> '')"""
-    def tokenRows = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), posexplode(expr(toks)).as(Seq("pos", "tok")))
-    // stage 1: tokenize + explode only
-    timed("tokenize")(tokenRows.count())
-    // stage 2: + window leads (the doc_id shuffle) + concat
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("pos").asc)
-    def shingles = tokenRows.withColumn("shingle",
-      concat_ws(" ", col("tok"), lead(col("tok"), 1).over(w), lead(col("tok"), 2).over(w)))
-    timed("tokenize+window")(shingles.count())
-    // stage 3: + sha2/conv hash
-    def hashed = shingles.select(col("doc_id"),
-      conv(substring(sha2(col("shingle"), 256), 1, 15), 16, 10).cast("long").as("sh"))
-    timed("tokenize+window+sha")(hashed.count())
-    // stage 4: + the 64 Carter-Wegman min-aggregates + shingle set
-    val slots = (0 until 64).map { j =>
-      min(pmod(lit(graft.ext.Dedup.permA(j)) * col("__h") + lit(graft.ext.Dedup.permB(j)),
-        lit(graft.ext.Dedup.MinHashP))).as(s"__m$j")
-    }
-    timed("perDoc-agg")(hashed
-      .withColumn("__h", shiftrightunsigned(col("sh"), 32))
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_set(col("sh"))).as("shset"), slots: _*)
-      .count())
-    // alternative hash: xxhash64 instead of sha2 (the non-twinnable family)
-    def hashedXx = shingles.select(col("doc_id"), xxhash64(col("shingle")).as("sh"))
-    timed("tokenize+window+xxhash")(hashedXx.count())
-    // hypothesis: collect_set drags the 64 min-slots onto the object-hash
-    // aggregate path; split aggregations + join may beat the combined agg
-    def based = hashed.withColumn("__h", shiftrightunsigned(col("sh"), 32))
-    timed("agg-min-slots-only")(based
-      .groupBy(col("doc_id")).agg(slots.head, slots.tail: _*).count())
-    timed("agg-collect-set-only")(based
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_set(col("sh"))).as("shset")).count())
-    timed("agg-split-join")(based
-      .groupBy(col("doc_id")).agg(slots.head, slots.tail: _*)
-      .join(based.groupBy(col("doc_id"))
-        .agg(array_sort(collect_set(col("sh"))).as("shset")), Seq("doc_id"))
-      .count())
-    // where does lsh_recall_sampled spend its ~1.5 s? (r6 probe)
-    timed("recall-slice-docs") {
-      graft.io.Tables.documents(spark, sfDir)
-        .filter(graft.ext.Dedup.shaBucket(col("doc_id"), 8L) === 0L).count()
-    }
-    timed("recall-lossless-slice") {
-      val docs = graft.io.Tables.documents(spark, sfDir)
-        .filter(graft.ext.Dedup.shaBucket(col("doc_id"), 8L) === 0L)
-      graft.ext.Dedup.jaccardPrefixPairsOf(docs, 0.5, 256L).count()
-    }
-    timed("recall-lsh-slice") {
-      graft.ext.Dedup.minHashPairsShared(spark, sfDir)
-        .filter(graft.ext.Dedup.shaBucket(col("doc_a"), 8L) === 0L &&
-          graft.ext.Dedup.shaBucket(col("doc_b"), 8L) === 0L).count()
-    }
-    timed("recall-full")(
-      graft.ext.Dedup.lshRecallSampled(spark, sfDir).count())
-    // where does copurchase_communities spend its ~2 s? (r6 probe)
-    timed("comm-artifact-scan")(
-      graft.ext.Graph.coPurchaseEdges(spark, sfDir).count())
-    timed("comm-strong-filter")(
-      graft.ext.Graph.coPurchaseEdges(spark, sfDir)
-        .filter(col("src") < col("dst") && col("w") >= 2L).count())
-    timed("comm-full")(
-      graft.ext.Graph.copurchaseCommunities(spark, sfDir).count())
-    timed("comm-full-again")(
-      graft.ext.Graph.copurchaseCommunities(spark, sfDir).count())
-    // where does the streaming-edge face spend its time? (r12 probe:
-    // bench saw 11.6 s at the % 4 slice before the cancel-leg
-    // short-circuit + % 8 slice)
-    timed("edge-face-total")(
-      graft.streaming.CorpusIngest.edgeIngestFace(spark, sfDir).count())
-    locally {
-      val dir = "/root/repo/target/profile_edge_idx"
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
-      val lines = Tables.lineitem(spark, sfDir)
-        .filter(pmod(col("l_orderkey"), lit(8L)) === 0L)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"))
-      def shard(r: Int) = lines
-        .filter(pmod(col("l_linenumber"), lit(2L)) === r.toLong)
-        .select(col("l_orderkey"), col("l_partkey"))
-      timed("edge-body-0") {
-        graft.streaming.CorpusIngest.edgeBatchBody(shard(0), dir, 0L); 0L
-      }
-      timed("edge-body-1") {
-        graft.streaming.CorpusIngest.edgeBatchBody(shard(1), dir, 1L); 0L
-      }
-      timed("edge-body-1-replay") {
-        graft.streaming.CorpusIngest.edgeBatchBody(shard(1), dir, 1L); 0L
-      }
-      timed("edge-readback")(
-        graft.streaming.CorpusIngest.readEdgeIndex(spark, dir).count())
-      timed("edge-body-1-noaqe") {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try run(spark, sfDir, names, budget, Paths.get("PROFILE_LAST.json"))
+      .foreach(println)
+    finally spark.stop()
+  }
+
+  /** Profiles `names` (all registered queries when empty) over `sfDir`,
+    * writes the record to `out` and returns the lines it prints.
+    */
+  def run(spark: SparkSession, sfDir: String, names: Seq[String],
+      budget: Option[Long], out: Path): Seq[String] = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not registered: ${unknown.mkString(", ")}")
+    val fns = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter(q => names.isEmpty || names.contains(q._1))
+    val prevBudget = spark.conf.getOption(Materialize.BudgetConf)
+    budget.foreach(b => spark.conf.set(Materialize.BudgetConf, b.toString))
+    try {
+      spark.range(100).selectExpr("count(*)").collect()
+      def noop(df: DataFrame): Unit =
+        df.write.format("noop").mode("overwrite").save()
+      def once[T](body: => T): T = try body finally spark.catalog.clearCache()
+      val rows = fns.zipWithIndex.map { case ((name, fn), i) =>
+        def untraced(): Double = once(timed(noop(fn(spark, sfDir)))._2)
+        def traced(): Row = once {
+          val rec = QueryRecorder.attach(spark)
+          try {
+            val (df, build) = phase(rec, s"$name/build")(fn(spark, sfDir))
+            val (_, exec) = phase(rec, s"$name/exec")(noop(df))
+            Row(name, build, exec, timed(df.count())._2)
+          } finally rec.detach()
+        }
         try {
-          graft.streaming.CorpusIngest.edgeBatchBody(shard(1), dir, 1L); 0L
-        } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-      }
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      timed("edge-body-1-p4") {
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          graft.streaming.CorpusIngest.edgeBatchBody(shard(1), dir, 1L); 0L
-        } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
-      timed("edge-body-1-noaqe-p4") {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          graft.streaming.CorpusIngest.edgeBatchBody(shard(1), dir, 1L); 0L
-        } finally {
-          spark.conf.set("spark.sql.adaptive.enabled", "true")
-          spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+          once { val df = fn(spark, sfDir); df.count(); noop(df) }
+          if (i % 2 == 0) { val u = untraced(); traced().copy(untracedS = u) }
+          else traced().copy(untracedS = untraced())
+        } catch { case e: Exception =>
+          Row(name, error = Some(String.valueOf(e.getMessage)))
         }
       }
-      // body-1 sub-steps, replayed by hand against the committed epoch 0
-      val newRaw = shard(1).distinct().persist()
-      timed("edge-s1-newraw")(newRaw.count())
-      val oldMembers = spark.read.parquet(s"$dir/members/epoch=0")
-      val touched = newRaw.select("l_orderkey").distinct()
-      val oldTouched = oldMembers
-        .join(touched, Seq("l_orderkey"), "left_semi").persist()
-      timed("edge-s2-oldtouched")(oldTouched.count())
-      val newOnly = newRaw.join(oldTouched,
-        Seq("l_orderkey", "l_partkey"), "left_anti").persist()
-      timed("edge-s3-newonly")(newOnly.count())
-      val mergedSz = oldTouched.unionByName(newOnly)
-        .groupBy(col("l_orderkey")).agg(count(lit(1)).as("__m")).persist()
-      timed("edge-s4-mergedsz")(mergedSz.count())
-      val oldSz = oldTouched.groupBy(col("l_orderkey"))
-        .agg(count(lit(1)).as("__o"))
-      val maxB = graft.ext.Graph.MaxBasket
-      timed("edge-s5-crossed-empty") {
-        val crossed = mergedSz.filter(col("__m") > maxB)
-          .join(oldSz, Seq("l_orderkey"))
-          .filter(col("__o").between(2L, maxB))
-        if (crossed.isEmpty) 0L else 1L
-      }
-      val okOrders = mergedSz.filter(col("__m") <= maxB).select("l_orderkey")
-      timed("edge-s6-delta-write") {
-        graft.ext.Graph.edgeDelta(newOnly, oldTouched, okOrders)
-          .write.mode("overwrite")
-          .parquet("/root/repo/target/profile_edge_scratch")
-        0L
-      }
-      timed("edge-s7-members-write") {
-        newOnly.write.mode("overwrite")
-          .parquet("/root/repo/target/profile_edge_scratch2")
-        0L
-      }
-    }
-    spark.stop()
+      val ok = rows.filter(_.error.isEmpty)
+      val build = ok.map(_.build).foldLeft(Phase())(_ + _)
+      val exec = ok.map(_.exec).foldLeft(Phase())(_ + _)
+      val totals = s"""{"rows":${rows.size},"failed":${rows.size - ok.size},""" +
+        s""""count_s":${num(ok.map(_.countS).sum)},"build":${build.json},""" +
+        s""""exec":${exec.json},""" +
+        s""""untraced_full_s":${num(ok.map(_.untracedS).sum)},""" +
+        s""""traced_full_s":${num(build.s + exec.s)}}"""
+      val rowLines = rows.map(_.json)
+      Files.write(out, (s"""{"sf":${Verify.jsonString(sfDir)},""" +
+        s""""cpus":${spark.sparkContext.defaultParallelism},""" +
+        s""""budget_bytes":${budget.fold("null")(_.toString)},""" +
+        s""""rows":[\n${rowLines.mkString(",\n")}\n],""" +
+        s""""totals":$totals}""" + "\n").getBytes("UTF-8"))
+      rowLines :+ totals
+    } finally prevBudget.fold(spark.conf.unset(Materialize.BudgetConf))(
+      spark.conf.set(Materialize.BudgetConf, _))
+  }
+
+  private def timed[T](body: => T): (T, Double) = {
+    val t0 = System.nanoTime()
+    val r = body
+    (r, (System.nanoTime() - t0) / 1e9)
+  }
+
+  /** Runs `body` as one recorded phase: its wall seconds, its Spark counts
+    * and the artifact builds and refreshes it caused.
+    */
+  private def phase[T](rec: QueryRecorder, group: String)(body: => T): (T, Phase) = {
+    val (b0, r0) = (Layout.buildCount.get, Layout.refreshCount.get)
+    val (out, s) = rec.phase(group)(timed(body))
+    (out, Phase(s, rec(group), Layout.buildCount.get - b0,
+      Layout.refreshCount.get - r0))
   }
 }

@@ -214,9 +214,10 @@ object StressTier {
     // 9 (10 replicas per family) probe the index (90 per family) — every
     // delta doc must report its family keeper (rep 0 = family * reps,
     // jaccard 1, smallest corpus id wins the tie)
-    val (inc, tInc) = timed("b.incremental_near")(
-      Dedup.incrementalMinHash(spark, dir, maxBucket = 128).persist())
-    val nDelta = inc.count()
+    val ((inc, nDelta), tInc) = timed("b.incremental_near") {
+      val inc = Dedup.incrementalMinHash(spark, dir, maxBucket = 128).persist()
+      (inc, inc.count())
+    }
     val missed = inc.filter(!col("is_dup") ||
       col("dup_of") =!= (floor(col("new_doc_id") / reps) * reps).cast("long"))
       .count()

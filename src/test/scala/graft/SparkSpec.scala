@@ -23,6 +23,16 @@ abstract class SparkSpec extends AnyFunSuite {
   /** Smallest provided scale factor — fixture-sized real tables. */
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Directory `name` under the test JVM's `java.io.tmpdir` (build.sbt
+    * points it at a per-run root under target/, deleted when the run
+    * ends), created if missing; one name is one directory for the run.
+    */
+  def testDir(name: String): String = {
+    val d = new java.io.File(System.getProperty("java.io.tmpdir"), name)
+    d.mkdirs()
+    d.getPath
+  }
+
   /** Run `f` with the [[graft.ops.Materialize]] driver budget set to
     * `bytes`; 0 sends every size-adaptive operator down its distributed
     * branch and every local-or-spill materialization to the spill store.

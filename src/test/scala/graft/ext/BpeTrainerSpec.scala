@@ -58,7 +58,7 @@ class BpeTrainerSpec extends SparkSpec {
 
   test("classic subword corpus learns the expected early merges") {
     val texts = Seq("low low low lower lower lowest", "newer newer new wider")
-    val got = trainOn(texts, "/tmp/graft_test_bpe", nMerges = 8)
+    val got = trainOn(texts, testDir("graft_test_bpe"), nMerges = 8)
     assert(got === referenceMerges(texts, 8))
     // sanity on content, not just agreement: 'lo' or 'er'-family merges
     // must surface early in this corpus
@@ -68,7 +68,7 @@ class BpeTrainerSpec extends SparkSpec {
 
   test("distributed loop (forced) equals the driver fast path") {
     val texts = Seq("low low low lower lower lowest", "newer newer new wider")
-    val dist = trainOn(texts, "/tmp/graft_test_bpe_dist", nMerges = 6,
+    val dist = trainOn(texts, testDir("graft_test_bpe_dist"), nMerges = 6,
       driverVocabLimit = 0L) // force the distributed per-round loop
     assert(dist === referenceMerges(texts, 6))
   }
@@ -81,8 +81,8 @@ class BpeTrainerSpec extends SparkSpec {
     val hi = "\uFFFD"
     val emoji = new String(Character.toChars(0x1F600))
     val texts = Seq(s"$emoji$emoji $hi$hi", s"$emoji$emoji $hi$hi")
-    val drv = trainOn(texts, "/tmp/graft_test_bpe_nonbmp", nMerges = 2)
-    val dist = trainOn(texts, "/tmp/graft_test_bpe_nonbmp_d", nMerges = 2,
+    val drv = trainOn(texts, testDir("graft_test_bpe_nonbmp"), nMerges = 2)
+    val dist = trainOn(texts, testDir("graft_test_bpe_nonbmp_d"), nMerges = 2,
       driverVocabLimit = 0L)
     assert(drv === dist)
     // code-point order: U+FFFD < U+1F600 ⇒ the tied round-1 argmax is hi
@@ -123,7 +123,7 @@ class BpeTrainerSpec extends SparkSpec {
       "thththth anananan rere",  // chained + immediate re-participation
       "xyz q",                   // no merge applies
       "")                        // empty doc: 0 words, 0 tokens
-    assert(applyOn(texts, "/tmp/graft_test_bpe_apply") === referenceApply(texts))
+    assert(applyOn(texts, testDir("graft_test_bpe_apply")) === referenceApply(texts))
   }
 
   test("applyMerges matches the fold on random corpora (property)") {
@@ -131,7 +131,7 @@ class BpeTrainerSpec extends SparkSpec {
       Gen.listOfN(n, Gen.oneOf('t', 'h', 'e', 'a', 'n', 'r', 'o')).map(_.mkString))
     val docGen = Gen.listOfN(3, Gen.listOfN(5, wordGen).map(_.mkString(" ")))
     val prop = Prop.forAll(docGen) { texts =>
-      applyOn(texts, "/tmp/graft_test_bpe_apply_prop") == referenceApply(texts)
+      applyOn(texts, testDir("graft_test_bpe_apply_prop")) == referenceApply(texts)
     }
     val r = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(4), prop)
@@ -143,7 +143,7 @@ class BpeTrainerSpec extends SparkSpec {
       Gen.listOfN(n, Gen.oneOf("ab", "aab", "abab", "ba", "bb", "a"))
         .map(_.mkString(" "))))
     val prop = Prop.forAll(docGen) { texts =>
-      trainOn(texts, "/tmp/graft_test_bpe_prop", nMerges = 6) ==
+      trainOn(texts, testDir("graft_test_bpe_prop"), nMerges = 6) ==
         referenceMerges(texts, 6)
     }
     val r = SCTest.check(

@@ -5,7 +5,7 @@ import graft.SparkSpec
 class ContaminationSpec extends SparkSpec {
   import spark.implicits._
 
-  private val dir = "/tmp/graft_test_contamination"
+  private val dir = testDir("graft_test_contamination")
 
   private def writeDocs(rows: Seq[(Long, String)]): Unit =
     rows.map { case (id, text) => (id, text, "en", "s", text.length.toLong) }

@@ -8,7 +8,7 @@ class CorpusSpec extends SparkSpec {
   import spark.implicits._
 
   test("chunk: windows cover every token, overlap by size-stride, idx contiguous") {
-    val dir = "/tmp/graft_test_chunk"
+    val dir = testDir("graft_test_chunk")
     Seq(
       (1L, (1 to 80).map(i => s"t$i").mkString(" "), "en", "s", 80L),
       (2L, "a b c", "en", "s", 3L),
@@ -87,7 +87,7 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("c4Filters flags planted boilerplate and keeps clean prose") {
-    val dir = "/tmp/graft_test_c4"
+    val dir = testDir("graft_test_c4")
     val clean = "A perfectly reasonable sentence with enough words to pass."
     Seq(
       (1L, clean, "en", "s", clean.length.toLong),
@@ -257,7 +257,7 @@ class CorpusSpec extends SparkSpec {
     assert(plan.contains("TakeOrderedAndProject"), plan.take(800))
     // weight-proportionality: 1000 docs of weight 1 vs 1000 of weight 200;
     // A-ES says the heavy half should dominate any prefix of the sample
-    val dir = "/tmp/graft_test_wsample"
+    val dir = testDir("graft_test_wsample")
     (1L to 2000L).map { i =>
       val w = if (i <= 1000L) 1L else 200L
       (i, "x", "en", "s", w) // n_chars carries the weight
@@ -282,7 +282,7 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("filterAttribution: fixed spine, first-fail partitions, blame order") {
-    val dir = "/tmp/graft_test_fattr"
+    val dir = testDir("graft_test_fattr")
     val clean = "A perfectly reasonable sentence with enough words to pass."
     Seq(
       (1L, clean, "en", "s", clean.length.toLong),

@@ -9,7 +9,7 @@ class CurationSpec extends SparkSpec {
 
   test("trainingSet survivors: c4-fail, exact dups, and near-dups drop") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_curation"
+    val dir = testDir("graft_test_curation")
     val base = "the quick brown fox jumps over the lazy dog and runs far away home tonight."
     val tweaked = base.replace("lazy", "sleepy")
     val other = "completely different content about spark query engines and columnar formats here."

@@ -15,7 +15,7 @@ import graft.functions.GraftFunctions
   */
 class DedupScaleSpec extends SparkSpec {
 
-  private val dir = "/tmp/graft_test_ccscale"
+  private val dir = testDir("graft_test_ccscale")
 
   private def writeFixture(): Unit = DedupScaleSpec.writeFixture(spark, dir)
 

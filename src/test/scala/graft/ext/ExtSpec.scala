@@ -19,7 +19,7 @@ class DedupSpec extends SparkSpec {
       (9002L, tweaked, "en", "s", tweaked.length.toLong),
       (9003L, other, "en", "s", other.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = s"/tmp/graft_test_minhash"
+    val dir = testDir("graft_test_minhash")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val pairs = Dedup.minHashPairs(spark, dir)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
@@ -65,7 +65,7 @@ class DedupSpec extends SparkSpec {
   test("minHashClusters groups the planted dup family under one keeper") {
     import spark.implicits._
     // reuse the minhash fixture written by the pairs test (same corpus)
-    val dir = s"/tmp/graft_test_minhash"
+    val dir = testDir("graft_test_minhash")
     val clusters = Dedup.minHashClusters(spark, dir).collect()
     assert(clusters.length === 1)
     val c = clusters.head
@@ -80,7 +80,7 @@ class DedupSpec extends SparkSpec {
       (2L, "alpha beta gamma delta", "en", "s", 20L),
       (3L, "unrelated words entirely distinct", "en", "s", 30L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = s"/tmp/graft_test_simhash"
+    val dir = testDir("graft_test_simhash")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val sigs = Dedup.simHashSignatures(spark, dir)
       .orderBy("doc_id").select("simhash").as[Long].collect()
@@ -119,7 +119,7 @@ class DedupSpec extends SparkSpec {
 
   test("exactPairClusters chains near-length same-lang docs transitively") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_exactcc"
+    val dir = testDir("graft_test_exactcc")
     // chain 1-2-3 via ±2 steps (1 vs 3 differ by 4 — linked only through
     // 2); 10 is a singleton; 20/21 pair; 30 same length as 20 but other lang
     Seq(
@@ -138,7 +138,7 @@ class DedupSpec extends SparkSpec {
 
   test("pair producers leave the CacheManager empty (call-scoped caches)") {
     spark.catalog.clearCache() // isolate from caches other suites may hold
-    val dir = s"/tmp/graft_test_minhash" // fixture from the minhash test
+    val dir = testDir("graft_test_minhash") // fixture from the minhash test
     Dedup.minHashPairs(spark, dir).count()
     Dedup.simHashPairs(spark, dir).count()
     Dedup.ngramJaccardPairs(spark, dir).count()
@@ -153,7 +153,7 @@ class DedupSpec extends SparkSpec {
 
   test("incrementalExact matches delta docs against the corpus index only") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_incremental"
+    val dir = testDir("graft_test_incremental")
     Seq(
       (2L, "shared text body", "en", "s", 16L),   // corpus keeper
       (12L, "shared text body", "en", "s", 16L),  // corpus dup (not reported)
@@ -189,7 +189,7 @@ class DedupSpec extends SparkSpec {
 
   test("twinnable minhash (CW permutations) still finds the planted dups") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_minhash" // fixture from the minhash test
+    val dir = testDir("graft_test_minhash") // fixture from the minhash test
     val pairs = Dedup.minHashPairs(spark, dir, twinnable = true)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs.contains((9000L, 9001L)), "exact dup pair must surface")
@@ -199,7 +199,7 @@ class DedupSpec extends SparkSpec {
 
   test("twinnable simhash: 60-bit signatures, identical docs at hamming 0") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_minhash" // fixture from the minhash test
+    val dir = testDir("graft_test_minhash") // fixture from the minhash test
     val sigs = Dedup.simHashSignatures(spark, dir, twinnable = true)
       .as[(Long, Long)].collect().toMap
     sigs.values.foreach(s => assert(s >= 0L && s < (1L << 60)))
@@ -213,7 +213,7 @@ class DedupSpec extends SparkSpec {
   test("spanPairs matches a brute-force reference on random small corpora") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import spark.implicits._
-    val dir = "/tmp/graft_test_spans_prop"
+    val dir = testDir("graft_test_spans_prop")
     // tiny vocab + short docs: span collisions are common, so the
     // reference exercises real sharing, not just empty results
     val docGen = Gen.listOfN(6, Gen.choose(4, 12).flatMap(n =>
@@ -243,7 +243,7 @@ class DedupSpec extends SparkSpec {
 
   test("spanPairs finds mis-aligned shared runs; boilerplate spans drop") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_spans"
+    val dir = testDir("graft_test_spans")
     val run = (1 to 16).map(i => s"w$i").mkString(" ") // the shared 16-run
     val boiler = (1 to 16).map(i => s"b$i").mkString(" ")
     val docs = Seq(
@@ -272,7 +272,7 @@ class DedupSpec extends SparkSpec {
   test("jaccardPrefixPairs matches brute-force all-pairs Jaccard (lossless)") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import spark.implicits._
-    val dir = "/tmp/graft_test_ppjoin_prop"
+    val dir = testDir("graft_test_ppjoin_prop")
     // word-3-gram shingles with 2/1-gram tails — the same family
     // shingleRowsOf emits, so the reference measures the same sets
     def shingleSet(t: String): Set[String] = {
@@ -309,7 +309,7 @@ class DedupSpec extends SparkSpec {
 
   test("jaccardPrefixPairs: df cap bounds an all-duplicate corpus") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_ppjoin_cap"
+    val dir = testDir("graft_test_ppjoin_cap")
     val boiler = (1 to 12).map(i => s"w$i").mkString(" ")
     val docs = (1L to 40L).map(i => (i, boiler, "en", "s", boiler.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -325,7 +325,7 @@ class DedupSpec extends SparkSpec {
 
   test("lshRecall: LSH pairs ⊆ lossless truth, recall consistent, exact dups found") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_lsh_recall"
+    val dir = testDir("graft_test_lsh_recall")
     // planted: 3 exact copies (signatures identical → every band agrees →
     // LSH MUST find those pairs) + unrelated fillers
     val copy = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -856,7 +856,7 @@ class TextStatsSpec extends SparkSpec {
 
   test("knScore: brute-force KN recompute matches; model normalizes to 1 per context") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_kn"
+    val dir = testDir("graft_test_kn")
     Seq(
       (1L, "the cat sat on the mat", "en", "s", 22L),
       (2L, "the cat ran to the house", "en", "s", 24L),
@@ -949,7 +949,7 @@ class TextStatsSpec extends SparkSpec {
 
   test("sourceSimilarity: identical sources score 1, disjoint 0, spine complete") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_srcsim"
+    val dir = testDir("graft_test_srcsim")
     val shared = "alpha beta gamma delta epsilon zeta eta theta"
     val other = "one two three four five six seven eight nine"
     Seq(
@@ -996,7 +996,7 @@ class TextStatsSpec extends SparkSpec {
 
   test("curationFunnel counts monotone survivors per stage") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_funnel"
+    val dir = testDir("graft_test_funnel")
     val good = "the quick brown fox jumps over the lazy dog while seven " +
       "wizards brew quiet potions tonight"
     Seq(
@@ -1022,7 +1022,7 @@ class TextStatsSpec extends SparkSpec {
       (4L, "le chien et la maison des chats est dans le jardin", "fr", "s", 10L),
       (5L, "我在这里的房子是很好的", "zh", "s", 10L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = "/tmp/graft_test_langid"
+    val dir = testDir("graft_test_langid")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = TextStats.langId(spark, dir)
       .orderBy("doc_id").select("predicted_lang").as[String].collect()
@@ -1037,7 +1037,7 @@ class TextStatsSpec extends SparkSpec {
       (2L, "one two three", "en", "s", 13L),
       (3L, "", "en", "s", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = "/tmp/graft_test_tokcnt"
+    val dir = testDir("graft_test_tokcnt")
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = TextStats.tokenCounts(spark, dir).orderBy("doc_id")
       .select("ws_tokens", "bpe_tokens", "chars_per_token")
@@ -1058,7 +1058,7 @@ class TextStatsSpec extends SparkSpec {
 
   test("lengthBand keeps the middle ranks, drops the length outliers") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_lengthband"
+    val dir = testDir("graft_test_lengthband")
     // 10 en docs with lengths 1..10 ⇒ P10–P90 band keeps ranks 2..9;
     // one de doc: a single-doc stratum keeps rank 1 (1*100 > 1*10, ≤ 90? no
     // — 100 > 90 drops it: a 1-doc stratum has no middle band)
@@ -1074,7 +1074,7 @@ class TextStatsSpec extends SparkSpec {
   test("lmScore matches a brute-force Zipf reference on random corpora") {
     import org.scalacheck.{Gen, Prop, Test => SCTest}
     import spark.implicits._
-    val dir = "/tmp/graft_test_lmscore_prop"
+    val dir = testDir("graft_test_lmscore_prop")
     val docGen = Gen.listOfN(5, Gen.choose(0, 8).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf("x", "y", "z", "w")).map(_.mkString(" "))))
     val prop = Prop.forAll(docGen) { texts =>
@@ -1102,7 +1102,7 @@ class TextStatsSpec extends SparkSpec {
 
   test("lmScore: Zipf ranks by (freq desc, tok asc); doc sums are exact") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_lmscore"
+    val dir = testDir("graft_test_lmscore")
     // corpus freq: the×4, cat×2, dog×2, zebra×1
     // ranks: the=1, cat=2 (tie with dog broken by token order), dog=3, zebra=4
     Seq(

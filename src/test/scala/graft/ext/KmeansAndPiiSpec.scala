@@ -7,7 +7,7 @@ import graft.SparkSpec
 class KmeansSpec extends SparkSpec {
   import spark.implicits._
 
-  private val dir = "/tmp/graft_test_kmeans"
+  private val dir = testDir("graft_test_kmeans")
 
   /** Two orthogonal blobs in 8-dim space: ids 0-9 hug e0, ids 10-19 hug e1.
     * Small deterministic per-id jitter keeps vectors distinct.
@@ -57,7 +57,7 @@ class KmeansSpec extends SparkSpec {
 class PiiSpec extends SparkSpec {
   import spark.implicits._
 
-  private val dir = "/tmp/graft_test_pii"
+  private val dir = testDir("graft_test_pii")
 
   private def writeDocs(rows: Seq[(Long, String)]): Unit =
     rows.map { case (id, text) => (id, text, "en", "s", text.length.toLong) }

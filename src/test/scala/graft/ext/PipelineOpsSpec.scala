@@ -751,7 +751,7 @@ class PipelineOpsSpec extends SparkSpec {
     import spark.implicits._
     // crafted corpus: reference docs short (bucket 0), current slice
     // (doc_id % 10 == 9) long (bucket 5) — maximal planted drift
-    val dir = "/tmp/graft_test_psi"
+    val dir = testDir("graft_test_psi")
     (0L until 100L).map { i =>
       val cur = i % 10 == 9
       (i, "t", "en", "s", if (cur) 1000L else 50L)

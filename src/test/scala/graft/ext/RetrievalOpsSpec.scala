@@ -82,7 +82,7 @@ class RetrievalOpsSpec extends SparkSpec {
 
   test("shingle_stats artifact path equals the live path for both prefix consumers") {
     import spark.implicits._
-    val dir = "/tmp/graft_test_shstats"
+    val dir = testDir("graft_test_shstats")
     val rnd = new scala.util.Random(23)
     val vocab = (0 until 40).map(i => s"v$i")
     def doc(n: Int): String =
@@ -114,7 +114,7 @@ class RetrievalOpsSpec extends SparkSpec {
   // hard negatives                                                    //
   // ---------------------------------------------------------------- //
 
-  private val negDir = "/tmp/graft_test_hardneg"
+  private val negDir = testDir("graft_test_hardneg")
 
   /** 30 float vectors, dim 8: positive random entries (cosines land in
     * the hard band), plus vec 22 planted parallel to anchor 9 (cosine
@@ -279,7 +279,7 @@ class RetrievalOpsSpec extends SparkSpec {
     val shared = doc(12)
     val d1 = doc(10) + " " + shared + " " + doc(8)
     val d2 = doc(5) + " " + shared + " " + doc(15)
-    val dir = "/tmp/graft_test_winnow"
+    val dir = testDir("graft_test_winnow")
     ((1L, d1) +: (2L, d2) +:
       (10 until 18).map(i => (i.toLong, doc(20 + rnd.nextInt(10)))))
       .map { case (id, t) => (id, t, "en", "s", t.length.toLong) }

@@ -5,7 +5,7 @@ import graft.SparkSpec
 class SearchSpec extends SparkSpec {
   import spark.implicits._
 
-  private val dir = "/tmp/graft_test_search"
+  private val dir = testDir("graft_test_search")
 
   private def writeDocs(rows: Seq[(Long, String)]): Unit =
     rows.map { case (id, text) => (id, text, "en", "s", text.length.toLong) }
@@ -46,7 +46,7 @@ class SearchSpec extends SparkSpec {
   }
 
   test("bm25: empty corpus returns an empty frame, no NPE on null avgdl") {
-    val edir = "/tmp/graft_test_search_empty"
+    val edir = testDir("graft_test_search_empty")
     Seq.empty[(Long, String, String, String, Long)]
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$edir/documents.parquet")
