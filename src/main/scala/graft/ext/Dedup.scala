@@ -545,12 +545,12 @@ object Dedup {
       // partition-level append (tier-J finding): new signatures land as
       // additional bucket files, the committed rows are hardlinked, never
       // rewritten — refresh cost is delta-proportional
-      refreshDelta = Some { ctx =>
+      append = Some(graft.ops.Layout.Append { ctx =>
         minHashSignaturesOf(
           spark.read.parquet(ctx.addedFiles: _*), twinnable = true)
           .join(ctx.oldArtifact.select(col("doc_id")), Seq("doc_id"),
             "left_anti")
-      }) {
+      })) {
       minHashPerDoc(spark, sfDir, twinnable = true)
     }
 
@@ -674,12 +674,12 @@ object Dedup {
       spark: SparkSession, sfDir: String): DataFrame =
     graft.ops.Layout.ensureDerived(spark, sfDir, "simhash_sig",
       Seq("documents.parquet"), "doc_id",
-      refreshDelta = Some { ctx =>
+      append = Some(graft.ops.Layout.Append { ctx =>
         simHashSignaturesOf(
           spark.read.parquet(ctx.addedFiles: _*), twinnable = true)
           .join(ctx.oldArtifact.select(col("doc_id")), Seq("doc_id"),
             "left_anti")
-      }) {
+      })) {
       simHashSignaturesOf(Tables.documents(spark, sfDir), twinnable = true)
     }
 
@@ -816,36 +816,26 @@ object Dedup {
     * re-windowing the corpus per call, and the doc_id bucketing makes
     * their per-call set rebuild (collect_set) exchange-free.
     *
-    * TWO-LAYER refresh (the r11 verdict's last O(corpus) refresh,
-    * removed): df and hence every rank are GLOBAL statistics — one
-    * appended doc shifts any shingle's df and reorders the prefixes that
-    * contain it — so the STATS layer legitimately recomputes on every
-    * census change. But the expensive half of that rebuild — shingling
-    * the corpus text — does not: the distinct (doc_id, sh) rows are
-    * append-only per doc, exactly the `minhash_sig` contract. The split:
-    * [[shingleRowsShared]] holds the rows under `refreshDelta` (an
-    * appended shard tokenizes ONLY its new docs; committed rows hardlink
-    * forward), and this layer re-WINDOWS those rows — O(artifact) hash
+    * TWO-LAYER refresh: df and hence every rank are GLOBAL statistics —
+    * one appended doc shifts any shingle's df and reorders the prefixes
+    * that contain it — so the STATS layer has no append form and
+    * rebuilds on every census change. But the expensive half of that
+    * rebuild — shingling the corpus text — does not: the distinct
+    * (doc_id, sh) rows are append-only per doc, exactly the
+    * `minhash_sig` contract. The split: [[shingleRowsShared]] holds the
+    * rows under an [[graft.ops.Layout.Append]] (an appended shard
+    * tokenizes ONLY its new docs; committed rows hardlink forward), and
+    * this layer's build re-WINDOWS those rows — O(artifact) hash
     * shuffles over fixed-width longs, no text scan. A 100 TB corpus
     * append pays delta tokenize + artifact-sized window arithmetic
     * instead of a full re-shingle (tier K measures the decade).
+    * `version` 2 retires warehouse dirs a bounded-staleness serve of
+    * older code may have published under a current census.
     */
   private[graft] def shingleStatsShared(
       spark: SparkSession, sfDir: String): DataFrame =
     graft.ops.Layout.ensureDerived(spark, sfDir, "shingle_stats",
-      Seq("documents.parquet"), "doc_id",
-      refresh = Some { _ => statsOf(shingleRowsShared(spark, sfDir)) },
-      // amortization dial for the one O(artifact) recompute left in the
-      // dedup family (the df/sz/rk windows are global, so they cannot be
-      // delta-expressed): at K > 1, K−1 consecutive corpus appends SERVE
-      // the committed stats (hardlink-forward, no job — bounded
-      // staleness, counter visible in the artifact dir's _graft_stale)
-      // and the Kth recomputes the windows over the append-only rows
-      // layer. Default 1 = always fresh; every registered oracle query
-      // runs at the default, so consumer hashes are knob-independent
-      // when fresh (LayoutRefreshSpec pins both halves).
-      staleEpochs = spark.conf
-        .get("graft.shingleStats.staleEpochs", "1").toInt) {
+      Seq("documents.parquet"), "doc_id", version = 2) {
       statsOf(shingleRowsShared(spark, sfDir))
     }
 
@@ -862,12 +852,12 @@ object Dedup {
       spark: SparkSession, sfDir: String): DataFrame =
     graft.ops.Layout.ensureDerived(spark, sfDir, "shingle_rows",
       Seq("documents.parquet"), "doc_id",
-      refreshDelta = Some { ctx =>
+      append = Some(graft.ops.Layout.Append { ctx =>
         shingleRowsOf(spark.read.parquet(ctx.addedFiles: _*),
           twinnable = true).distinct()
           .join(ctx.oldArtifact.select(col("doc_id")).distinct(),
             Seq("doc_id"), "left_anti")
-      }) {
+      })) {
       shingleRows(spark, sfDir, twinnable = true).distinct()
     }
 
@@ -1557,12 +1547,12 @@ object Dedup {
       // (old rows win on a repeated id), so the committed relation
       // hardlinks forward and only the delta is written — never a
       // corpus-sized rewrite per ingest epoch
-      refreshDelta = Some { ctx =>
+      append = Some(graft.ops.Layout.Append { ctx =>
         docSpansOf(
           spark.read.parquet(ctx.addedFiles: _*), SpanTokensDefault)
           .join(ctx.oldArtifact.select(col("doc_id")), Seq("doc_id"),
             "left_anti")
-      }) {
+      })) {
       docSpansOf(Tables.documents(spark, sfDir), SpanTokensDefault)
     }
 
@@ -1726,12 +1716,12 @@ object Dedup {
       Seq("documents.parquet"), "fp",
       // partition-level append, same contract as span_rows: delta rows
       // only, committed files hardlink forward
-      refreshDelta = Some { ctx =>
+      append = Some(graft.ops.Layout.Append { ctx =>
         winnowSelectedOf(
           spark.read.parquet(ctx.addedFiles: _*), WinnowK, WinnowW)
           .join(ctx.oldArtifact.select(col("doc_id")), Seq("doc_id"),
             "left_anti")
-      }) {
+      })) {
       winnowSelectedOf(Tables.documents(spark, sfDir), WinnowK, WinnowW)
     }
 

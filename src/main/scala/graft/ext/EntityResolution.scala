@@ -52,9 +52,9 @@ object EntityResolution {
     * `ivfTopKTrained`). With it, the scan runs once per corpus state;
     * an appended part shard contributes a GENERATIONAL delta (its own
     * per-name min/count — rows that may repeat committed names, which
-    * is what disqualifies the strictly-new `refreshDelta` form), and
-    * consumers collapse generations at read with the algebraic merge —
-    * min of mins, sum of counts — bit-identical to a full rebuild
+    * is why its append carries a merge), and consumers collapse
+    * generations at read with that algebraic merge — min of mins, sum
+    * of counts — bit-identical to a full rebuild
     * because both aggregates are mergeable and name instances partition
     * disjointly across generations.
     */
@@ -64,7 +64,7 @@ object EntityResolution {
       .agg(min(col("p_partkey")).as("name_id"), count(lit(1)).as("n_parts"))
     graft.ops.Layout.ensureDerived(spark, sfDir, "name_census",
       Seq("part.parquet"), "p_name",
-      refreshGen = Some(graft.ops.Layout.GenRefresh(
+      append = Some(graft.ops.Layout.Append(
         delta = ctx => census(spark.read.parquet(ctx.addedFiles: _*)
           .select(col("p_partkey"), col("p_name"))),
         merge = gens => gens.groupBy(col("p_name")).agg(

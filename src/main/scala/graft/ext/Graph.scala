@@ -119,7 +119,7 @@ object Graph {
     * the new side as one join input so the quadratic old×old self-join
     * never re-runs — restricted to `okOrders` (orders under the basket
     * cap after the merge). Shared by the batch artifact's
-    * [[graft.ops.Layout.GenRefresh]] kernel and the streaming face.
+    * [[graft.ops.Layout.Append]] kernel and the streaming face.
     */
   private[graft] def edgeDelta(
       newOnly: DataFrame, oldRaw: DataFrame, okOrders: DataFrame): DataFrame = {
@@ -172,12 +172,12 @@ object Graph {
       // hardlinked base (tier J r10 measured why: the refresh-path full
       // rewrite of 241M edges cost a build; the delta itself is tiny),
       // and consumers sum weights per (src, dst) at read through the
-      // GenRefresh merge — exchange-free over the src-bucketed scan, and
+      // Append merge — exchange-free over the src-bucketed scan, and
       // bit-identical to a full rebuild because pair instances partition
       // disjointly by whether they touch a new row. Version stays 2: the
       // on-disk row format is unchanged (a pre-generational committed
       // artifact is a valid single generation).
-      refreshGen = Some(graft.ops.Layout.GenRefresh(
+      append = Some(graft.ops.Layout.Append(
         delta = { ctx =>
           // crossLowBound = 2: only orders whose OLD history already held
           // ≥2 parts have pairs in the committed artifact that a
@@ -211,7 +211,7 @@ object Graph {
     * the sentinel; a cap-CROSSING order (old ≤ cap, merged > cap) has
     * memberships counted in the old census that a rebuild would drop —
     * exactly the edge artifact's inexpressible case, same FullRebuild
-    * fallback. Rides the same [[graft.ops.Layout.GenRefresh]] contract
+    * fallback. Rides the same [[graft.ops.Layout.Append]] contract
     * as the edges — the per-epoch delta (touched parts + one sentinel
     * row) lands as extra bucket files next to the hardlinked base, and
     * counts sum per part at read while multi-generation: at 100 TB the
@@ -230,7 +230,7 @@ object Graph {
     }
     graft.ops.Layout.ensureDerived(spark, sfDir, "copurch_census",
       Seq("lineitem.parquet"), "l_partkey", version = 1,
-      refreshGen = Some(graft.ops.Layout.GenRefresh(
+      append = Some(graft.ops.Layout.Append(
         delta = { ctx =>
           // crossLowBound = 1: the old census counted this order already
           // at 1 part (a 1-part order counts toward pc and the basket

@@ -1931,12 +1931,12 @@ object Multimodal {
       spark: SparkSession, sfDir: String): DataFrame =
     graft.ops.Layout.ensureDerived(spark, sfDir, "media_sig",
       Seq("documents.parquet"), "media_id", version = 2,
-      refreshDelta = Some { ctx =>
+      append = Some(graft.ops.Layout.Append { ctx =>
         mediaSignaturesOf(
           mediaTableOf(spark.read.parquet(ctx.addedFiles: _*)))
           .join(ctx.oldArtifact.select(col("media_id")), Seq("media_id"),
             "left_anti")
-      }) {
+      })) {
       mediaSignaturesOf(mediaTable(spark, sfDir))
     }
 

@@ -51,11 +51,11 @@ object Search {
       spark: SparkSession, sfDir: String): DataFrame =
     graft.ops.Layout.ensureDerived(spark, sfDir, "postings",
       Seq("documents.parquet"), "tok",
-      refreshDelta = Some { ctx =>
+      append = Some(graft.ops.Layout.Append { ctx =>
         postingsOf(spark.read.parquet(ctx.addedFiles: _*))
           .join(ctx.oldArtifact.select(col("doc_id")), Seq("doc_id"),
             "left_anti")
-      }) {
+      })) {
       postingsOf(Tables.documents(spark, sfDir))
     }
 

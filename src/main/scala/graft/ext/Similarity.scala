@@ -372,7 +372,7 @@ object Similarity {
       // rewritten by a shard. An append that invalidates the frozen
       // seeds (id under the seed ceiling, or a corpus still smaller than
       // the seed count) signals FullRebuild → the full build re-derives.
-      refreshDelta = Some { ctx =>
+      append = Some(graft.ops.Layout.Append { ctx =>
         val old = ctx.oldArtifact
         val oldSeeds = collectSeeds(
           old.select(col("vec_id"), col("embedding"), col("norm")), IvfNCells)
@@ -388,7 +388,7 @@ object Similarity {
         val addedN = withNorm(spark, added)
           .select(col("vec_id"), col("embedding"), col("label"), col("__norm"))
         derive(addedN, oldSeeds)
-      }) {
+      })) {
       full(Tables.embeddings(spark, sfDir))
     }
   }

@@ -17,90 +17,71 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** Everything an incremental refresh kernel may consult: the committed
+  /** Everything an [[Append]] delta kernel may consult: the committed
     * artifact content as built from `priorFiles`, plus the source files
-    * that appeared since. The kernel returns the FULL new artifact
-    * content — typically `oldArtifact ∪ delta` — computed WITHOUT
-    * re-deriving the expensive per-old-row work (that is the contract:
-    * `addedFiles` is the only corpus data it should re-process;
-    * `priorFiles` is available for the rare kernels whose delta spans
-    * old×new, e.g. pair generation within a key).
+    * that appeared since. `addedFiles` is the only corpus data the kernel
+    * should re-process; `priorFiles` is there for the rare kernels whose
+    * delta spans old×new (pair generation within a key).
     *
-    * For a [[GenRefresh]] artifact past its first append, `oldArtifact`
-    * is served through the kernel's `merge` — a kernel reading it sees
-    * COMMITTED per-key values, never the raw per-generation partials.
+    * For a multi-generation predecessor, `oldArtifact` is served through
+    * the kernel's `merge`: a kernel reading it sees committed per-key
+    * values, never the raw per-generation partials.
     *
     * `addedFiles`/`priorFiles` are LEAF data-file paths. A
     * Hive-partitioned (key=value subdir) source still invalidates
-    * correctly (the census lists recursively), but a refresh KERNEL
-    * reading leaf files with `spark.read.parquet` loses the
-    * directory-encoded partition columns — such sources must either
-    * carry the partition value as a real column or register without a
-    * refresh kernel (full rebuild per census change, correct by
-    * construction). Every shipped source is a flat file directory.
+    * correctly (the census lists recursively), but a kernel reading leaf
+    * files with `spark.read.parquet` loses the directory-encoded
+    * partition columns — such sources must either carry the partition
+    * value as a real column or register without an append kernel (full
+    * rebuild per census change, correct by construction). Every shipped
+    * source is a flat file directory.
     */
   final case class RefreshCtx(
       oldArtifact: DataFrame,
       addedFiles: Seq[String],
       priorFiles: Seq[String])
 
-  /** GENERATIONAL append refresh — the form for MERGEABLE artifacts
-    * (`copurch_edges`-style weight sums) whose per-key state an append
-    * CAN change, which disqualifies [[ensureDerived]]'s `refreshDelta`
-    * (strictly new rows) but whose full-rewrite `refresh` path costs a
-    * build once the artifact rivals its source (tier J, STRESS_r10.md
-    * phase 3: 241M-edge refresh 80.9 s ≈ build 77.4 s — the rewrite, not
-    * the delta derivation, was the bound). Instead: the committed rows
-    * stay IMMUTABLE (hardlinked forward, exactly like `refreshDelta`),
-    * `delta` returns only the epoch's contribution — rows that may REPEAT
-    * keys already committed — and `merge` collapses the generations at
-    * read (for a weight artifact: groupBy key-tuple + sum, which over a
-    * bucket-keyed scan is exchange-free, so consumers pay one extra
-    * streaming hash-agg and no shuffle). Each append advances a
-    * generation counter; once it exceeds `maxGenerations` the next
-    * refresh COMPACTS — one merged rewrite of base⊕delta, resetting the
-    * counter — so read-side row inflation is bounded at
-    * `maxGenerations×` worst-case and the rewrite cost is amortized
-    * 1-in-`maxGenerations` epochs instead of paid every epoch.
-    *
-    * `delta` may throw [[FullRebuild]] when the append is inexpressible
-    * as a generation (the MaxBasket cap-crossing case): ensureDerived
-    * then runs the full `build` — correct by construction, same as any
-    * non-append census delta. Kernels SHOULD run their expressibility
-    * checks eagerly (both shipped kernels do — the throw costs one small
-    * driver action and skips the commit machinery entirely), but the
-    * contract does not require it: a [[FullRebuild]] that first surfaces
-    * inside the commit/compaction ACTION — even wrapped in Spark's
-    * executor-exception chain — is caught there too, the half-written
-    * tmp dir is cleaned, and the epoch falls back to `build`.
+  /** The append form of [[ensureDerived]]: `delta` returns only the
+    * epoch's contribution, and `merge` collapses generations at read.
+    * Per-row artifacts (signatures, postings, projected fact copies)
+    * append strictly new rows and keep the default identity merge;
+    * mergeable artifacts (`copurch_edges` weight sums, `name_census`
+    * min/count) return rows that may repeat committed keys, and their
+    * `merge` is the algebraic collapse (groupBy key + sum/min — over a
+    * bucket-keyed scan, exchange-free).
     */
-  final case class GenRefresh(
+  final case class Append(
       delta: RefreshCtx => DataFrame,
-      merge: DataFrame => DataFrame,
-      maxGenerations: Int = 8)
+      merge: DataFrame => DataFrame = Append.Unmerged)
 
-  /** Control signal a [[GenRefresh]] delta kernel throws when the append
-    * cannot be expressed as a delta generation — [[ensureDerived]] falls
-    * back to the full `build` for that epoch.
+  object Append {
+    /** The default merge: appended rows never repeat a committed key, so
+      * the served table needs no collapse (and the warm path reads no
+      * generation marker).
+      */
+    val Unmerged: DataFrame => DataFrame = identity
+  }
+
+  /** Generations an appended artifact may hold before the next append
+    * compacts it. Bounds both the read-side row inflation of a merging
+    * artifact and the file count (≤ `buckets` files per generation); the
+    * rewrite cost is paid 1 epoch in `MaxGenerations`.
+    */
+  val MaxGenerations = 8
+
+  /** Control signal an [[Append]] delta kernel throws when the append
+    * cannot be expressed as a delta generation (the MaxBasket
+    * cap-crossing case, an invalidated frozen model) — [[ensureDerived]]
+    * falls back to the full `build` for that epoch.
     */
   final class FullRebuild extends RuntimeException(
     "generational delta inexpressible; full rebuild requested")
 
-  /** Marker file carrying a generational artifact's generation count;
+  /** Marker file carrying an appended artifact's generation count;
     * absent ⇒ 1 (a fresh build or a compaction). Written into the tmp
     * dir before the atomic publish, like [[CensusFile]].
     */
   private val GenFile = "_graft_gen"
-
-  /** Marker a BOUNDED-STALENESS serve writes into the published dir
-    * (`staleEpochs > 1` artifacts only): first line = how many source
-    * epochs this copy has served beyond the census it actually
-    * processed, remaining lines = that processed census. The counter
-    * makes the staleness bound auditable on disk, and the processed
-    * census lets the eventual recompute hand the kernel the TRUE
-    * added-files set (not just the files since the last stale serve).
-    */
-  private val StaleFile = "_graft_stale"
 
   /** Name of the census marker a committed artifact dir carries. Written
     * LAST (into the tmp dir, before the atomic publish rename), so its
@@ -135,15 +116,6 @@ object Layout {
   private val ensureLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Tables this session is serving from a bounded-staleness SERVE
-    * (commit or re-register of a [[StaleFile]]-marked dir): a later
-    * ensure of the same table at `staleEpochs = 1` must recompute
-    * instead of handing the stale copy out — tracked in memory so the
-    * warm (registered) path stays free of per-call marker reads.
-    */
-  private val staleServedTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Write `df` as a bucketed+sorted catalog table on `key`. Joins between
     * tables written with the same (key domain, buckets) are exchange-free.
     *
@@ -167,96 +139,45 @@ object Layout {
   /** Session-cached DERIVED TABLE per (sfDir, sources, buckets): ensure a
     * bucketed+sorted catalog table named `graft_<family>_<tag>` exists —
     * building it with `build` on first use — and return it. The tag covers
-    * everything the derived copy depends on: the source dir, the bucket
-    * count, AND the source files' (name, length, mtime) census —
-    * regenerating the fixture or changing `buckets` must never silently
-    * reuse a stale copy; stale tags of the same family are GC'd
-    * ([[dropStaleDerived]]).
+    * the source dir, the bucket count, the recipe `version` and the source
+    * files' (name, length, mtime) census, so a regenerated fixture, a
+    * changed `buckets` or a bumped `version` (bump it whenever a family's
+    * build logic or output schema changes) never silently reuses a stale
+    * copy; stale tags of the same family are GC'd ([[dropStaleDerived]]).
+    * A pipeline family that re-derives the same expensive aggregate
+    * materializes it ONCE per sfDir, and every caller — and every later
+    * session over the same warehouse — rejoins it exchange-free on the
+    * bucket key.
     *
-    * This is the library's share-the-intermediate primitive: a pipeline
-    * family that re-derives the same expensive aggregate (the co-purchase
-    * edge list, a bucketed fact copy) materializes it ONCE per sfDir and
-    * every caller — and every later session over the same warehouse —
-    * rejoins it exchange-free on the bucket key.
+    * `append` keeps the artifact current when the census changed ONLY by
+    * new files appearing (every previously-seen file identical) and a
+    * committed predecessor exists: `delta` receives the [[RefreshCtx]]
+    * and returns just the new generation's rows. The commit hardlinks the
+    * predecessor's data files forward (byte-copied where links are
+    * unavailable), writes the delta as additional bucket files and
+    * publishes atomically — O(delta + #files) per epoch, the committed
+    * rows never rewritten. Bucket ids live in file names, so bucketed
+    * (exchange-free) reads hold across generations. Every append writes
+    * the generation marker; once it reaches [[MaxGenerations]] the next
+    * append COMPACTS instead: one rewrite of `merge(old ∪ delta)`, which
+    * resets the generation to 1. A multi-generation artifact is served
+    * through `merge`. A kernel that throws [[FullRebuild]] — eagerly or
+    * from inside the commit's action, wrapped in Spark's exception chain
+    * — gets the full `build` for that epoch instead.
     *
-    * `version` is the RECIPE version: bump it whenever the build logic or
-    * output schema of a family changes. It is folded into the census, so
-    * a surviving warehouse dir written by older code is invalidated and
-    * rebuilt instead of silently served (a warm warehouse must never pin
-    * a pipeline to last release's artifact format).
-    *
-    * `refresh` is the APPEND-ONLY fast path: when the source census
-    * changed ONLY by new files appearing (every previously-seen file has
-    * identical name/length/mtime), the kernel receives the committed old
-    * artifact plus the added file paths and produces the new content
-    * without re-deriving per-old-row work — one shard landing on a 100 TB
-    * corpus must cost delta work, not a full signature/edge rebuild. Any
-    * other delta (file rewritten, file removed, version bump, no
-    * committed predecessor) falls back to a full `build`. Either result
-    * commits the same way: bucketed write to a tmp dir, census marker,
-    * then one atomic rename — a crash leaves either the old committed
-    * artifact or the new one, never a half-written dir that a later
-    * session would trust; a concurrent loser adopts the winner's copy.
-    *
-    * Deliberately NOT refreshed: file removals/rewrites (retention
-    * deletes, compaction). Which derived rows came from a removed file
-    * is unknowable without the removed bytes, so any non-append delta
-    * takes the full rebuild — correct by construction, and the case is
-    * rare next to shards landing.
-    */
-  /** `refreshDelta` is the stronger, PARTITION-LEVEL append refresh for
-    * per-row artifacts (signatures, postings, projected fact copies):
-    * the kernel returns ONLY the new rows, and the commit materializes
-    * the next generation as the predecessor's data files HARDLINKED
-    * (local fs; copied elsewhere) plus the delta written as additional
-    * bucket files — O(delta + #files) per epoch, the committed rows
-    * rewritten only by the amortized 1-in-`deltaFileFactor` small-file
-    * compaction. Tier J (STRESS_r10.md) measured why this exists: the
-    * `refresh` path's full bucketed rewrite bounds refresh cost at
-    * build cost once the artifact rivals its source in size. Only
-    * correct when appended source rows NEVER change existing artifact
-    * rows (no cross-row merge — copurch_edges' weight merge rides
-    * [[GenRefresh]] instead). Bucket ids live in file names, so exchange-free
-    * bucketed reads hold across generations; per-bucket SORT metadata is
-    * conservatively unused by Spark once a bucket has >1 file (planner
-    * re-sorts — joins stay shuffle-free). Takes precedence over
-    * `refresh` when both are present and a committed predecessor exists.
-    */
-  /** `deltaFileFactor` bounds a `refreshDelta` artifact's FILE-count
-    * growth: every append epoch links the committed files forward and
-    * adds up to `buckets` delta files, so a long-lived warehouse taking
-    * thousands of shards would otherwise accumulate thousands of small
-    * files per artifact (the classic small-files scan tax). Once the
-    * predecessor holds ≥ `buckets × deltaFileFactor` data files, the
-    * next refresh COMPACTS instead — one rewrite of old ∪ delta (content
-    * is row-identical; only the layout collapses), amortized
-    * 1-in-`deltaFileFactor` epochs. `refreshGen` needs no such knob:
-    * its `maxGenerations` compaction already bounds files.
-    */
-  /** `staleEpochs` is the BOUNDED-STALENESS knob for `refresh`-kernel
-    * artifacts whose recompute is global (the shingle-stats df/sz/rk
-    * windows): K−1 consecutive source epochs SERVE the committed copy
-    * (hardlinked forward under the new census tag, counter in
-    * [[StaleFile]]), and the Kth runs the kernel — amortizing an
-    * O(artifact) recompute to 1/K per epoch, the standard freshness/cost
-    * dial a production stats layer exposes (BM25 df, dedup prefix ranks
-    * are routinely minutes stale). Default 1 = always fresh (every
-    * registered oracle query runs at the default). Only meaningful with
-    * `refresh`: a ctx-reading delta kernel would need the processed
-    * census threaded through — the kernel receives exactly that (the
-    * added-files set since the last RECOMPUTE, not the last serve).
+    * Any other census change (file rewritten or removed, version bump, no
+    * committed predecessor, no `append`) runs the full `build`: which
+    * derived rows came from a removed file is unknowable without its
+    * bytes. Every path commits the same way — bucketed write to a tmp
+    * dir, census marker, one atomic rename — so a crash leaves either the
+    * old committed artifact or the new one, and a concurrent loser adopts
+    * the winner's copy.
     */
   def ensureDerived(
       spark: SparkSession, sfDir: String, family: String,
       sources: Seq[String], key: String, buckets: Int = 32,
-      version: Int = 1, refresh: Option[RefreshCtx => DataFrame] = None,
-      refreshDelta: Option[RefreshCtx => DataFrame] = None,
-      refreshGen: Option[GenRefresh] = None,
-      deltaFileFactor: Int = 16, staleEpochs: Int = 1)
+      version: Int = 1, append: Option[Append] = None)
       (build: => DataFrame): DataFrame = {
-    require(staleEpochs == 1 || (refresh.isDefined && refreshDelta.isEmpty &&
-      refreshGen.isEmpty),
-      "staleEpochs > 1 requires a refresh kernel (no delta/gen forms)")
     val hadoopConf = spark.sparkContext.hadoopConfiguration
     val entries = censusEntries(spark, sfDir, sources)
     val censusStr = (s"v=$version" +: entries).mkString("\n")
@@ -271,16 +192,6 @@ object Layout {
     val wh = new org.apache.hadoop.fs.Path(whRoot, table.toLowerCase)
     val fs = wh.getFileSystem(hadoopConf)
     ensureLocks.computeIfAbsent(s"${family}_$dirTag", _ => new Object).synchronized {
-      // a table this session registered via a bounded-staleness SERVE is
-      // only servable while the session still accepts staleness: a later
-      // ensure at the default (always fresh) must recompute, not silently
-      // keep handing out the stale copy (review r13)
-      if (staleEpochs == 1 && staleServedTables.contains(table) &&
-        spark.catalog.tableExists(table)) {
-        spark.sql(s"DROP TABLE IF EXISTS `$table`")
-        staleServedTables.remove(table)
-        ()
-      }
       if (!spark.catalog.tableExists(table)) {
         // the in-memory catalog dies with the session but the warehouse
         // directory survives. A COMPLETE surviving dir (current tag,
@@ -289,31 +200,18 @@ object Layout {
         // artifact itself — re-REGISTER it as an external bucketed table
         // instead of rebuilding: bucket ids live in the file names, so
         // bucketed (exchange-free) reads apply to the re-registered copy
-        // exactly as to the original. A dir carrying the [[StaleFile]]
-        // marker was published by a bounded-staleness serve in some
-        // session: reusable only when THIS caller also accepts staleness
-        // — at the default it is recompute input, not an artifact (the
-        // cross-session face of the same review finding).
-        if (isCommitted(fs, wh, censusStr) && (staleEpochs > 1 ||
-          readText(fs, new org.apache.hadoop.fs.Path(wh, StaleFile)).isEmpty)) {
-          if (readText(fs,
-            new org.apache.hadoop.fs.Path(wh, StaleFile)).isDefined)
-            staleServedTables.add(table)
+        // exactly as to the original.
+        if (isCommitted(fs, wh, censusStr))
           registerExternal(spark, table, wh,
             graft.io.Tables.parquet(spark, wh.toString).schema.toDDL, key, buckets)
-        } else {
+        else {
           if (fs.exists(wh)) fs.delete(wh, true)
-          // append-only source delta + a committed predecessor + a
-          // refresh kernel → incremental refresh; anything else → build
-          val predecessor =
-            if (refresh.isDefined || refreshDelta.isDefined ||
-              refreshGen.isDefined)
-              findRefreshPredecessor(fs, whRoot, family, dirTag, wh.getName,
-                version, entries)
-            else None
+          val predecessor = append.flatMap(a =>
+            findRefreshPredecessor(fs, whRoot, family, dirTag, wh.getName,
+              version, entries).map(a -> _))
           val t0 = System.nanoTime()
-          // the shared FullRebuild fallback: counted as a build so
-          // harnesses can assert an append genuinely took the delta path
+          // also the FullRebuild fallback: counted as a build so harnesses
+          // can assert an append genuinely took the delta path
           def fullBuild(): String = {
             buildCount.incrementAndGet()
             val content = build
@@ -322,143 +220,34 @@ object Layout {
             content.schema.toDDL
           }
           val schemaDDL: String = predecessor match {
-            case Some((oldDir, priorEntries)) =>
+            case Some((a, (oldDir, priorEntries))) =>
               refreshCount.incrementAndGet()
               val pathOf = (e: String) => e.split("\\|", 3)(2)
-              // ONE read of the predecessor's stale marker serves both
-              // the serve decision and the recompute's processed-census
-              // ctx (review r13: the guard+body pattern read it twice)
-              val staleLines =
-                if (staleEpochs > 1 || refresh.isDefined)
-                  readText(fs,
-                    new org.apache.hadoop.fs.Path(oldDir, StaleFile))
-                    .map(_.split("\n").toSeq)
-                else None
-              val staleN = staleLines.flatMap(_.headOption)
-                .flatMap(_.trim.toIntOption).getOrElse(0)
-              val processed = staleLines.map(_.tail).getOrElse(priorEntries)
-              if (staleEpochs > 1 && staleN + 1 < staleEpochs) {
-                // bounded-staleness SERVE, decided BEFORE any
-                // full-file-set schema inference: the whole point is an
-                // O(#files) epoch, and `spark.read.parquet(oldDir)`
-                // alone costs a footer-reading job over the committed
-                // files (tier K measured ~2 s at 350 files — more than
-                // the serve itself)
-                commitStaleServe(spark, fs, table, wh, censusStr, oldDir,
-                  ((staleN + 1).toString +: processed).mkString("\n"))
-                staleServedTables.add(table)
-                // schema from the predecessor's catalog entry when this
-                // session registered it (no job at all); else one data
-                // file's footer (all files share the schema)
-                val fromCatalog =
-                  if (spark.catalog.tableExists(oldDir.getName))
-                    Some(spark.sessionState.catalog.getTableMetadata(
-                      org.apache.spark.sql.catalyst.TableIdentifier(
-                        oldDir.getName)).schema.toDDL)
-                  else None
-                fromCatalog.getOrElse {
-                  val oneFile = fs.listStatus(oldDir).collectFirst {
-                    case s if s.isFile &&
-                      s.getPath.getName.endsWith(".parquet") =>
-                      s.getPath.toString
-                  }.get
-                  spark.read.parquet(oneFile).schema.toDDL
-                }
-              } else {
-              val prior = priorEntries.map(pathOf)
-              val added = entries.filterNot(priorEntries.toSet).map(pathOf)
-              val genOpt =
-                if (refreshGen.isDefined)
-                  readText(fs, new org.apache.hadoop.fs.Path(oldDir, GenFile))
-                    .flatMap(_.trim.toIntOption)
-                else None
+              val gen =
+                readText(fs, new org.apache.hadoop.fs.Path(oldDir, GenFile))
+                  .flatMap(_.trim.toIntOption).getOrElse(1)
               val rawOld = spark.read.parquet(oldDir.toString)
-              // RefreshCtx contract: a multi-generation predecessor's raw
-              // rows carry per-generation PARTIAL values — a kernel
-              // reading oldArtifact must see committed content, so it is
-              // served through the merge (lazy; costs nothing unless the
-              // kernel actually reads it)
-              val ctx = RefreshCtx(
-                refreshGen match {
-                  case Some(g) if genOpt.isDefined => g.merge(rawOld)
-                  case _ => rawOld
-                }, added, prior)
-              try if (refreshGen.isDefined) {
-                val g = refreshGen.get
-                val gen = genOpt.getOrElse(1)
-                // the delta kernel runs (and performs its eager
-                // expressibility checks) BEFORE any write is chosen
-                val deltaOpt =
-                  try Some(g.delta(ctx))
-                  catch { case _: FullRebuild => None }
-                deltaOpt match {
-                  case Some(delta) if gen < g.maxGenerations =>
-                    // append generation gen+1: link committed files
-                    // forward, write only the delta bucket files
-                    commitAppend(spark, fs, table, wh, key, buckets,
-                      censusStr, oldDir, ctx.oldArtifact.schema, delta,
-                      genMarker = Some(gen + 1))
-                    ctx.oldArtifact.schema.toDDL
-                  case Some(delta) =>
-                    // COMPACTION epoch: one merged rewrite of
-                    // base⊕delta; generation counter resets (no marker)
-                    val content = g.merge(
-                      ctx.oldArtifact.unionByName(delta))
-                    commitBuild(spark, fs, table, wh, key, buckets,
-                      censusStr, content)
-                    content.schema.toDDL
-                  case None =>
-                    // inexpressible delta (FullRebuild) → full build
-                    fullBuild()
+              // lazy: the merge costs nothing unless the kernel reads it
+              val ctx = RefreshCtx(if (gen > 1) a.merge(rawOld) else rawOld,
+                entries.filterNot(priorEntries.toSet).map(pathOf),
+                priorEntries.map(pathOf))
+              // the delta kernel runs (and performs its eager
+              // expressibility checks) BEFORE any write is chosen
+              try {
+                val delta = a.delta(ctx)
+                if (gen < MaxGenerations) {
+                  commitAppend(spark, fs, table, wh, key, buckets,
+                    censusStr, oldDir, rawOld.schema, delta, gen + 1)
+                  rawOld.schema.toDDL
+                } else {
+                  val content = a.merge(ctx.oldArtifact.unionByName(delta))
+                  commitBuild(spark, fs, table, wh, key, buckets,
+                    censusStr, content)
+                  content.schema.toDDL
                 }
-              } else if (refreshDelta.isDefined) {
-                // partition-level append: link old files + write delta;
-                // a kernel whose append invalidates a frozen model
-                // (ivf_cells' seed ceiling) signals FullRebuild
-                val deltaOpt =
-                  try Some(refreshDelta.get(ctx))
-                  catch { case _: FullRebuild => None }
-                val priorDataFiles = fs.listStatus(oldDir).count(s =>
-                  s.isFile && s.getPath.getName.endsWith(".parquet"))
-                deltaOpt match {
-                  case Some(delta)
-                      if priorDataFiles < buckets * deltaFileFactor =>
-                    commitAppend(spark, fs, table, wh, key, buckets,
-                      censusStr, oldDir, ctx.oldArtifact.schema, delta)
-                    ctx.oldArtifact.schema.toDDL
-                  case Some(delta) =>
-                    // small-file COMPACTION epoch (scaladoc above):
-                    // row-identical rewrite of old ∪ delta
-                    val content = ctx.oldArtifact.unionByName(delta)
-                    commitBuild(spark, fs, table, wh, key, buckets,
-                      censusStr, content)
-                    content.schema.toDDL
-                  case None =>
-                    // FullRebuild from the delta kernel (e.g. ivf_cells'
-                    // seed-ceiling invalidation)
-                    fullBuild()
-                }
-              } else {
-                // the Kth (or a default-always-fresh) recompute: the
-                // predecessor's stale marker, when present, carries the
-                // census it actually PROCESSED (read once above), so the
-                // kernel's ctx reflects every file since the last kernel
-                // run — not just the files since the last stale serve
-                val content = refresh.get(RefreshCtx(rawOld,
-                  entries.filterNot(processed.toSet).map(pathOf),
-                  processed.map(pathOf)))
-                commitBuild(spark, fs, table, wh, key, buckets, censusStr,
-                  content)
-                content.schema.toDDL
-              }
-              catch {
-                // a FullRebuild that first surfaced inside the commit/
-                // compaction ACTION (a kernel that deferred its
-                // expressibility check into the lazy frame — possibly
-                // wrapped in Spark's executor-exception chain); the
-                // commit helpers have already cleaned their tmp dir
+              } catch {
+                // the commit helpers have already cleaned their tmp dir
                 case t: Throwable if causedByFullRebuild(t) => fullBuild()
-              }
               }
             case None =>
               fullBuild()
@@ -472,20 +261,19 @@ object Layout {
         // stale sibling can only exist when a new tag was just created
         // (census change) or a surviving dir was re-registered, so the
         // warm serve path must not pay a full catalog enumeration plus
-        // a warehouse listing per consumer query (the ADVICE-r11
-        // genFlags lesson applied to the GC sweep)
+        // a warehouse listing per consumer query
         dropStaleDerived(spark, family, dirTag, table)
       }
-      // a MULTI-generation artifact is served through its merge (the
-      // generation marker is written by every append commit); a single
-      // generation — fresh build, compaction, or a pre-generational
-      // committed dir — has unique keys already, and skipping the
-      // identity merge keeps a 100 TB consumer scan free of a
-      // full-artifact hash-agg it doesn't need (tier J measured the
-      // always-merge form costing every edge consumer 2-3× at 240M rows)
-      refreshGen match {
-        case Some(g) if isMultiGeneration(fs, wh, s"${family}_$dirTag", table) =>
-          g.merge(spark.table(table))
+      // a MULTI-generation artifact is served through its merge; a single
+      // generation (fresh build, compaction) has unique keys already, and
+      // skipping the merge keeps a consumer scan free of a full-artifact
+      // hash-agg it doesn't need (tier J measured the always-merge form
+      // costing every edge consumer 2-3× at 240M rows). An unmerged
+      // artifact never reads the marker.
+      append match {
+        case Some(a) if (a.merge ne Append.Unmerged) &&
+            isMultiGeneration(fs, wh, s"${family}_$dirTag", table) =>
+          a.merge(spark.table(table))
         case _ => spark.table(table)
       }
     }
@@ -495,11 +283,10 @@ object Layout {
     * artifact carries a [[GenFile]] marker (>1 generation → consumers
     * must merge). The marker for a given committed table name never
     * changes — an append publishes a NEW census-hashed name — so one FS
-    * metadata read per generation suffices; without the cache every
-    * consumer query of a refreshGen artifact paid the round-trip
-    * (ADVICE r11). Keyed like [[ensureLocks]] (family+dirTag, one entry
-    * per live artifact, not one per retired census) and validated
-    * against the current table name.
+    * metadata read per generation suffices instead of one per consumer
+    * query. Keyed like [[ensureLocks]] (family+dirTag, one entry per live
+    * artifact, not one per retired census) and validated against the
+    * current table name.
     */
   private val genFlags =
     new java.util.concurrent.ConcurrentHashMap[String, (String, Boolean)]()
@@ -632,7 +419,7 @@ object Layout {
     publishTmp(fs, table, wh, tmpDir, censusStr)
   }
 
-  /** Commit the NEXT GENERATION of an append-only artifact at `wh`
+  /** Commit generation `generation` of an appended artifact at `wh`
     * without rewriting the committed rows: the predecessor's parquet
     * data files are HARDLINKED into a tmp dir (O(#files) on a local fs;
     * byte-copied where links are unavailable — still shuffle/encode-free),
@@ -649,15 +436,14 @@ object Layout {
       key: String, buckets: Int, censusStr: String,
       oldDir: org.apache.hadoop.fs.Path,
       schema: org.apache.spark.sql.types.StructType,
-      delta: DataFrame, genMarker: Option[Int] = None): Unit = {
+      delta: DataFrame, generation: Int): Unit = {
     val suffix = java.util.UUID.randomUUID().toString.replace("-", "").take(10)
     val tmpTable = s"${table}__a$suffix"
     val tmpDir = new org.apache.hadoop.fs.Path(wh.getParent, tmpTable.toLowerCase)
     try {
     fs.mkdirs(tmpDir)
-    genMarker.foreach(g =>
-      writeText(fs, new org.apache.hadoop.fs.Path(tmpDir, GenFile),
-        g.toString))
+    writeText(fs, new org.apache.hadoop.fs.Path(tmpDir, GenFile),
+      generation.toString)
     fs.listStatus(oldDir)
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .foreach { s =>
@@ -673,10 +459,9 @@ object Layout {
     // PRE-SHUFFLED onto the bucket key — the same writer alignment as
     // [[writeBucketed]], without which every upstream task writes its
     // own file per bucket (tasks × buckets files from ONE epoch —
-    // measured 1056 on tier K's first cut — instantly tripping the
-    // deltaFileFactor cap and taxing every later scan); aligned, one
-    // epoch adds at most `buckets` files, the premise the compaction
-    // threshold and its 1-in-N amortization stand on
+    // measured 1056 on tier K's first cut — taxing every later scan);
+    // aligned, one epoch adds at most `buckets` files, the premise of the
+    // [[MaxGenerations]] file bound
     val view = s"${tmpTable}__delta"
     delta.select(schema.fieldNames.map(col).toSeq: _*)
       .repartition(buckets, col(key))
@@ -694,41 +479,6 @@ object Layout {
       // caller may fall back to a full build
       case t: Throwable =>
         spark.sql(s"DROP TABLE IF EXISTS `$tmpTable`")
-        fs.delete(tmpDir, true)
-        throw t
-    }
-  }
-
-  /** Publish the predecessor's committed content under the CURRENT
-    * census tag without running any kernel — the bounded-staleness serve
-    * (`staleEpochs`): data files hardlink forward (bucket ids live in
-    * file names, so exchange-free reads hold), the [[StaleFile]] marker
-    * records the serve count + processed census, and the same atomic
-    * publish as every other commit path applies. O(#files), no job.
-    */
-  private def commitStaleServe(
-      spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
-      table: String, wh: org.apache.hadoop.fs.Path,
-      censusStr: String, oldDir: org.apache.hadoop.fs.Path,
-      staleMarker: String): Unit = {
-    val suffix = java.util.UUID.randomUUID().toString.replace("-", "").take(10)
-    val tmpDir = new org.apache.hadoop.fs.Path(
-      wh.getParent, s"${table}__s$suffix".toLowerCase)
-    try {
-      fs.mkdirs(tmpDir)
-      writeText(fs, new org.apache.hadoop.fs.Path(tmpDir, StaleFile),
-        staleMarker)
-      // no job ran, so create the commit marker isCommitted requires
-      writeText(fs, new org.apache.hadoop.fs.Path(tmpDir, "_SUCCESS"), "")
-      fs.listStatus(oldDir)
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .foreach { s =>
-          linkOrCopy(fs, s.getPath,
-            new org.apache.hadoop.fs.Path(tmpDir, s.getPath.getName))
-        }
-      publishTmp(fs, table, wh, tmpDir, censusStr)
-    } catch {
-      case t: Throwable =>
         fs.delete(tmpDir, true)
         throw t
     }
@@ -811,22 +561,8 @@ object Layout {
     finally out.close()
   }
 
-  /** The bucketed-layout join as a registered query: orders and lineitem
-    * written bucketed+sorted on the order key (once per sfDir — reused
-    * across calls in a session), then joined and aggregated per order.
-    * With both sides pre-shuffled into matching buckets the join needs NO
-    * exchange, and the per-key aggregation rides the same distribution —
-    * at 100 TB this removes the dominant fact⋈fact shuffle entirely
-    * (asserted in LayoutSpec's no-Exchange plan guard). Aggregates are
-    * order-independent (count/max) so the result is oracle-exact.
-    */
-  /** Append-only refresh for pure projection artifacts: project ONLY the
-    * added files and union onto the committed copy — an appended shard
-    * never rewrites the old rows' derivation.
-    */
-  /** Append-refresh DELTA for a pure projection artifact: only the added
-    * files' rows, projected — the [[ensureDerived]] `refreshDelta` form
-    * (committed rows are hardlinked, never rewritten).
+  /** Append DELTA for a pure projection artifact: only the added files'
+    * rows, projected (committed rows are hardlinked, never rewritten).
     */
   private def projectDelta(
       spark: SparkSession, cols: Seq[String]): RefreshCtx => DataFrame =
@@ -850,7 +586,7 @@ object Layout {
       "o_orderpriority", "o_totalprice")
     ensureDerived(spark, sfDir, "orders_okey", Seq("orders.parquet"),
       "o_orderkey", version = 2,
-      refreshDelta = Some(projectDelta(spark, cols))) {
+      append = Some(Append(projectDelta(spark, cols)))) {
       graft.io.Tables.orders(spark, sfDir).select(cols.map(col): _*)
     }
   }
@@ -865,23 +601,32 @@ object Layout {
       "l_returnflag", "l_shipdate", "l_extendedprice", "l_discount")
     ensureDerived(spark, sfDir, "lineitem_okey", Seq("lineitem.parquet"),
       "l_orderkey", version = 2,
-      refreshDelta = Some(projectDelta(spark, cols))) {
+      append = Some(Append(projectDelta(spark, cols)))) {
       graft.io.Tables.lineitem(spark, sfDir).select(cols.map(col): _*)
     }
   }
 
+  /** The bucketed-layout join as a registered query: orders and lineitem
+    * written bucketed+sorted on the order key (once per sfDir — reused
+    * across calls in a session), then joined and aggregated per order.
+    * With both sides pre-shuffled into matching buckets the join needs NO
+    * exchange, and the per-key aggregation rides the same distribution —
+    * at 100 TB this removes the dominant fact⋈fact shuffle entirely
+    * (asserted in LayoutSpec's no-Exchange plan guard). Aggregates are
+    * order-independent (count/max) so the result is oracle-exact.
+    */
   def bucketedOrderItems(spark: SparkSession, sfDir: String, buckets: Int = 32): DataFrame = {
     val ordersBkt = ensureDerived(spark, sfDir, "orders_bkt",
       Seq("orders.parquet"), "o_orderkey", buckets,
-      refreshDelta =
-        Some(projectDelta(spark, Seq("o_orderkey", "o_orderstatus")))) {
+      append = Some(Append(
+        projectDelta(spark, Seq("o_orderkey", "o_orderstatus"))))) {
       graft.io.Tables.orders(spark, sfDir)
         .select("o_orderkey", "o_orderstatus")
     }
     val itemsBkt = ensureDerived(spark, sfDir, "lineitem_bkt",
       Seq("lineitem.parquet"), "l_orderkey", buckets,
-      refreshDelta =
-        Some(projectDelta(spark, Seq("l_orderkey", "l_extendedprice")))) {
+      append = Some(Append(
+        projectDelta(spark, Seq("l_orderkey", "l_extendedprice"))))) {
       graft.io.Tables.lineitem(spark, sfDir)
         .select("l_orderkey", "l_extendedprice")
     }

@@ -579,7 +579,7 @@ object CorpusIngest {
     * ([[graft.ext.Graph.coPurchaseEdges]]): a micro-batch of
     * (l_orderkey, l_partkey) order lines appends one epoch of
     * (src, dst, w) edge-DELTA rows, derived by the SAME kernel the batch
-    * artifact's [[graft.ops.Layout.GenRefresh]] delta runs
+    * artifact's [[graft.ops.Layout.Append]] delta runs
     * ([[graft.ext.Graph.edgeDelta]] — pairs with ≥1 end among the
     * batch's genuinely-new memberships, old×old never re-joined), plus
     * the membership log the next epoch's dedup/size checks read.
@@ -749,11 +749,8 @@ object CorpusIngest {
     // 240k-row edge delta; the array closures move the same data as bulk
     // bytes and the tuple encoder runs codegen'd inside the task). File
     // count is the micro-batch partition count; the three independent
-    // sinks are submitted concurrently like the distributed branch's,
-    // settled before rethrow.
+    // sinks run through [[runSettled]] like the distributed branch's.
     val sp = spark; import sp.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     val mb = MicroBatchPartitions
     def stripe(s: Long, n: Int): Range =
       ((s * n / mb).toInt until ((s + 1) * n / mb).toInt)
@@ -781,19 +778,38 @@ object CorpusIngest {
         .toDF(names._1, names._2, names._3)
         .write.mode("overwrite").parquet(path)
     }
-    val writes = Seq(
-      Future(writeTriples(edgeRows, ("src", "dst", "w"),
-        s"$indexPath/edges/epoch=$epoch")),
-      Future(writePairs(censusRows, ("l_partkey", "pc"),
-        s"$indexPath/census/epoch=$epoch")),
-      Future(writePairs(memberRows, ("l_orderkey", "l_partkey"),
-        s"$indexPath/members/epoch=$epoch")))
-    val settled = Await.result(
-      Future.sequence(writes.map(_.map(r => scala.util.Success(r)
-        : scala.util.Try[Unit])
-        .recover { case t => scala.util.Failure(t) })),
-      scala.concurrent.duration.Duration.Inf)
-    settled.foreach(_.get)
+    runSettled(
+      () => writeTriples(edgeRows, ("src", "dst", "w"),
+        s"$indexPath/edges/epoch=$epoch"),
+      () => writePairs(censusRows, ("l_partkey", "pc"),
+        s"$indexPath/census/epoch=$epoch"),
+      () => writePairs(memberRows, ("l_orderkey", "l_partkey"),
+        s"$indexPath/members/epoch=$epoch"))
+  }
+
+  /** Run an epoch's independent sink writes concurrently — the standard
+    * foreachBatch multi-sink recipe: epoch wall time is the slowest
+    * write, not the sum. Each write runs on a thread created for this
+    * call, so it inherits the caller's Spark local properties (job
+    * group, `streaming.sql.batchId`); a pooled thread would carry
+    * whatever it inherited when the pool made it. Failures SETTLE before
+    * they rethrow: a fail-fast return would leave the surviving writers
+    * holding the epoch=N dirs, and the stream's replay of this epoch
+    * would then race those orphaned overwrites on the same paths — so
+    * every write runs to termination and only then does the first
+    * failure fail the batch, keeping the epoch-scoped-overwrite replay
+    * contract intact.
+    */
+  private def runSettled(writes: (() => Unit)*): Unit = {
+    val failures = new Array[Throwable](writes.size)
+    val threads = writes.zipWithIndex.map { case (write, i) =>
+      val t = new Thread(() =>
+        try write() catch { case e: Throwable => failures(i) = e })
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    failures.find(_ != null).foreach(e => throw e)
   }
 
   private[graft] def edgeBatchBodyDistributed(
@@ -883,31 +899,14 @@ object CorpusIngest {
             }
           // the three epoch outputs are independent sinks over the same
           // persisted frames (cache partitions are computed once and
-          // shared under the cache locks) — submit them concurrently,
-          // the standard foreachBatch
-          // multi-sink recipe: epoch wall time is the slowest write, not
-          // the sum. Failures SETTLE before they rethrow: a fail-fast
-          // Await would return while the surviving writers still hold
-          // the epoch=N dirs, and the stream's replay of this epoch
-          // would then race those orphaned overwrites on the same paths
-          // — so every future is awaited to termination (as a Try) and
-          // only then does the first failure fail the batch, keeping the
-          // epoch-scoped-overwrite replay contract intact.
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val writes = Seq(
-            Future(epochRows.write.mode("overwrite")
-              .parquet(s"$indexPath/edges/epoch=$epoch")),
-            Future(censusRows.write.mode("overwrite")
-              .parquet(s"$indexPath/census/epoch=$epoch")),
-            Future(newOnly.write.mode("overwrite")
-              .parquet(s"$indexPath/members/epoch=$epoch")))
-          val settled = Await.result(
-            Future.sequence(writes.map(_.map(r => scala.util.Success(r)
-              : scala.util.Try[Unit])
-              .recover { case t => scala.util.Failure(t) })),
-            scala.concurrent.duration.Duration.Inf)
-          settled.foreach(_.get)
+          // shared under the cache locks)
+          runSettled(
+            () => epochRows.write.mode("overwrite")
+              .parquet(s"$indexPath/edges/epoch=$epoch"),
+            () => censusRows.write.mode("overwrite")
+              .parquet(s"$indexPath/census/epoch=$epoch"),
+            () => newOnly.write.mode("overwrite")
+              .parquet(s"$indexPath/members/epoch=$epoch"))
         } finally { newOnly.unpersist(); mergedSz.unpersist(); () }
       } finally { oldTouched.unpersist(); () }
     } finally { newRaw.unpersist(); () }
@@ -915,7 +914,7 @@ object CorpusIngest {
 
   /** The streamed edge index's consumer view: all committed epoch deltas
     * merged — sum weights per (src, dst), cancellations netting to zero
-    * dropped. This is the [[graft.ops.Layout.GenRefresh]] read-side
+    * dropped. This is the [[graft.ops.Layout.Append]] read-side
     * merge applied to the stream's epoch generations.
     */
   private[graft] def readEdgeIndex(

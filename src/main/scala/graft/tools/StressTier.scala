@@ -960,11 +960,10 @@ object StressTier {
     */
   private def tierK(spark: SparkSession, baseDir: String, dir: String): Unit = {
     val reps = 100
-    // multiplier reserves shard ids for the refresh delta, the 12-epoch
-    // file-growth walk (shards reps..reps+12) AND the 4-epoch
-    // staleEpochs walk (reps+13..reps+16) — every id stays disjoint
-    // from the build shards' v·mult + [0, reps) range
-    val mult = reps + 17
+    // multiplier reserves shard ids for the refresh delta and the
+    // 12-epoch file-growth walk (shards reps..reps+12) — every id stays
+    // disjoint from the build shards' v·mult + [0, reps) range
+    val mult = reps + 13
     val walkEpochs = 12
     val (_, tRep) = timed("k.replicate")(replicateTables(
       spark, baseDir, dir, Seq("documents", "embeddings"), mult, 0 until reps))
@@ -1028,8 +1027,9 @@ object StressTier {
       check(n == basePattern(name) * (reps + 1),
         s"$name refresh must add exactly one shard pattern")
       // the delta commit must beat the build decisively — except
-      // shingle_stats, whose refresh IS its (already tokenize-free)
-      // global window recompute: bounded by build, not by half of it
+      // shingle_stats, which has no append form: it rebuilds its
+      // (already tokenize-free) global windows over the refreshed rows,
+      // bounded by build, not by half of it
       if (name == "shingle_stats")
         check(t < buildT(name) * 1.5 + 5.0,
           s"$name stats recompute must stay rebuild-shaped")
@@ -1038,20 +1038,21 @@ object StressTier {
           s"$name refresh must cost well under a build")
     }
     // buildCount also counts FullRebuild fallbacks inside the refresh
-    // path, so rebuilds=0 genuinely asserts every delta path was taken
-    // (e.g. a seed-ceiling regression in ivf_cells would trip it).
-    // shingle_stats contributes ONE refresh of its own on top of
-    // shingle_rows' (its kernel re-windows the already-refreshed rows).
-    check(graft.ops.Layout.refreshCount.get == r0 + families.size,
-      "all families must take the refresh path on the append")
-    check(graft.ops.Layout.buildCount.get == b0,
-      "no artifact may rebuild on an append-only delta")
+    // path, so exactly ONE build (shingle_stats' window recompute over
+    // the refreshed rows layer) genuinely asserts every delta path was
+    // taken (e.g. a seed-ceiling regression in ivf_cells would trip it)
+    check(graft.ops.Layout.refreshCount.get == r0 + families.size - 1,
+      "every family with an append form must take the refresh path")
+    check(graft.ops.Layout.buildCount.get == b0 + 1,
+      "only shingle_stats may rebuild on an append-only delta")
 
-    // 12-epoch WALK (postings): shards land one at a time, each refresh
+    // 12-epoch WALK (postings): shards land one at a time, each append
     // links the committed files forward and adds ≤ `buckets` delta
-    // files — total file count must stay inside the deltaFileFactor
-    // compaction bound the whole way (tier K run 1 r11 caught the
-    // unaligned writer exploding to tasks×buckets files in ONE epoch)
+    // files, and the append at generation MaxGenerations compacts — so a
+    // generation-g artifact holds ≤ buckets × g files the whole way (tier
+    // K run 1 r11 caught the unaligned writer exploding to tasks×buckets
+    // files in ONE epoch). The refresh above left postings at generation
+    // 2, so the walk crosses the compaction boundary once.
     val whRoot = new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir"))
     val fsW = whRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1064,92 +1065,25 @@ object StressTier {
     }
     var tWalk = 0.0
     var maxFiles = 0
-    // mirror the postings artifact's layout constants (ensureDerived
-    // defaults): the walk's growth bound derives from them instead of
-    // hardcoding magic numbers that could desynchronize from the
-    // contract. The walk deliberately stays BELOW the
-    // buckets×deltaFileFactor compaction trigger — the compaction epoch
-    // itself is pinned at small scale in LayoutRefreshSpec's 12-epoch
-    // walk; what this tier pins is the ALIGNED writer's
-    // ≤buckets-files-per-epoch growth at 100× volume (the r11 tier-K
-    // run-1 regression wrote tasks×buckets files in ONE epoch, which
-    // this bound catches immediately).
-    val buckets = 32
+    val buckets = 32 // the postings artifact's bucket count
+    var gen = 2
     (1 to walkEpochs).foreach { e =>
       replicateTables(spark, baseDir, dir, Seq("documents"), mult,
         (reps + e) to (reps + e), mode = "append")
       val (_, t) = timed(s"k.walk_$e")(
         graft.ext.Search.postingsShared(spark, dir).count())
       tWalk += t
+      gen = if (gen < graft.ops.Layout.MaxGenerations) gen + 1 else 1
       val nf = postingsFiles()
       maxFiles = math.max(maxFiles, nf)
-      // base(≤buckets) + the refresh shard(≤buckets) + ≤buckets per
-      // walk epoch
-      check(nf <= buckets * (2 + e),
-        s"walk epoch $e: postings files $nf grew faster than buckets/epoch")
+      check(nf <= buckets * gen,
+        s"walk epoch $e: postings files $nf exceed buckets x generation $gen")
     }
     val nWalk = graft.ext.Search.postingsShared(spark, dir).count()
     check(nWalk == basePattern("postings") * (reps + 1 + walkEpochs),
       s"walk total $nWalk != base pattern x ${reps + 1 + walkEpochs}")
     println(f"STRESS k.walk epochs=$walkEpochs seconds=$tWalk%.1f " +
       s"max_files=$maxFiles rows=$nWalk")
-
-    // staleEpochs AMORTIZATION walk (r13): the stats layer's window
-    // recompute — the one cost the two-layer split cannot make
-    // delta-proportional — amortizes to 1/K per epoch under the bounded-
-    // staleness knob: at K = 4, three appends SERVE the committed stats
-    // (hardlink-forward, no job) and the fourth recomputes.
-    val nShards = reps + 1 + walkEpochs
-    // NOTE on timings: the ENSURE is the maintainer's cost (the serve or
-    // the recompute job runs inside it — commitBuild is eager); the
-    // consumer count is a separate, untimed scan so a 30M-row read can't
-    // masquerade as serve cost (tier K run 1 r13 mis-read exactly that).
-    // Catch the stats layer up to the walk's 12 doc shards first, so the
-    // stale walk measures exactly its own four epochs.
-    val (dfC, tCatch) = timed("k.stale_catchup")(
-      Dedup.shingleStatsShared(spark, dir))
-    val fresh0 = dfC.count()
-    println(f"STRESS k.stale_catchup seconds=$tCatch%.1f rows=$fresh0")
-    check(fresh0 == basePattern("shingle_stats") * nShards,
-      "catch-up recompute must cover the walk shards")
-    spark.conf.set("graft.shingleStats.staleEpochs", "4")
-    try {
-      var tServe = 0.0
-      var worstServe = 0.0
-      val bS = graft.ops.Layout.buildCount.get
-      (1 to 3).foreach { e =>
-        replicateTables(spark, baseDir, dir, Seq("documents"), mult,
-          (reps + 12 + e) to (reps + 12 + e), mode = "append")
-        val (dfS, t) = timed(s"k.stale_serve_$e")(
-          Dedup.shingleStatsShared(spark, dir))
-        val n = dfS.count()
-        tServe += t
-        worstServe = math.max(worstServe, t)
-        println(f"STRESS k.stale_serve_$e seconds=$t%.1f rows=$n")
-        check(n == fresh0, s"stale serve $e must hand back the committed stats")
-      }
-      check(graft.ops.Layout.buildCount.get == bS,
-        "stale serves must not build")
-      replicateTables(spark, baseDir, dir, Seq("documents"), mult,
-        (reps + 16) to (reps + 16), mode = "append")
-      val (df4, t4) = timed("k.stale_recompute")(
-        Dedup.shingleStatsShared(spark, dir))
-      val n4 = df4.count()
-      println(f"STRESS k.stale_recompute seconds=$t4%.1f rows=$n4")
-      check(n4 == basePattern("shingle_stats") * (nShards + 4),
-        "the Kth epoch's recompute must cover every stale-served shard")
-      // a serve is kernel-free (buildCount pinned above); its wall cost
-      // is session bookkeeping (catalog mint + hardlinks + GC sweep,
-      // ~1-2 s at this warehouse's ~500 registered tables) — bound it
-      // RELATIVE to the recompute it displaces, plus an absolute cap
-      // that would catch a window job sneaking back in
-      check(worstServe < math.max(0.35 * t4, 1.0) && worstServe < 4.0,
-        f"stale serve cost $worstServe%.1f s vs recompute $t4%.1f s — a job leaked in?")
-      val amortized = (tServe + t4) / 4.0
-      println(f"STRESS k.stale_amortized per_epoch=$amortized%.1f " +
-        f"recompute=$t4%.1f serve_total=$tServe%.1f " +
-        f"ratio_vs_recompute=${amortized / math.max(t4, 0.001)}%.2f")
-    } finally spark.conf.unset("graft.shingleStats.staleEpochs")
 
     println(s"STRESS k.summary artifacts=${families.size} " +
       s"refreshes=${graft.ops.Layout.refreshCount.get - r0} " +

@@ -65,19 +65,18 @@ class LayoutRefreshSpec extends SparkSpec {
     var seenAdded: Seq[String] = Nil
     def ensure(): DataFrame = Layout.ensureDerived(
       spark, root, "test_incr", Seq("t.parquet"), "id", buckets = 4,
-      refresh = Some { ctx =>
+      append = Some(Layout.Append { ctx =>
         refreshes += 1
         seenAdded = ctx.addedFiles
-        ctx.oldArtifact.unionByName(
-          spark.read.parquet(ctx.addedFiles: _*).select(col("id"), col("v")))
-      }) {
+        spark.read.parquet(ctx.addedFiles: _*).select(col("id"), col("v"))
+      })) {
       builds += 1
       spark.read.parquet(s"$root/t.parquet").select(col("id"), col("v"))
     }
     assert(ensure().count() === 100)
     assert(builds === 1 && refreshes === 0)
-    // append-only delta → refresh sees EXACTLY the added file, result is
-    // old ∪ delta, and the build closure never re-runs
+    // append-only delta → the kernel sees EXACTLY the added file, the
+    // served result is old ∪ delta, and the build closure never re-runs
     val name = appendFile(s"$root/t.parquet",
       spark.range(100, 130).withColumn("v", col("id") * 2))
     val refreshed = ensure()
@@ -97,18 +96,18 @@ class LayoutRefreshSpec extends SparkSpec {
 
   test("a FullRebuild deferred into the delta ACTION still falls back to a full build") {
     // the shipped kernels run their expressibility checks eagerly, but
-    // the GenRefresh/refreshDelta contract (ADVICE r11) also covers a
-    // kernel that defers the check into the returned lazy frame: the
-    // signal first surfaces inside commitAppend's INSERT action, wrapped
-    // in Spark's executor-exception chain — ensureDerived must clean the
-    // tmp dir and fall back to the full build instead of aborting
+    // the Append contract also covers a kernel that defers the check
+    // into the returned lazy frame: the signal first surfaces inside
+    // commitAppend's INSERT action, wrapped in Spark's executor-exception
+    // chain — ensureDerived must clean the tmp dir and fall back to the
+    // full build instead of aborting
     val root = Files.createTempDirectory("graft_defer").toString
     spark.range(50).withColumn("v", col("id") * 3)
       .write.parquet(s"$root/t.parquet")
     var builds = 0
     def ensure(): DataFrame = Layout.ensureDerived(
       spark, root, "test_defer", Seq("t.parquet"), "id", buckets = 4,
-      refreshDelta = Some { ctx =>
+      append = Some(Layout.Append { ctx =>
         import spark.implicits._
         spark.read.parquet(ctx.addedFiles: _*)
           .select(col("id"), col("v")).as[(Long, Long)]
@@ -116,7 +115,7 @@ class LayoutRefreshSpec extends SparkSpec {
             throw new Layout.FullRebuild
           }
           .toDF("id", "v")
-      }) {
+      })) {
       builds += 1
       spark.read.parquet(s"$root/t.parquet").select(col("id"), col("v"))
     }
@@ -170,11 +169,10 @@ class LayoutRefreshSpec extends SparkSpec {
     var refreshes = 0
     def ensure(): DataFrame = Layout.ensureDerived(
       spark, root, "test_sparkapp", Seq("t.parquet"), "id", buckets = 4,
-      refresh = Some { ctx =>
+      append = Some(Layout.Append { ctx =>
         refreshes += 1
-        ctx.oldArtifact.unionByName(
-          spark.read.parquet(ctx.addedFiles: _*).select(col("id"), col("v")))
-      }) {
+        spark.read.parquet(ctx.addedFiles: _*).select(col("id"), col("v"))
+      })) {
       builds += 1
       spark.read.parquet(s"$root/t.parquet").select(col("id"), col("v"))
     }
@@ -197,11 +195,10 @@ class LayoutRefreshSpec extends SparkSpec {
     def ensure(s: org.apache.spark.sql.SparkSession): DataFrame =
       Layout.ensureDerived(s, root, "test_xsess", Seq("t.parquet"), "id",
         buckets = 4,
-        refresh = Some { ctx =>
+        append = Some(Layout.Append { ctx =>
           refreshes += 1
-          ctx.oldArtifact.unionByName(
-            s.read.parquet(ctx.addedFiles: _*).select(col("id"), col("v")))
-        }) {
+          s.read.parquet(ctx.addedFiles: _*).select(col("id"), col("v"))
+        })) {
         builds += 1
         s.read.parquet(s"$root/t.parquet").select(col("id"), col("v"))
       }
@@ -230,9 +227,10 @@ class LayoutRefreshSpec extends SparkSpec {
     def ensure(ver: Int): DataFrame = Layout.ensureDerived(
       spark, root, "test_vers", Seq("t.parquet"), "id", buckets = 4,
       version = ver,
-      // refresh kernel present but must NOT fire across versions: the
+      // append kernel present but must NOT fire across versions: the
       // surviving v1 dir is a recipe mismatch, not an append delta
-      refresh = Some(ctx => fail("refresh must not bridge a version bump"))) {
+      append = Some(Layout.Append(_ =>
+        fail("an append must not bridge a version bump")))) {
       builds += 1
       spark.read.parquet(s"$root/t.parquet").select(col("id"), col("v"))
     }
@@ -431,7 +429,7 @@ class LayoutRefreshSpec extends SparkSpec {
     assert((gen1Files -- gen0Files).nonEmpty, "delta files must be new")
     // the delta INSERT is pre-shuffled onto the bucket key: ONE epoch
     // adds at most `buckets` files (unaligned it writes tasks × buckets
-    // — the file explosion the deltaFileFactor cap math forbids)
+    // — the file explosion the MaxGenerations file bound forbids)
     assert((gen1Files -- gen0Files).size <= 32,
       s"one epoch must add <= buckets files, got ${(gen1Files -- gen0Files).size}")
     // gen0 was GC'd as stale, yet the linked data still reads (hardlink
@@ -516,110 +514,28 @@ class LayoutRefreshSpec extends SparkSpec {
     assert(refreshed.exceptAll(rebuilt).isEmpty &&
       rebuilt.exceptAll(refreshed).isEmpty,
       "refreshed simhash index diverged from the full rebuild")
-    // TWO-LAYER global df/rank stats (r12): the rows layer refreshes via
-    // refreshDelta — ONLY the appended docs tokenize, the committed
-    // (doc_id, sh) rows hardlink forward — and the stats layer
-    // re-windows the rows artifact (O(artifact), no text scan). Neither
-    // layer may run its full build on an append, and df/sz/rk must
-    // match a from-scratch rebuild row-for-row. (Counters captured
-    // here: the pristine-dir simhash rebuild above legitimately
-    // incremented buildCount once.)
+    // TWO-LAYER global df/rank stats: the rows layer refreshes by
+    // append — ONLY the appended docs tokenize, the committed
+    // (doc_id, sh) rows hardlink forward — and the stats layer has no
+    // append form: its build re-windows the rows artifact (O(artifact),
+    // no text scan). So exactly one build (the stats layer's) and one
+    // refresh (the rows layer's) run, and df/sz/rk must match a
+    // from-scratch rebuild row-for-row. (Counters captured here: the
+    // pristine-dir simhash rebuild above legitimately incremented
+    // buildCount once.)
     val b1 = Layout.buildCount.get
     val r1 = Layout.refreshCount.get
     val stats = graft.ext.Dedup.shingleStatsShared(spark, base)
-    assert(Layout.buildCount.get === b1,
-      "an append must never re-shingle the corpus (delta tokenize only)")
-    assert(Layout.refreshCount.get === r1 + 2,
-      "both layers (shingle_rows delta, shingle_stats re-window) must refresh")
+    assert(Layout.refreshCount.get === r1 + 1,
+      "an append must never re-shingle the corpus (shingle_rows refreshes)")
+    assert(Layout.buildCount.get === b1 + 1,
+      "only the stats layer re-windows (one build, no rows-layer build)")
     assert(stats.filter(col("doc_id") > maxId).count() > 0,
       "refreshed shingle_stats must include the appended docs")
     val pristineStats = graft.ext.Dedup.shingleStatsShared(spark, pristine)
     assert(stats.exceptAll(pristineStats).isEmpty &&
       pristineStats.exceptAll(stats).isEmpty,
       "two-layer refreshed shingle_stats diverged from the full rebuild")
-  }
-
-  test("shingle_stats staleEpochs: K-1 appends serve committed stats, the Kth recomputes") {
-    val base = Files.createTempDirectory("graft_stale_incr").toString + "/d"
-    val pristine = Files.createTempDirectory("graft_stale_full").toString + "/d"
-    fs.mkdirs(new Path(base)); fs.mkdirs(new Path(pristine))
-    seedAsDir(s"$sf/documents.parquet", s"$base/documents.parquet")
-    val docs = spark.read.parquet(s"$base/documents.parquet")
-    val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-    def extra(tag: Long) = docs.orderBy(col("doc_id").asc).limit(5)
-      .withColumn("doc_id", col("doc_id") + lit(maxId + tag))
-      .withColumn("text", concat(col("text"), lit(s" shard $tag")))
-    spark.conf.set("graft.shingleStats.staleEpochs", "3")
-    try {
-      val s0 = graft.ext.Dedup.shingleStatsShared(spark, base)
-      val s0rows = s0.collect().toSeq
-      // appends 1..K-1: the stats layer SERVES the committed copy —
-      // no kernel job, counter in the artifact dir, appended docs
-      // absent BY CONTRACT (the documented bounded staleness)
-      for (k <- 1 to 2) {
-        appendFile(s"$base/documents.parquet", extra(1000L * k))
-        val b0 = Layout.buildCount.get
-        val sk = graft.ext.Dedup.shingleStatsShared(spark, base)
-        assert(Layout.buildCount.get === b0,
-          s"stale serve $k must not run any build")
-        assert(sk.filter(col("doc_id") > maxId).count() === 0,
-          s"stale serve $k: committed stats served unchanged")
-        assert(sk.collect().toSeq.sortBy(_.toString) ===
-          s0rows.sortBy(_.toString),
-          s"stale serve $k must be row-identical to the committed stats")
-      }
-      // the Kth append recomputes: every appended shard's docs appear,
-      // and the result equals a from-scratch rebuild over the same data
-      appendFile(s"$base/documents.parquet", extra(3000L))
-      val s3 = graft.ext.Dedup.shingleStatsShared(spark, base)
-      for (k <- 1 to 3)
-        assert(s3.filter(col("doc_id") > maxId + 1000L * k).count() > 0,
-          s"recompute must cover shard $k (including stale-served ones)")
-      copyDir(s"$base/documents.parquet", s"$pristine/documents.parquet")
-      spark.conf.set("graft.shingleStats.staleEpochs", "1")
-      val rebuilt = graft.ext.Dedup.shingleStatsShared(spark, pristine)
-      assert(s3.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(s3).isEmpty,
-        "post-stale recompute diverged from the full rebuild")
-    } finally spark.conf.unset("graft.shingleStats.staleEpochs")
-  }
-
-  test("a stale-served artifact is never served at the default knob (always-fresh)") {
-    val base = Files.createTempDirectory("graft_stale_fresh").toString + "/d"
-    fs.mkdirs(new Path(base))
-    seedAsDir(s"$sf/documents.parquet", s"$base/documents.parquet")
-    val docs = spark.read.parquet(s"$base/documents.parquet")
-    val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-    def extra(tag: Long) = docs.orderBy(col("doc_id").asc).limit(5)
-      .withColumn("doc_id", col("doc_id") + lit(maxId + tag))
-      .withColumn("text", concat(col("text"), lit(s" fresh shard $tag")))
-    spark.conf.set("graft.shingleStats.staleEpochs", "3")
-    try {
-      graft.ext.Dedup.shingleStatsShared(spark, base).count()
-      appendFile(s"$base/documents.parquet", extra(1000L))
-      val served = graft.ext.Dedup.shingleStatsShared(spark, base)
-      assert(served.filter(col("doc_id") > maxId).count() === 0,
-        "precondition: the append was stale-served")
-      // SAME-SESSION flip back to the default: the registered stale copy
-      // must be recomputed, not handed out
-      spark.conf.set("graft.shingleStats.staleEpochs", "1")
-      val fresh = graft.ext.Dedup.shingleStatsShared(spark, base)
-      assert(fresh.filter(col("doc_id") > maxId).count() > 0,
-        "default-knob ensure must recompute over a stale-served table")
-      // CROSS-SESSION face: serve stale again, then drop the catalog
-      // entry (what a new session sees) — the surviving marker-carrying
-      // dir must be recompute input at the default, not an artifact
-      spark.conf.set("graft.shingleStats.staleEpochs", "3")
-      appendFile(s"$base/documents.parquet", extra(2000L))
-      graft.ext.Dedup.shingleStatsShared(spark, base).count() // stale serve
-      spark.sessionState.catalog
-        .listTables(spark.sessionState.catalog.getCurrentDatabase)
-        .map(_.table).filter(_.startsWith("graft_shingle_stats_"))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
-      spark.conf.set("graft.shingleStats.staleEpochs", "1")
-      val fresh2 = graft.ext.Dedup.shingleStatsShared(spark, base)
-      assert(fresh2.filter(col("doc_id") > maxId + 2000L).count() > 0,
-        "a surviving stale-marked dir must not be re-registered at the default")
-    } finally spark.conf.unset("graft.shingleStats.staleEpochs")
   }
 
   test("winnow_sel refreshes append-only and matches a full rebuild") {
@@ -803,31 +719,46 @@ class LayoutRefreshSpec extends SparkSpec {
     assert(refreshed.agg(min(col("name_id"))).first().getLong(0) < 0L)
   }
 
-  test("GenRefresh: generations append, compact past maxGenerations, FullRebuild falls back") {
-    val base = Files.createTempDirectory("graft_gen_toy").toString + "/d"
-    fs.mkdirs(new Path(base)); fs.mkdirs(new Path(s"$base/facts.parquet"))
+  /** The one compaction rule for every appended artifact, walked over
+    * MaxGenerations + 1 appends and a FullRebuild: each append links the
+    * committed files forward and writes the delta as extra bucket files
+    * (generation +1, ≤ buckets files each), and the append that finds
+    * generation MaxGenerations COMPACTS instead — one rewrite of
+    * merge(old ∪ delta), generation back to 1. `summing` picks a summing
+    * merge (rows that repeat committed keys) over the identity merge
+    * (strictly-new rows); the shards are the same either way.
+    */
+  private def appendCompactionWalk(family: String, summing: Boolean): Unit = {
     val sq = spark; import sq.implicits._
+    val buckets = 4
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
     def shard(rows: (Long, Long)*): DataFrame =
       rows.toSeq.toDF("k", "w").select(col("k"), col("w").cast("long"))
+    val sumW: DataFrame => DataFrame =
+      _.groupBy(col("k")).agg(sum(col("w")).as("w"))
+    val base = Files.createTempDirectory(s"graft_$family").toString + "/d"
+    fs.mkdirs(new Path(s"$base/facts.parquet"))
+    // identity: the artifact is the source rows; summing: per-key sums
+    val shape: DataFrame => DataFrame = if (summing) sumW else identity
+    def deltaOf(ctx: Layout.RefreshCtx): DataFrame = {
+      val d = spark.read.parquet(ctx.addedFiles: _*)
+      // the inexpressible-delta hook under test: a sentinel weight
+      if (!d.filter(col("w") === 999L).isEmpty)
+        throw new Layout.FullRebuild
+      shape(d)
+    }
+    val append =
+      if (summing) Layout.Append(deltaOf, sumW)
+      else Layout.Append(deltaOf)
     def ensure(): DataFrame =
-      Layout.ensureDerived(spark, base, "gen_toy", Seq("facts.parquet"),
-        "k", version = 1,
-        refreshGen = Some(Layout.GenRefresh(
-          delta = { ctx =>
-            val d = spark.read.parquet(ctx.addedFiles: _*)
-            // the inexpressible-delta hook under test: a sentinel weight
-            if (!d.filter(col("w") === 999L).isEmpty)
-              throw new Layout.FullRebuild
-            d.groupBy(col("k")).agg(sum(col("w")).as("w"))
-          },
-          merge = _.groupBy(col("k")).agg(sum(col("w")).as("w")),
-          maxGenerations = 3))) {
-        spark.read.parquet(s"$base/facts.parquet")
-          .groupBy(col("k")).agg(sum(col("w")).as("w"))
+      Layout.ensureDerived(spark, base, family, Seq("facts.parquet"),
+        "k", buckets = buckets, append = Some(append)) {
+        shape(spark.read.parquet(s"$base/facts.parquet"))
       }
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    def expected(): DataFrame =
+      shape(spark.read.parquet(s"$base/facts.parquet"))
     def artifactDir(): Path = fs.listStatus(new Path(wh)).map(_.getPath)
-      .filter(_.getName.startsWith("graft_gen_toy_"))
+      .filter(_.getName.startsWith(s"graft_${family}_"))
       .maxBy(p => fs.getFileStatus(p).getModificationTime)
     def genMarker(): Option[String] = {
       val p = new Path(artifactDir(), "_graft_gen")
@@ -837,118 +768,87 @@ class LayoutRefreshSpec extends SparkSpec {
         finally in.close()
       } else None
     }
-    def rawRows(): Long = spark.read.parquet(artifactDir().toString).count()
-    def merged(): Map[Long, Long] = ensure().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // one parquet file per "shard" append, like a corpus landing
-    val f0 = Files.createTempDirectory("gen_seed").toString
+    def dataFiles(): Set[String] = fs.listStatus(artifactDir())
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
+    def raw(): DataFrame = spark.read.parquet(artifactDir().toString)
+    def rawRows(): Long = raw().count()
+    def assertContent(what: String): Unit = {
+      val got = ensure()
+      assert(got.exceptAll(expected()).isEmpty &&
+        expected().exceptAll(got).isEmpty, s"$family $what content")
+    }
+    // one parquet file per "shard", like a corpus landing
+    val f0 = Files.createTempDirectory(s"${family}_seed").toString
     shard(1L -> 1L, 2L -> 1L).coalesce(1).write.mode("overwrite").parquet(f0)
     val seed = fs.listStatus(new Path(f0)).map(_.getPath)
       .find(_.getName.endsWith(".parquet")).get
     assert(fs.rename(seed, new Path(s"$base/facts.parquet/part-0.parquet")))
-    // gen 1: fresh build — no marker, unique keys
-    assert(merged() === Map(1L -> 1L, 2L -> 1L))
+    // generation 1: a fresh build — no marker
+    assertContent("build")
     assert(genMarker() === None)
-    val gen1Files = fs.listStatus(artifactDir()).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).toSet
-    // gen 2: append touches an existing key — committed files hardlink
-    // forward, the delta lands as extra bucket files, merge sums at read
     val b0 = Layout.buildCount.get
-    appendFile(s"$base/facts.parquet", shard(1L -> 1L, 3L -> 1L))
-    assert(merged() === Map(1L -> 2L, 2L -> 1L, 3L -> 1L))
-    assert(Layout.buildCount.get === b0, "append must not rebuild")
-    assert(genMarker() === Some("2"))
-    val gen2Files = fs.listStatus(artifactDir()).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).toSet
-    assert(gen1Files.subsetOf(gen2Files),
-      s"gen1 files must link forward: missing ${gen1Files -- gen2Files}")
-    assert(rawRows() === 4L,
-      "multi-generation rows must coexist on disk (2 base + 2 delta)")
-    // the read-side merge must ride the bucketing — no shuffle exchange
-    val mergePlan = ensure().queryExecution.executedPlan.toString
-    assert(!mergePlan.contains("Exchange"),
-      s"generational merge must be exchange-free:\n${mergePlan.take(2000)}")
-    // gen 3: one more epoch
-    appendFile(s"$base/facts.parquet", shard(1L -> 1L))
-    assert(merged() === Map(1L -> 3L, 2L -> 1L, 3L -> 1L))
-    assert(genMarker() === Some("3"))
-    // epoch 4 exceeds maxGenerations=3 → COMPACTION: merged rewrite,
-    // counter resets (marker absent), on-disk rows collapse to unique
-    appendFile(s"$base/facts.parquet", shard(2L -> 1L))
-    assert(merged() === Map(1L -> 3L, 2L -> 2L, 3L -> 1L))
-    assert(genMarker() === None, "compaction must reset the generation")
-    assert(rawRows() === 3L, "compaction must collapse generations")
+    val r0 = Layout.refreshCount.get
+    var gen = 1
+    var sawCompaction = false
+    val epochs = Layout.MaxGenerations + 1
+    for (epoch <- 1 to epochs) {
+      val before = dataFiles()
+      // every shard repeats key 1 and adds one new key
+      appendFile(s"$base/facts.parquet",
+        shard(1L -> 1L, (100L + epoch) -> epoch.toLong))
+      assertContent(s"epoch $epoch")
+      val after = dataFiles()
+      if (gen < Layout.MaxGenerations) {
+        gen += 1
+        assert(genMarker() === Some(gen.toString), s"epoch $epoch marker")
+        assert(before.subsetOf(after),
+          s"epoch $epoch: committed files must link forward: " +
+            s"missing ${before -- after}")
+        assert(after.size > before.size,
+          s"epoch $epoch must append delta files")
+        if (summing && epoch == 1) {
+          assert(rawRows() === 4L,
+            "multi-generation rows must coexist on disk (2 base + 2 delta)")
+          // the read-side merge must ride the bucketing — no shuffle
+          val mergePlan = ensure().queryExecution.executedPlan.toString
+          assert(!mergePlan.contains("Exchange"),
+            s"generational merge must be exchange-free:\n${mergePlan.take(2000)}")
+        }
+      } else {
+        gen = 1
+        sawCompaction = true
+        assert(genMarker() === None, "compaction must reset the generation")
+        assert(after.size <= buckets,
+          s"compaction must collapse to <= $buckets files, got ${after.size}")
+        if (summing)
+          assert(rawRows() === raw().select("k").distinct().count(),
+            "compaction must collapse generations to unique keys")
+      }
+      assert(after.size <= buckets * gen,
+        s"epoch $epoch: ${after.size} files exceed buckets x generation $gen")
+    }
+    assert(sawCompaction, s"$family walk must cross the compaction epoch")
+    assert(Layout.refreshCount.get === r0 + epochs)
+    assert(Layout.buildCount.get === b0,
+      "compaction is a refresh-path rewrite, not a from-scratch build")
     // FullRebuild from the delta kernel → the full build runs (content
     // right, generation reset), still counted as a refresh epoch
-    val r0 = Layout.refreshCount.get
     appendFile(s"$base/facts.parquet", shard(9L -> 999L))
-    assert(merged() ===
-      Map(1L -> 3L, 2L -> 2L, 3L -> 1L, 9L -> 999L))
-    assert(Layout.refreshCount.get === r0 + 1)
+    assertContent("FullRebuild")
+    assert(Layout.refreshCount.get === r0 + epochs + 1)
+    assert(Layout.buildCount.get === b0 + 1)
     assert(genMarker() === None)
-    assert(rawRows() === 4L)
+  }
+
+  // the next two names predate the single Append form: the summing walk
+  // covers what GenRefresh's merge covered, the identity walk what
+  // refreshDelta's small-file compaction covered
+  test("GenRefresh: generations append, compact past maxGenerations, FullRebuild falls back") {
+    appendCompactionWalk("walk_sum", summing = true)
   }
 
   test("refreshDelta small-file compaction: file growth bounded, content row-identical") {
-    // every append epoch adds delta bucket files; once the predecessor
-    // holds >= buckets*deltaFileFactor data files the next refresh must
-    // COMPACT (one row-identical rewrite) instead of linking — a
-    // thousand-shard warehouse must not accumulate a thousand files
-    val base = Files.createTempDirectory("graft_fdcap").toString + "/d"
-    fs.mkdirs(new Path(base)); fs.mkdirs(new Path(s"$base/facts.parquet"))
-    val sq = spark; import sq.implicits._
-    def shard(ks: Long*): DataFrame =
-      ks.toSeq.toDF("k").select(col("k"), (col("k") * 10L).as("w"))
-    def ensure(): DataFrame =
-      Layout.ensureDerived(spark, base, "fdcap_toy", Seq("facts.parquet"),
-        "k", buckets = 4, version = 1,
-        refreshDelta = Some(ctx =>
-          spark.read.parquet(ctx.addedFiles: _*).select(col("k"), col("w"))),
-        deltaFileFactor = 2) {
-        spark.read.parquet(s"$base/facts.parquet").select(col("k"), col("w"))
-      }
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    def dataFiles(): Int = {
-      val dir = fs.listStatus(new Path(wh)).map(_.getPath)
-        .filter(_.getName.startsWith("graft_fdcap_toy_"))
-        .maxBy(p => fs.getFileStatus(p).getModificationTime)
-      fs.listStatus(dir).count(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet"))
-    }
-    val f0 = Files.createTempDirectory("fdcap_seed").toString
-    shard(1L, 2L, 3L, 4L).coalesce(1).write.mode("overwrite").parquet(f0)
-    val seed = fs.listStatus(new Path(f0)).map(_.getPath)
-      .find(_.getName.endsWith(".parquet")).get
-    assert(fs.rename(seed, new Path(s"$base/facts.parquet/part-0.parquet")))
-    assert(ensure().count() === 4L)
-    val cap = 4 * 2 // buckets * deltaFileFactor
-    var sawGrowth = false
-    var sawCompaction = false
-    val b0 = Layout.buildCount.get
-    for (epoch <- 1 to 12) {
-      val before = dataFiles()
-      appendFile(s"$base/facts.parquet", shard(100L * epoch, 100L * epoch + 1))
-      val n = ensure().count()
-      assert(n === 4L + 2L * epoch, s"epoch $epoch row count")
-      val after = dataFiles()
-      if (before < cap) {
-        assert(after > before, s"epoch $epoch under the cap must append files")
-        sawGrowth = true
-      } else {
-        assert(after <= 4, s"epoch $epoch at the cap must compact, got $after")
-        sawCompaction = true
-      }
-      assert(after <= cap + 4, s"file count $after escaped the bound")
-      // content stays row-identical to the raw source at every epoch
-      val expect = spark.read.parquet(s"$base/facts.parquet")
-        .select(col("k"), col("w"))
-      assert(ensure().exceptAll(expect).isEmpty &&
-        expect.exceptAll(ensure()).isEmpty, s"epoch $epoch content")
-    }
-    assert(sawGrowth && sawCompaction,
-      "the walk must exercise both the append and the compaction epoch")
-    assert(Layout.buildCount.get === b0,
-      "compaction is a refresh-path rewrite, not a from-scratch build")
+    appendCompactionWalk("walk_identity", summing = false)
   }
 
   test("copurch_edges generational append: base linked forward, weights sum across generations") {

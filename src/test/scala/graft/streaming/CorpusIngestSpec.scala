@@ -951,4 +951,62 @@ class CorpusIngestSpec extends SparkSpec {
       assert(rows(dL, kind, ep) === rows(dD, kind, ep),
         s"$kind epoch=$ep must be multiset-identical across branches")
   }
+
+  test("edge body: every job an epoch starts carries the caller's job group") {
+    import spark.implicits._
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // a shared pool's threads keep the local properties they inherited
+    // when the pool made them; start some before the caller sets its
+    // group, the state a long-lived driver is in
+    Await.result(Future.sequence((1 to 8).map(_ => Future(Thread.sleep(50)))),
+      scala.concurrent.duration.Duration(60, "s"))
+    val sc = spark.sparkContext
+    val group = s"edge_group_${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val opened = new java.util.concurrent.CountDownLatch(1)
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    // record only between two fence jobs: the bus delivers in order, so
+    // nothing scheduled before the first fence is counted
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>")
+        if (g == s"${group}_open") opened.countDown()
+        else if (g == s"${group}_close") closed.countDown()
+        else if (opened.getCount == 0 && closed.getCount == 1) seen.add(g)
+      }
+    }
+    def fence(tag: String, latch: java.util.concurrent.CountDownLatch): Unit = {
+      sc.setJobGroup(s"${group}_$tag", tag)
+      sc.parallelize(Seq(1), 1).count()
+      assert(latch.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus never drained")
+    }
+    def run(dir: String): Unit = {
+      val e0 = Seq((1L, 101L), (1L, 102L), (2L, 201L), (2L, 202L))
+        .toDF("l_orderkey", "l_partkey")
+      val e1 = Seq((1L, 103L), (3L, 301L), (3L, 302L))
+        .toDF("l_orderkey", "l_partkey")
+      CorpusIngest.edgeBatchBody(e0, s"$dir/index", 0L)
+      CorpusIngest.edgeBatchBody(e1, s"$dir/index", 1L)
+    }
+    sc.addSparkListener(listener)
+    try {
+      fence("open", opened)
+      sc.setJobGroup(group, group)
+      run(Files.createTempDirectory("graft_edgegrp_l").toString)
+      withDriverBudget(0)( // the distributed branch
+        run(Files.createTempDirectory("graft_edgegrp_d").toString))
+      fence("close", closed)
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    import scala.jdk.CollectionConverters._
+    val groups = seen.asScala.toSeq
+    assert(groups.nonEmpty)
+    assert(groups.forall(_ == group),
+      s"${groups.count(_ != group)} of ${groups.size} epoch jobs ran " +
+        s"outside the caller's group: ${groups.distinct.mkString(", ")}")
+  }
 }
